@@ -14,7 +14,7 @@ object Bench {
     // files through the page cache once, so the first measured query
     // isn't charged for session startup.
     try {
-      Seq("lineitem", "documents", "embeddings", "events", "orders", "customer")
+      Seq("lineitem", "documents", "events", "orders", "customer")
         .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
     } catch { case _: Throwable => () }
     // A failing query must NOT silently contribute a normal-looking

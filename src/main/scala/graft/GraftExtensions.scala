@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DotProduct, MinHashSig, SimHash64}
+import graft.functions.{MinHashSig, SimHash64}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -15,11 +15,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *     session.
   *
   * Registered functions (names mirror the Column API in
-  * `graft.functions.HashExprs` / `VectorExprs`):
+  * `graft.functions.HashExprs`):
   * {{{
   *   SELECT minhash_sig(text, 8, 64)  -- array<bigint> signature
   *   SELECT simhash64(text)           -- 64-bit simhash
-  *   SELECT dot_product(vec_a, vec_b) -- double-precision dot
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -51,12 +50,6 @@ object GraftExtensions {
       (args: Seq[Expression]) => args match {
         case Seq(text) => SimHash64(text)
         case _ => throw new IllegalArgumentException("simhash64(text) takes 1 argument")
-      }),
-    ("dot_product",
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => DotProduct(a, b)
-        case _ => throw new IllegalArgumentException("dot_product(a, b) takes 2 arguments")
       })
   )
 

@@ -3,10 +3,8 @@ package graft
 import graft.data.SynthGen
 import graft.dedup.Dedup
 import graft.drift.Drift
-import graft.multimodal.Multimodal
 import graft.refint.RefIntegrity
 import graft.schema.{FieldSpec, Schema, SchemaJson}
-import graft.sim.Similarity
 import graft.stats.ColumnStats
 import graft.text.TextAnalysis
 import graft.unique.Uniqueness
@@ -1178,83 +1176,8 @@ object SparkEntry {
       Dedup.minHashNearDuplicates(docs(s, dir), "doc_id", "text",
         k = 64, bands = 16, shingleN = 8, minEstJaccard = 0.5)),
     "q_simhash_documents" -> ((s, dir) =>
-      Dedup.simHash(docs(s, dir), "doc_id", "text")),
-
-    // --- training-data pipeline: embedding similarity ------------------
-    "q_ann_topk_embeddings" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5)
-        .select(col("q_id"), col("vec_id"), round(col("cos"), 6).as("cos_sim"),
-          col("rank").cast("long").as("rank"))
-    }),
-    "q_ann_lsh_embeddings" -> ((s, dir) => {
-      // LSH-bucketed ANN (deterministic hyperplanes; rows-only check;
-      // recall vs brute force pinned in SimilaritySpec).
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.annTopK(emb, emb.where(col("vec_id") < 10), "vec_id",
-        "embedding", dim = 64, k = 5, nPlanes = 4, nTables = 16)
-    }),
-    "q_ann_ivf_embeddings" -> ((s, dir) => {
-      // IVF (centroid-partitioned) ANN — rows-only check (iterated
-      // centroids are FP-order dependent); exact brute-force equality
-      // at nProbe = nLists and recall floors pinned in IvfSpec.
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.sim.Ivf.ivfTopK(emb, emb.where(col("vec_id") < 10), "vec_id",
-        "embedding", dim = 64, k = 5, nLists = 16, nProbe = 6, iters = 3)
-    }),
-    "q_neardup_embeddings" -> ((s, dir) => {
-      // Exact O(n²) variant — oracle companion ONLY (DuckDB-checkable at
-      // sf0.01); the scale path is q_neardup_lsh_embeddings below.
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.nearDupPairsExact(emb, "vec_id", "embedding", minCosine = 0.35)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
-    }),
-    "q_neardup_lsh_embeddings" -> ((s, dir) => {
-      // LSH-bucketed near-dup pairs — the 100 TB path (bucket-bounded
-      // candidate joins, no cartesian). Rows-only check (probabilistic
-      // recall); pairs ⊆ exact + recall floor pinned in SimilaritySpec.
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.nearDupPairsLsh(emb, "vec_id", "embedding",
-          dim = 64, minCosine = 0.35, nPlanes = 6, nTables = 12)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
-    }),
-
-    // --- training-data pipeline: multimodal plumbing (stub decode) -----
-    "q_multimodal_meta" -> ((s, _) =>
-      Multimodal.metaSummary(mediaTable(s))),
-    "q_multimodal_decode" -> ((s, _) =>
-      // Exercises the mapPartitions decode path itself: the stub header
-      // math is deterministic and replayed byte-for-byte by the oracle
-      // over the same materialized parquet (sha256 column excluded —
-      // DuckDB 1.0 has no BLOB sha; content identity is covered by
-      // q_multimodal_meta's distinct-blob count).
-      Multimodal.decodeImageMeta(mediaTable(s))
-        .select(col("media_id"), col("width"), col("height"),
-          col("channels"), col("size_bytes"))),
-    "q_multimodal_frames" -> ((s, _) =>
-      // Frame-sampling generator (the second media kind's decode
-      // path): video rows explode into (frame_idx, frame_ts_ms) rows;
-      // the stub frame count is plain modular arithmetic so the oracle
-      // replays the WHOLE generator, not just the timestamp math.
-      Multimodal.sampleFrames(mediaTable(s), everyMs = 40))
+      Dedup.simHash(docs(s, dir), "doc_id", "text"))
   )
-
-  /** Deterministic synthetic media table, materialized ONCE to a fixed
-    * parquet path so the DuckDB oracle can read the identical bytes
-    * (the generator is pure expressions — content is identical across
-    * runs, so the write is idempotent). Anchored to the working
-    * directory, not a hardcoded checkout location — the oracle SQL
-    * embeds whatever absolute path THIS run resolved.
-    */
-  private val mediaPath =
-    new java.io.File("target/graft_media_1000").getAbsolutePath
-
-  private def mediaTable(s: SparkSession): DataFrame = {
-    if (!new java.io.File(s"$mediaPath/_SUCCESS").exists())
-      Multimodal.synthMedia(s, 1000L).write.mode("overwrite").parquet(mediaPath)
-    s.read.parquet(mediaPath)
-  }
 
   /** Element-rule replay for the accounts array: element 0 = (source,
     * n_chars), element 1 = (lang, n_chars − 200); same rule predicates
@@ -2165,65 +2088,6 @@ object SparkEntry {
         |cc AS (SELECT id, min(lab) AS component FROM walk GROUP BY id)
         |SELECT id AS doc_id, component,
         | count(*) OVER (PARTITION BY component) AS n_members
-        |FROM cc""".stripMargin,
-
-    // --- embedding similarity ------------------------------------------
-    "q_ann_topk_embeddings" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS q_vec FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.q_id, e.vec_id,
-        |  CASE WHEN sqrt(list_dot_product(q.q_vec, q.q_vec)) * sqrt(list_dot_product(e.v, e.v)) = 0
-        |   THEN 0.0
-        |   ELSE list_dot_product(q.q_vec, e.v) /
-        |    (sqrt(list_dot_product(q.q_vec, q.q_vec)) * sqrt(list_dot_product(e.v, e.v))) END AS c
-        | FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-        |r AS (SELECT q_id, vec_id, c,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY c DESC, vec_id ASC) AS rank
-        | FROM s)
-        |SELECT q_id, vec_id, round(c, 6) AS cos_sim, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 5""".stripMargin,
-    "q_neardup_embeddings" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CASE WHEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)) = 0
-        |   THEN 0.0
-        |   ELSE list_dot_product(a.v, b.v) /
-        |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) END AS c
-        | FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, round(c, 6) AS cos_sim FROM p WHERE c >= 0.35""".stripMargin,
-
-    // --- multimodal ----------------------------------------------------
-    // Reads the SAME materialized parquet as the Spark query (fixed
-    // path, deterministic content). DuckDB 1.0 sha256 is VARCHAR-only,
-    // so distinct-content is counted on the raw BLOB — equal to Spark's
-    // countDistinct(sha2(bytes, 256)) since sha256 is injective on this
-    // data (collision would also fail the n_distinct compare).
-    "q_multimodal_meta" ->
-      s"""SELECT kind, count(*) AS n_media,
-         | CAST(sum(octet_length(bytes)) AS BIGINT) AS total_bytes,
-         | CAST(min(octet_length(bytes)) AS INT) AS min_bytes,
-         | CAST(max(octet_length(bytes)) AS INT) AS max_bytes,
-         | count(DISTINCT bytes) AS n_distinct
-         |FROM read_parquet('$mediaPath/*.parquet')
-         |GROUP BY kind""".stripMargin,
-    // Stub decode replay: width/height from the first two bytes
-    // (b & 0x7f ≡ b % 128 on 0..255; bytes sliced via the hex string —
-    // DuckDB 1.0 substring has no BLOB overload), channels by kind.
-    // Blocks are always ≥ 32 bytes so bytes 1..2 exist.
-    "q_multimodal_decode" ->
-      s"""SELECT media_id,
-         | CAST(16 + (CAST('0x' || substring(hex(bytes), 1, 2) AS INT) % 128) * 8 AS INT) AS width,
-         | CAST(16 + (CAST('0x' || substring(hex(bytes), 3, 2) AS INT) % 128) * 8 AS INT) AS height,
-         | CAST(CASE WHEN kind = 'image' THEN 3 ELSE 1 END AS INT) AS channels,
-         | CAST(octet_length(bytes) AS BIGINT) AS size_bytes
-         |FROM read_parquet('$mediaPath/*.parquet')""".stripMargin,
-    // Full generator replay: per-video frame count (media_id % 8 + 1)
-    // and 40 ms spacing, one row per (video, frame index).
-    "q_multimodal_frames" ->
-      s"""SELECT media_id, CAST(g AS INT) AS frame_idx,
-         | CAST(g * 40 AS INT) AS frame_ts_ms
-         |FROM (SELECT media_id, unnest(range(0, media_id % 8 + 1)) AS g
-         |      FROM read_parquet('$mediaPath/*.parquet')
-         |      WHERE kind = 'video')""".stripMargin
+        |FROM cc""".stripMargin
   )
 }

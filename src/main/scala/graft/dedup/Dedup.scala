@@ -416,8 +416,7 @@ object Dedup {
       s"signature length k=$k must be a positive multiple of bands=$bands " +
         "(banded LSH needs equal-size bands; a remainder would silently " +
         "drop signature tail elements)")
-    // Verify INSIDE the bucket join (the same shuffles-carry-scalars
-    // rule the embedding miner follows): the banded index CARRIES the
+    // Verify INSIDE the bucket join: the banded index CARRIES the
     // signature, so a bucket collision verifies immediately — native
     // MatchCount, codegen'd, not the interpreted zip_with fold — and
     // the est-Jaccard filter prunes BEFORE the distinct. The previous
@@ -505,10 +504,10 @@ object Dedup {
 
   /** Connected components over an undirected candidate-pair graph —
     * the output of ANY pairwise miner above ([[jaccardPairs]],
-    * [[minHashNearDuplicates]], [[simHashNearDuplicates]], or the
-    * embedding miners in graft.sim): every node is assigned the
-    * MINIMUM id reachable from it. Output: `(id, component)`, one row
-    * per node that appears in at least one pair.
+    * [[minHashNearDuplicates]], [[simHashNearDuplicates]]): every node
+    * is assigned the MINIMUM id reachable from it. Output:
+    * `(id, component)`, one row per node that appears in at least one
+    * pair.
     *
     * Near-dup pairs alone under-deduplicate: A~B and B~C without A~C
     * means dropping one side of each pair can still keep two copies of

@@ -22,10 +22,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *   - probe says YES → the key is PRESENT OR a false positive (rate
   *     `fpp`) → only these rows need the real join.
   *
-  * The filter object rides the plan once via `addReferenceObj` (same
-  * pattern as [[HyperplaneBuckets]] — plan size O(1) in filter size,
-  * one deserialized instance per executor, probe stays inside
-  * WholeStageCodegen).
+  * The filter object rides the plan once via `addReferenceObj` (plan
+  * size O(1) in filter size, one deserialized instance per executor,
+  * probe stays inside WholeStageCodegen).
   *
   * Semantics grounding: the reference's membership gate before the
   * expensive per-entry work (set-lookup guard at

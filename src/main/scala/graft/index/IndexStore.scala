@@ -2,34 +2,30 @@ package graft.index
 
 import graft.dedup.Dedup
 import graft.refint.RefIntegrity
-import graft.sim.{Ivf, Similarity}
 import graft.util.CacheScope
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persistent build-once / query-many similarity and dedup indices.
+/** Persistent build-once / query-many dedup, key-membership, drift and
+  * expectation indices.
   *
-  * Every ANN / near-dup miner in [[graft.sim]] and [[graft.dedup]]
-  * recomputes its signatures / buckets / centroids per call — fine for
-  * one-shot jobs, wrong for the real corpus workflow where an index is
-  * built once and queried many times (the reference's own pattern is
-  * precompute-once-per-tick into a keyed view,
-  * app/.../HomeViewModel.kt:43-47). This store writes each index as a
-  * parquet table plus a one-row JSON parameter sidecar, and the load
-  * path validates the stored parameters before handing the frame to
-  * the `...FromIndex` / `...FromSigs` variants of the miners — so a
-  * query against an index built with different hash parameters fails
-  * loudly instead of silently returning garbage.
+  * Every near-dup miner in [[graft.dedup]] recomputes its signatures /
+  * buckets per call — fine for one-shot jobs, wrong for the real corpus
+  * workflow where an index is built once and queried many times (the
+  * reference's own pattern is precompute-once-per-tick into a keyed
+  * view, app/.../HomeViewModel.kt:43-47). This store writes each index
+  * as a parquet table plus a one-row JSON parameter sidecar, and the
+  * load path validates the stored parameters before handing the frame
+  * to the `...FromSigs` variants of the miners — so a query against an
+  * index built with different hash parameters fails loudly instead of
+  * silently returning garbage.
   *
   * Layout per index directory:
-  *   - `data/…` — the index table (parquet; IVF assignments are
-  *     `partitionBy(list)` so probing nProbe of k lists dynamic-
-  *     partition-prunes the scan to ~nProbe/k of the index);
-  *   - `ivf_centroids/…` — (IVF only) the k×dim centroid table;
+  *   - `data/…` — the index table (parquet);
   *   - `meta/…` — one JSON row of build parameters (kind-tagged).
   *
-  * At 100 TB this is the difference between one corpus-wide
-  * shingle/centroid pass per QUERY BATCH and one per INDEX REBUILD.
+  * At 100 TB this is the difference between one corpus-wide shingle
+  * pass per QUERY BATCH and one per INDEX REBUILD.
   *
   * CONCURRENCY: every `append…` path is SINGLE-WRITER. The row-append
   * indices read the stored ids and then append — idempotent for
@@ -46,8 +42,6 @@ import org.apache.spark.sql.functions._
 object IndexStore {
 
   final case class MinHashMeta(kind: String, k: Int, shingleN: Int)
-  final case class LshMeta(kind: String, dim: Int, nPlanes: Int, nTables: Int, seed: Long)
-  final case class IvfMeta(kind: String, dim: Int, nLists: Int, iters: Int, seed: Long)
   final case class BloomMeta(kind: String, keys: String, expectedItems: Long, fpp: Double)
   final case class DriftMeta(kind: String, valueCol: String, groupCols: String, edges: Seq[Double])
   final case class ExpectationsMeta(kind: String, groupCols: String)
@@ -263,165 +257,13 @@ object IndexStore {
     * runs BEFORE the write (on a cached frame) so the data is read
     * once, not twice.
     */
-  private def appendCounted(rows: DataFrame, dataPath: String,
-      partitionCols: Seq[String] = Nil): Long = {
+  private def appendCounted(rows: DataFrame, dataPath: String): Long = {
     rows.persist()
     try {
       val n = rows.count()
-      if (n > 0) {
-        val w = rows.write.mode(SaveMode.Append)
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(dataPath)
-      }
+      if (n > 0) rows.write.mode(SaveMode.Append).parquet(dataPath)
       n
     } finally rows.unpersist()
-  }
-
-  // -------------------------------------------------------------------
-  // Random-hyperplane LSH bucket index (embeddings)
-  // -------------------------------------------------------------------
-
-  /** Compute and persist the corpus bucket index
-    * `(id, vec, table, bucket, c_norm)` once.
-    */
-  def buildLsh(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      dim: Int,
-      nPlanes: Int = 12,
-      nTables: Int = 4,
-      seed: Long = 42L): Unit = {
-    Similarity.lshIndex(corpus, idCol, vecCol, dim, nPlanes, nTables, seed)
-      .withColumn("c_norm", Similarity.norm(col("vec")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
-    writeMeta(corpus.sparkSession, path,
-      LshMeta("lsh", dim, nPlanes, nTables, seed))(Encoders.product[LshMeta])
-  }
-
-  def loadLsh(spark: SparkSession, path: String): (DataFrame, LshMeta) = {
-    val meta = readMeta[LshMeta](spark, path, "lsh")(Encoders.product[LshMeta])
-    (spark.read.parquet(s"$path/data"), meta)
-  }
-
-  /** ANN top-k against the STORED bucket index: only the query batch is
-    * hashed at query time (with the index's own stored seed/planes —
-    * mismatched parameters are impossible by construction).
-    */
-  def annTopK(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int): DataFrame = {
-    val (cIdx, meta) = loadLsh(spark, path)
-    Similarity.annTopKFromIndex(cIdx, queries, idCol, vecCol,
-      meta.dim, k, meta.nPlanes, meta.nTables, meta.seed)
-  }
-
-  /** Incrementally extend a stored LSH bucket index with not-yet-
-    * indexed vectors, hashed with the INDEX's stored planes/seed (same
-    * idempotent anti-join contract as [[appendMinHash]]). Returns the
-    * number of corpus rows appended (each contributes nTables bucket
-    * rows).
-    */
-  def appendLsh(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String): Long = {
-    val spark = df.sparkSession
-    val (stored, meta) = loadLsh(spark, path)
-    val fresh = df.join(
-      stored.select(col("id").as(idCol)).distinct(), Seq(idCol), "left_anti")
-    val rows = Similarity
-      .lshIndex(fresh, idCol, vecCol, meta.dim, meta.nPlanes, meta.nTables, meta.seed)
-      .withColumn("c_norm", Similarity.norm(col("vec")))
-    appendCounted(rows, s"$path/data") / math.max(meta.nTables, 1)
-  }
-
-  // -------------------------------------------------------------------
-  // IVF centroid + assignment index (embeddings)
-  // -------------------------------------------------------------------
-
-  /** Train centroids once and persist both the centroid table and the
-    * per-vector list assignments (`partitionBy(list)` — probe-time
-    * dynamic partition pruning).
-    */
-  def buildIvf(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      dim: Int,
-      nLists: Int = 16,
-      iters: Int = 5,
-      seed: Long = 42L,
-      scope: CacheScope = CacheScope.shared): Unit = {
-    val spark = corpus.sparkSession
-    val centroids = Ivf.trainCentroids(corpus, idCol, vecCol, dim, nLists, iters, seed, scope)
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/ivf_centroids")
-    Ivf.ivfIndex(corpus, idCol, vecCol, dim, centroids)
-      .withColumn("c_norm", Similarity.norm(col("vec")))
-      .write.mode(SaveMode.Overwrite).partitionBy("list").parquet(s"$path/data")
-    writeMeta(spark, path, IvfMeta("ivf", dim, nLists, iters, seed))(
-      Encoders.product[IvfMeta])
-  }
-
-  /** Stored (centroids, assignments, meta). The centroid collect is
-    * O(nLists × dim) — driver-tiny by design.
-    */
-  def loadIvf(spark: SparkSession, path: String): (Array[Array[Double]], DataFrame, IvfMeta) = {
-    val meta = readMeta[IvfMeta](spark, path, "ivf")(Encoders.product[IvfMeta])
-    val centroids = spark.read.parquet(s"$path/ivf_centroids")
-      .orderBy(col("list"))
-      .collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    (centroids, spark.read.parquet(s"$path/data"), meta)
-  }
-
-  /** Incrementally extend a stored IVF index: assign only the
-    * not-yet-indexed vectors to their nearest EXISTING centroid and
-    * append into the list-partitioned assignment table. Centroids are
-    * deliberately left untouched — that is how production IVF indices
-    * ingest (appends between rebuilds; retraining centroids would
-    * silently invalidate every stored assignment). Returns rows
-    * appended.
-    */
-  def appendIvf(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String): Long = {
-    val spark = df.sparkSession
-    val (centroids, assignments, meta) = loadIvf(spark, path)
-    val fresh = df.join(
-      assignments.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    val rows = Ivf.ivfIndex(fresh, idCol, vecCol, meta.dim, centroids)
-      .withColumn("c_norm", Similarity.norm(col("vec")))
-    appendCounted(rows, s"$path/data", partitionCols = Seq("list"))
-  }
-
-  /** ANN top-k against the STORED IVF index — no re-training, no
-    * re-assignment; queries probe their `nProbe` nearest stored lists.
-    */
-  def ivfTopK(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nProbe: Int): DataFrame = {
-    val (centroids, assignments, meta) = loadIvf(spark, path)
-    Ivf.ivfTopKFromIndex(centroids, assignments, queries, idCol, vecCol,
-      meta.dim, k, nProbe)
   }
 
   // -------------------------------------------------------------------

@@ -9,6 +9,7 @@ import graft.text.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end corpus curation: the composition a training-data user
   * actually runs, built ONLY from the engine's own operators:
@@ -220,24 +221,22 @@ object CorpusPipeline {
     val t0 = System.currentTimeMillis()
     val pendingParts = Checkpoint.pending(docs, partitionCol, outDir)
     val done = Checkpoint.processed(spark, outDir).count()
-    // Two legitimately-empty read states fall back to a typed empty
-    // frame (schema from the funnel's own analysis, no job):
-    //   - only _SUCCESS in curated/ (a run whose funnel dropped every
-    //     row — no parquet footer to infer from): UNABLE_TO_INFER_SCHEMA;
-    //   - curated/ never written AND the manifest recorded zero done
-    //     partitions (empty input over a fresh outDir): PATH_NOT_FOUND.
-    // A MISSING directory while the manifest says work WAS done is data
-    // loss and stays loud, not read back as legitimately empty.
-    val curatedSchema = curatePartitioned(docs.limit(0), cfg, partitionCol).schema
-    def emptyCurated(): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curatedSchema)
+    // The curated table is read back with the funnel's own analysed
+    // schema (no job), in its column order — so the partition column
+    // keeps its input position and type instead of landing last with a
+    // partition-inferred type, and a curated/ holding only _SUCCESS (a
+    // run whose funnel dropped every row) reads as empty. curated/
+    // never written AND zero done partitions in the manifest (empty
+    // input over a fresh outDir) is a typed empty frame of the same
+    // schema. A MISSING directory while the manifest says work WAS done
+    // is data loss and stays loud, not read back as legitimately empty.
+    val curatedSchema = StructType(
+      curatePartitioned(docs.limit(0), cfg, partitionCol).schema
+        .map(_.copy(nullable = true)))
     def curatedTable(): DataFrame =
-      try spark.read.parquet(s"$outDir/curated")
+      try spark.read.schema(curatedSchema).parquet(s"$outDir/curated")
+        .select(curatedSchema.fieldNames.map(col): _*)
       catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage != null &&
-              e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-          emptyCurated()
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage != null &&
               e.getMessage.contains("PATH_NOT_FOUND") &&
@@ -245,7 +244,8 @@ object CorpusPipeline {
               // stale once this run commits partitions, and a stale 0
               // would mask post-commit loss of the curated directory
               Checkpoint.processed(spark, outDir).isEmpty =>
-          emptyCurated()
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curatedSchema)
       }
     if (pendingParts.isEmpty)
       return ResumeReport(runId, Nil, done, curatedTable())

@@ -322,12 +322,17 @@ object SchemaJson {
       fail(field, s"$key values must be scalars, got ${kind(other)}")
   }
 
+  /** Literal values keep their JSON number shape — a Double renders as
+    * `100.0`, never `100`, so it reads back as a Double, not a Long
+    * (`default` can create a column, whose type must survive a
+    * round-trip). Only the min/max bounds, always Doubles, use [[jnum]].
+    */
   private def jlit(field: String, key: String, v: Any): JValue = v match {
     case s: String => JString(s)
     case b: Boolean => JBool(b)
     case i: Int => JInt(BigInt(i))
     case l: Long => JInt(BigInt(l))
-    case d: Double => jnum(d)
+    case d: Double => JDouble(d)
     case other => fail(field,
       s"$key value ${other} (${other.getClass.getSimpleName}) is not a " +
         "JSON-serializable scalar (string, boolean, int, long, double)")

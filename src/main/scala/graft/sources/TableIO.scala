@@ -43,7 +43,7 @@ object TableIO {
 
   /** S3 — opaque binary ingestion via the binaryFile source:
     * `(path, length, content: binary)` — the ingestion entry point for
-    * image/audio blobs (bytes stay opaque; see graft.multimodal).
+    * image/audio blobs (bytes stay opaque).
     */
   def readBinary(spark: SparkSession, pathGlob: String): DataFrame =
     spark.read

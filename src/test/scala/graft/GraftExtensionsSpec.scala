@@ -19,10 +19,6 @@ class GraftExtensionsSpec extends SparkSpec {
       graft.functions.HashExprs.minhashSig($"text", 8, 16).as("mh")).head()
     assert(viaSql.getLong(0) === viaApi.getLong(0))
     assert(viaSql.getSeq[Long](1) === viaApi.getSeq[Long](1))
-
-    val dot = spark.sql(
-      "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D))").head().getDouble(0)
-    assert(dot === 11.0)
   }
 
   test("injectFunction wiring registers into a fresh FunctionRegistry") {
@@ -37,7 +33,7 @@ class GraftExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext)
     val registry = new SimpleFunctionRegistry
     org.apache.spark.sql.GraftExprBridge.applyExtensionFunctions(ext, registry)
-    Seq("minhash_sig", "simhash64", "dot_product").foreach { f =>
+    Seq("minhash_sig", "simhash64").foreach { f =>
       assert(registry.functionExists(FunctionIdentifier(f)), f)
     }
     val built = registry.lookupFunction(
@@ -59,9 +55,5 @@ class GraftExtensionsSpec extends SparkSpec {
       spark.sql("SELECT simhash64(42)").queryExecution.analyzed
     }
     assert(e1.getMessage.contains("string"))
-    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT dot_product(array(1, 2), array(3, 4))").queryExecution.analyzed
-    }
-    assert(e2.getMessage.toLowerCase.contains("array"))
   }
 }

@@ -1,23 +1,20 @@
 package graft
 
 import graft.dedup.Dedup
-import graft.functions.{CentroidTopLists, MinHashSig}
+import graft.functions.MinHashSig
 import graft.index.IndexStore
-import graft.sim.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Build-once/query-many index persistence: stored indices reproduce
   * the direct-compute results exactly, and the query-time plan reads
-  * the index parquet instead of recomputing signatures / buckets /
-  * centroids.
+  * the index parquet instead of recomputing signatures.
   */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-  private lazy val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
 
   private def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-idx-$name")
@@ -53,51 +50,6 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
-  test("lsh: stored bucket index reproduces direct annTopK; only the query side hashes") {
-    val path = tmpDir("lsh")
-    IndexStore.buildLsh(emb, "vec_id", "embedding", path,
-      dim = 64, nPlanes = 4, nTables = 8)
-
-    val queries = emb.where($"vec_id" < 10)
-    val direct = Similarity.annTopK(emb, queries, "vec_id", "embedding",
-        dim = 64, k = 5, nPlanes = 4, nTables = 8)
-      .select($"q_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().toSet
-
-    val fromIndex = IndexStore.annTopK(spark, path, queries, "vec_id", "embedding", k = 5)
-    assert(fromIndex.select($"q_id", $"vec_id", $"rank")
-      .as[(Long, Long, Int)].collect().toSet === direct)
-    // direct plan buckets BOTH sides; the index plan only the query side
-    assert(exprCount(direct2frame(queries), _.isInstanceOf[graft.functions.HyperplaneBuckets]) === 2)
-    assert(exprCount(fromIndex, _.isInstanceOf[graft.functions.HyperplaneBuckets]) === 1)
-  }
-
-  private def direct2frame(queries: DataFrame): DataFrame =
-    Similarity.annTopK(emb, queries, "vec_id", "embedding",
-      dim = 64, k = 5, nPlanes = 4, nTables = 8)
-
-  test("ivf: stored centroids+assignments, probe-all equals brute force exactly") {
-    val path = tmpDir("ivf")
-    IndexStore.buildIvf(emb, "vec_id", "embedding", path,
-      dim = 64, nLists = 8, iters = 2)
-    graft.util.CacheScope.shared.release()
-
-    val queries = emb.where($"vec_id" < 10)
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select($"q_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().toSet
-    val fromIndex = IndexStore.ivfTopK(spark, path, queries, "vec_id", "embedding",
-      k = 5, nProbe = 8)
-    assert(fromIndex.select($"q_id", $"vec_id", $"rank")
-      .as[(Long, Long, Int)].collect().toSet === exact)
-    // centroid ranking runs once (query probing); assignments come from parquet
-    assert(exprCount(fromIndex, _.isInstanceOf[CentroidTopLists]) === 1)
-
-    // stored assignment table is hive-partitioned by list (pruning seam)
-    val (_, assignments, meta) = IndexStore.loadIvf(spark, path)
-    assert(meta.nLists === 8 && meta.dim === 64)
-    assert(assignments.inputFiles.forall(_.contains("list=")),
-      "assignments are not partitioned by list")
-  }
-
   test("minhash append: build-half + append-half == build-full; re-append is a no-op") {
     val half = tmpDir("mh-append")
     val full = tmpDir("mh-full")
@@ -117,42 +69,33 @@ class IndexStoreSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("ivf append: assigns new vectors to EXISTING centroids; probe-all stays exact") {
-    val path = tmpDir("ivf-append")
-    IndexStore.buildIvf(emb.where($"vec_id" % 2 === 0), "vec_id", "embedding",
-      path, dim = 64, nLists = 8, iters = 2)
-    graft.util.CacheScope.shared.release()
-    val centroidsBefore = IndexStore.loadIvf(spark, path)._1.map(_.toSeq)
-
-    val appended = IndexStore.appendIvf(emb, "vec_id", "embedding", path)
-    assert(appended === emb.where($"vec_id" % 2 === 1).count())
-    assert(IndexStore.appendIvf(emb, "vec_id", "embedding", path) === 0L)
-    // centroids untouched by append
-    assert(IndexStore.loadIvf(spark, path)._1.map(_.toSeq).toSeq === centroidsBefore.toSeq)
-
-    // the appended index over the full corpus is still exact at probe-all
-    val queries = emb.where($"vec_id" < 10)
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select($"q_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().toSet
-    val got = IndexStore.ivfTopK(spark, path, queries, "vec_id", "embedding",
-        k = 5, nProbe = 8)
-      .select($"q_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().toSet
-    assert(got === exact)
-  }
-
   test("lsh append: appended index reproduces the full-built index") {
+    // The MinHash index is the banded-LSH index: an appended index must
+    // yield the same (band, bucket) keys and the same mined pairs as one
+    // built over the whole corpus in one go.
     val half = tmpDir("lsh-append")
     val full = tmpDir("lsh-full")
-    IndexStore.buildLsh(emb.where($"vec_id" % 2 === 0), "vec_id", "embedding",
-      half, dim = 64, nPlanes = 4, nTables = 8)
-    IndexStore.buildLsh(emb, "vec_id", "embedding", full,
-      dim = 64, nPlanes = 4, nTables = 8)
-    assert(IndexStore.appendLsh(emb, "vec_id", "embedding", half) ===
-      emb.where($"vec_id" % 2 === 1).count())
-    assert(IndexStore.appendLsh(emb, "vec_id", "embedding", half) === 0L)
-    val key = (p: String) => IndexStore.loadLsh(spark, p)._1
-      .select($"id", $"table", $"bucket").as[(Long, Int, Long)].collect().toSet
-    assert(key(half) === key(full))
+    IndexStore.buildMinHash(docs.where($"doc_id" % 2 === 0), "doc_id", "text",
+      half, k = 64, shingleN = 8)
+    IndexStore.buildMinHash(docs, "doc_id", "text", full, k = 64, shingleN = 8)
+    assert(IndexStore.appendMinHash(docs, "doc_id", "text", half) ===
+      docs.where($"doc_id" % 2 === 1 && $"text".isNotNull).count())
+    assert(IndexStore.appendMinHash(docs, "doc_id", "text", half) === 0L)
+
+    val buckets = (p: String) =>
+      Dedup.bandedBuckets(IndexStore.loadMinHash(spark, p)._1, bands = 16)
+        .select($"id", $"band", $"bucket").as[(Long, Int, Long)].collect().toSet
+    assert(buckets(half) === buckets(full))
+
+    val pairs = (p: String) => {
+      val got = IndexStore.minHashNearDuplicates(spark, p, bands = 16, minEstJaccard = 0.5)
+        .as[(Long, Long, Double)].collect().toSet
+      graft.util.CacheScope.shared.release()
+      got
+    }
+    val fromFull = pairs(full)
+    assert(fromFull.nonEmpty)
+    assert(pairs(half) === fromFull)
   }
 
   test("bloom: stored filter probes like a fresh build; append folds a new dim slice in") {
@@ -183,7 +126,7 @@ class IndexStoreSpec extends SparkSpec {
     val path = tmpDir("kind")
     IndexStore.buildMinHash(docs, "doc_id", "text", path)
     val e = intercept[IllegalArgumentException] {
-      IndexStore.loadLsh(spark, path)
+      IndexStore.loadDriftBaseline(spark, path)
     }
     assert(e.getMessage.contains("'minhash'"))
   }

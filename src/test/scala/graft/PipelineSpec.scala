@@ -93,4 +93,22 @@ class PipelineSpec extends SparkSpec {
     val r = CorpusPipeline.curateResumable(docs.limit(0), cfg, "lang", s"$dir/out")
     assert(r.pending.isEmpty && r.skipped === 0L && r.curated.isEmpty)
   }
+
+  test("curateResumable: the empty report and the read-back report share one schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate-schema").toString
+    val empty = CorpusPipeline.curateResumable(docs.limit(0), cfg, "lang", s"$dir/empty")
+    val full = CorpusPipeline.curateResumable(docs, cfg, "lang", s"$dir/full")
+    assert(full.curated.count() > 0)
+    // same columns, same order, same types: "lang" is not moved last
+    // or re-typed by partition discovery
+    assert(empty.curated.schema === full.curated.schema)
+    assert(full.curated.columns.toSeq ===
+      CorpusPipeline.curate(docs.limit(0), cfg).columns.toSeq)
+    // a funnel that drops every row leaves curated/ with no data file;
+    // it still reads back empty, with the same schema
+    val none = CorpusPipeline.curateResumable(docs, cfg.copy(qualityMin = 2.0),
+      "lang", s"$dir/none")
+    assert(none.pending.nonEmpty && none.curated.isEmpty)
+    assert(none.curated.schema === full.curated.schema)
+  }
 }

@@ -1,14 +1,12 @@
 package graft
 
 import graft.refint.RefIntegrity
-import graft.sim.Similarity
 import graft.validate.Validator
 import graft.verdict.Verdict
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ArrayType
 
 /** Plan-SHAPE regression tests: the scale-critical physical-plan
   * properties the dossier (PLANS.md) documents, asserted so they cannot
@@ -18,7 +16,6 @@ import org.apache.spark.sql.types.ArrayType
 class PlanSpec extends SparkSpec {
 
   private lazy val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-  private lazy val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
 
   /** Final physical plan with exchanges inserted (EnsureRequirements
     * runs in executedPlan, not sparkPlan); AQE is disabled for the
@@ -178,28 +175,5 @@ class PlanSpec extends SparkSpec {
   test("minhash/simhash signature plans are shuffle-free (native single projection)") {
     assert(shuffles(graft.dedup.Dedup.minHashSignatures(docs, "doc_id", "text")).isEmpty)
     assert(shuffles(graft.dedup.Dedup.simHash(docs, "doc_id", "text")).isEmpty)
-  }
-
-  test("LSH pair-mining shuffles carry scalar columns only, never embedding vectors") {
-    val pairs = Similarity.nearDupPairsLsh(emb, "vec_id", "embedding",
-      dim = 64, minCosine = 0.4, nPlanes = 6, nTables = 4)
-    val topk = Similarity.annTopK(emb, emb.where(col("vec_id") < 5), "vec_id",
-      "embedding", dim = 64, k = 5, nPlanes = 4, nTables = 4)
-    Seq(pairs, topk).foreach { df =>
-      val ex = shuffles(df)
-      assert(ex.nonEmpty)
-      ex.foreach { s =>
-        val arrayCols = s.child.output.filter(_.dataType.isInstanceOf[ArrayType])
-        assert(arrayCols.isEmpty,
-          s"shuffle carries array columns: ${arrayCols.map(_.name).mkString(",")}")
-      }
-    }
-  }
-
-  test("brute-force top-k broadcasts the query side and partially limits per partition") {
-    val p = physical(Similarity.bruteForceTopK(
-      emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 5)).toString
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))
-    assert(p.contains("WindowGroupLimit"))
   }
 }

@@ -26,12 +26,13 @@ class SchemaJsonSpec extends SparkSpec {
     "score" -> FieldSpec(min = Some(0d), max = Some(100.5),
       oneOf = Seq(FieldSpec(max = Some(10d)), FieldSpec(min = Some(90d))),
       excludes = Seq("legacy")),
-    "tags" -> FieldSpec(contains = Some(Seq("x", 3L)),
+    "tags" -> FieldSpec(contains = Some(Seq("x", 3L, 4.0)),
       items = Seq(FieldSpec(regex = Some("t.*")), FieldSpec())),
     "attrs" -> FieldSpec(
       keysRules = Some(FieldSpec(maxLength = Some(5))),
       valuesRules = Some(FieldSpec(min = Some(0d)))),
     "region" -> FieldSpec(default = Some("eu"), rename = Some("zone")),
+    "ratio" -> FieldSpec(default = Some(100.0)),
     "bucket" -> FieldSpec(defaultSetter =
       Some(expr("CASE WHEN score > 50 THEN 'hi' ELSE 'lo' END"))))
 
@@ -44,6 +45,12 @@ class SchemaJsonSpec extends SparkSpec {
     assert(j1 === j2)
     // order preserved
     assert(parsed.fieldNames === rich.fieldNames)
+    // integral Double literals stay Double (a Long default would change
+    // the type of the column it creates)
+    val spec = parsed.fields.toMap
+    assert(spec("ratio").default.get.isInstanceOf[Double])
+    assert(spec("tags").contains.get.map(_.getClass) ===
+      Seq(classOf[String], classOf[java.lang.Long], classOf[java.lang.Double]))
   }
 
   test("parsed schema validates identically to the code-built schema") {

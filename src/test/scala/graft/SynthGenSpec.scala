@@ -45,6 +45,16 @@ class SynthGenSpec extends SparkSpec {
         "n_errors", "worst_severity", "pass"))
   }
 
+  test("contract: every oracle SQL names a query; only the rows-only set lacks one") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(oracles -- queries === Set.empty[String], "oracle SQL without a query")
+    // Queries checked by rows only: their operators (HLL++ sketches,
+    // xxhash64-based signatures) have no DuckDB equivalent.
+    assert(queries -- oracles === Set("q_hll_documents", "q_minhash_documents",
+      "q_neardup_minhash_documents", "q_simhash_documents"))
+  }
+
   test("full pipeline finds every injected violation kind") {
     val df = SynthGen.codeFiles(spark, cfg)
     val rules = Validator
