@@ -186,8 +186,9 @@ object CorpusPipeline {
 
   /** RESUMABLE curation: [[curatePartitioned]] composed with the
     * [[graft.resume.Checkpoint]] commit protocol — the funnel resumes
-    * per input partition exactly like validation does
-    * ([[graft.resume.ValidationRun]]):
+    * per input partition under the same manifest as validation
+    * ([[graft.resume.ValidationRun]], which instead slices by the
+    * manifest's complement and so needs no pending scan):
     *
     *   1. pending = input partitions with no manifest row (anti-join
     *      against the O(partitions) manifest — prior OUTPUT is never

@@ -22,11 +22,17 @@ import org.apache.spark.sql.functions._
   *                                             committed partition)
   * }}}
   *
-  * Scale notes: the manifest is O(partitions) rows; resume is an
-  * anti-join of the input's distinct partition values against it —
-  * never a scan of prior results. A re-run of a crashed partition
-  * overwrites only that partition's violation files (dynamic partition
-  * overwrite), keeping publishes idempotent.
+  * Scale notes: the manifest is O(partitions) rows and is never joined
+  * against the data. [[ValidationRun]] collects its committed keys on
+  * the driver ([[committed]]) and slices the input with their
+  * complement ([[uncommittedFilter]]): on input partitioned by the
+  * partition column the committed directories are pruned at the scan,
+  * otherwise the one scan filters their rows out. [[pending]] (an
+  * anti-join of the input's distinct partition values, one extra scan)
+  * stays for callers that need the pending list before processing. A
+  * re-run of a crashed partition overwrites only that partition's
+  * violation files (dynamic partition overwrite), keeping publishes
+  * idempotent.
   */
 object Checkpoint {
 
@@ -48,6 +54,12 @@ object Checkpoint {
       org.apache.spark.sql.types.StructType.fromDDL(manifestSchema))
   }
 
+  /** The `partition` value of every manifest row, collected on the
+    * driver (one entry per committed row; empty when no manifest yet).
+    */
+  def committed(spark: SparkSession, outDir: String): Seq[String] =
+    processed(spark, outDir).select(col("partition")).collect().map(_.getString(0)).toSeq
+
   /** Partition values present in the input but not yet committed —
     * left_anti against the (tiny, broadcast) manifest.
     */
@@ -56,11 +68,7 @@ object Checkpoint {
     val done = processed(spark, outDir)
       .select(col("partition"))
       .distinct()
-    // Null partitions are mapped to the sentinel BEFORE the anti-join —
-    // a raw null key would never match its manifest row and re-pend
-    // forever.
-    df.select(coalesce(col(partitionCol).cast("string"),
-        lit(NullPartitionToken)).as("partition"))
+    df.select(partitionKey(partitionCol).as("partition"))
       .distinct()
       .join(broadcast(done), Seq("partition"), "left_anti")
       .collect()
@@ -72,6 +80,37 @@ object Checkpoint {
     * can track it like any other partition.
     */
   val NullPartitionToken = "__NULL__"
+
+  /** The manifest key of a row: its partition value as a string, with
+    * NULL mapped to the sentinel — a raw null key would never match its
+    * manifest row and re-pend forever.
+    */
+  def partitionKey(partitionCol: String): org.apache.spark.sql.Column =
+    coalesce(col(partitionCol).cast("string"), lit(NullPartitionToken))
+
+  /** The inverse of [[partitionKey]], on the driver: the partition value
+    * of `key` as the input column's `dataType` (the sentinel → null).
+    */
+  def partitionValue(key: String, dataType: org.apache.spark.sql.types.DataType): Any =
+    if (key == NullPartitionToken) null
+    else {
+      import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
+      CatalystTypeConverters.convertToScala(
+        Cast(Literal(key), dataType, Some(tz)).eval(), dataType)
+    }
+
+  /** Input filter selecting exactly the rows whose [[partitionKey]] is
+    * NOT among `committedParts` — the complement of the manifest, so no
+    * pending list (and no scan to find it) is needed first. Over only
+    * the partition column, so on input partitioned by it the committed
+    * directories are pruned at the scan.
+    */
+  def uncommittedFilter(
+      partitionCol: String,
+      committedParts: Seq[String]): org.apache.spark.sql.Column =
+    !partitionKey(partitionCol).isin(committedParts.distinct: _*)
 
   /** Input filter selecting exactly the rows of `pendingParts` (as
     * produced by [[pending]], sentinel included) — ONE predicate, so a

@@ -1,20 +1,28 @@
 package graft.resume
 
+import graft.compile.RuleCompiler
 import graft.schema.Schema
 import graft.validate.Validator
 import graft.verdict.Verdict
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** End-to-end resumable validation run: violations + per-partition
   * verdicts + lineage metrics, committed per partition via
   * [[Checkpoint]].
   *
-  * One Spark job processes ALL pending partitions together (filter
-  * `partitionCol isin pending` → predicate/partition pruning at the
-  * scan) — no driver-side per-partition loop, so wall-clock does not
-  * degrade with partition count. The manifest append AFTER the data
-  * writes is the single commit point for every partition in the batch
+  * ONE Spark job reads the input: the violations write over every
+  * uncommitted partition together (the complement of the manifest's
+  * committed keys — partition pruning at the scan when the input is
+  * partitioned by `partitionCol`; no driver-side per-partition loop,
+  * so wall-clock does not degrade with partition count). The per-
+  * partition verdict counts are observed in that same pass
+  * ([[Verdict.observeCounts]]), so the pending partitions are the
+  * observed keys and the verdict and manifest rows are built on the
+  * driver from them. The manifest append AFTER the data writes is the
+  * single commit point for every partition in the batch
   * (validate-all-then-commit, cf. reference import flow
   * app/.../HomeViewModel.kt:168-175).
   */
@@ -38,46 +46,47 @@ object ValidationRun {
     val runId = java.util.UUID.randomUUID().toString
     val t0 = System.currentTimeMillis()
 
-    val pendingParts = Checkpoint.pending(df, partitionCol, outDir)
-    val done = Checkpoint.processed(spark, outDir).count()
-    if (pendingParts.isEmpty)
-      return Report(runId, Nil, done, Checkpoint.processed(spark, outDir))
-
-    val slice = df.where(Checkpoint.partitionFilter(partitionCol, pendingParts))
+    val committed = Checkpoint.committed(spark, outDir)
+    val slice =
+      if (committed.isEmpty) df
+      else df.where(Checkpoint.uncommittedFilter(partitionCol, committed))
 
     // Data writes first (per-partition dirs, dynamic overwrite keeps a
-    // crashed-run retry idempotent) …
+    // crashed-run retry idempotent), with the verdict counts observed
+    // in the same pass …
+    val observation = Observation()
+    val keys = keyCols :+ partitionCol
     Validator
-      .violations(slice, schema, keyCols :+ partitionCol)
+      .explodeViolations(
+        Verdict.observeCounts(slice, schema, Checkpoint.partitionKey(partitionCol),
+          keys.map(col) :+ RuleCompiler.violationsArray(schema).as(Validator.ViolationsCol),
+          observation),
+        keys)
       .withColumn("run_id", lit(runId))
       .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(s"$outDir/violations")
+    val counts = Verdict.observedCounts(observation)
+    if (counts.isEmpty)
+      return Report(runId, Nil, committed.size, Checkpoint.processed(spark, outDir))
 
-    // Single source of verdict semantics (incl. severity channels).
-    val verdicts = Verdict.compute(slice, schema, partitionCol)
-      .withColumn("run_id", lit(runId))
-    verdicts.write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
+    // One file each: the rows are few and local.
+    val field = df.schema(partitionCol)
+    val verdicts = Verdict.fromCounts(spark, field, runId,
+      counts.map { case (k, c) => Checkpoint.partitionValue(k, field.dataType) -> c })
+    verdicts.coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
 
     // … then the manifest append is the commit point.
     val wallMs = System.currentTimeMillis() - t0
-    val entries = spark.read
-      .parquet(s"$outDir/verdicts")
-      .where(col("run_id") === runId)
-      .select(
-        coalesce(col(partitionCol).cast("string"),
-          lit(Checkpoint.NullPartitionToken)).as("partition"),
-        col("run_id"),
-        col("n_rows"),
-        col("n_bad_rows"),
-        col("n_violations"),
-        col("pass"),
-        lit(wallMs).as("wall_ms"),
-        lit(System.currentTimeMillis()).as("completed_at"))
-    Checkpoint.commit(spark, outDir, entries)
+    val completedAt = System.currentTimeMillis()
+    val entries = counts.map { case (k, c) =>
+      Row(k, runId, c.nRows, c.nBadRows, c.nViolations, c.pass, wallMs, completedAt)
+    }
+    Checkpoint.commit(spark, outDir, spark.createDataFrame(entries.asJava,
+      StructType.fromDDL(Checkpoint.manifestSchema)).coalesce(1))
 
-    Report(runId, pendingParts, done, verdicts)
+    Report(runId, counts.map(_._1), committed.size, verdicts)
   }
 }

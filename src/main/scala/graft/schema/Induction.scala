@@ -184,9 +184,13 @@ object Induction {
     *   - `type`/`regex` = kept only when identical (no widening exists
     *     that both corpora are known to satisfy);
     *   - `severity` = the LOWER channel (loosest);
-    *   - a field present on ONE side only is widened to optional +
-    *     nullable (the other corpus has no such column — its rows
-    *     surface as null there).
+    *   - a field present on ONE side only keeps its `type` and
+    *     `severity` and loses every other rule: optional + nullable,
+    *     no value bounds (`min`/`max`, `regex`, `allowed`,
+    *     `forbidden`, lengths, `empty`). The other side carries no
+    *     evidence about the field — its corpus may lack the column, or
+    *     may simply not have been profiled on it — so no bound is
+    *     known to hold there.
     *
     * Declared machinery (dependencies, excludes, contains, combinators,
     * keysrules/valuesrules/items, normalize, checks, defaults, rename,
@@ -224,7 +228,7 @@ object Induction {
     val bm = b.fields.toMap
     val am = a.fields.toMap
     def widenSolo(s: FieldSpec): FieldSpec =
-      s.copy(required = false, nullable = true)
+      FieldSpec(dtype = s.dtype, severity = s.severity)
     def widen(x: FieldSpec, y: FieldSpec): FieldSpec = FieldSpec(
       dtype = if (x.dtype == y.dtype) x.dtype else None,
       required = x.required && y.required,

@@ -21,7 +21,11 @@ import org.apache.spark.sql.functions._
   *
   * Plan shape: single scan → project(array of when-structs) → explode →
   * filter(isNotNull) — all inside one WholeStageCodegen span; no UDFs,
-  * no higher-order functions.
+  * no higher-order functions. In a resumable run
+  * ([[graft.resume.ValidationRun]]) the projection also carries the
+  * per-row verdict counts, and an observe node (`CollectMetrics`, the
+  * per-partition verdict aggregate) sits between the projection and the
+  * explode.
   */
 object Validator {
 
@@ -33,9 +37,26 @@ object Validator {
     * severity)`. `keyCols` identify the offending row (e.g. repo, path,
     * commit — or doc_id).
     */
-  def violations(df: DataFrame, schema: Schema, keyCols: Seq[String]): DataFrame = {
+  def violations(df: DataFrame, schema: Schema, keyCols: Seq[String]): DataFrame =
+    explodeViolations(
+      df.select(keyCols.map(col) :+
+        RuleCompiler.violationsArray(schema).as(ViolationsCol): _*),
+      keyCols)
+
+  /** Column of [[explodeViolations]]'s input holding the row's
+    * `RuleCompiler.violationsArray`.
+    */
+  val ViolationsCol = "__violations"
+
+  /** The tail of [[violations]]: one row per non-null element of
+    * [[ViolationsCol]], keyed by `keyCols`. Shared with runners that
+    * compute the violations array in a wider projection (e.g. next to
+    * the per-row counts of an observed run) so the output shape cannot
+    * drift.
+    */
+  def explodeViolations(projected: DataFrame, keyCols: Seq[String]): DataFrame = {
     val keys: Seq[Column] = keyCols.map(col)
-    df.select(keys :+ explode(RuleCompiler.violationsArray(schema)).as("v"): _*)
+    projected.select(keys :+ explode(col(ViolationsCol)).as("v"): _*)
       .where(col("v").isNotNull)
       .select(keys :+ col("v.field") :+ col("v.rule") :+ col("v.value")
         :+ col("v.severity"): _*)

@@ -1,10 +1,14 @@
 package graft.verdict
 
 import graft.compile.RuleCompiler
-import graft.schema.Schema
+import graft.schema.{Schema, Severity}
 import graft.validate.Validator
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Per-partition pass/fail verdicts + metrics.
   *
@@ -41,6 +45,128 @@ object Verdict {
         RuleCompiler.severityName(max(col("__worst"))).as("worst_severity"),
         (sum(col("__n_err").cast("long")) === 0L).as("pass")
       )
+
+  /** One partition's verdict metrics, as [[compute]] aggregates them;
+    * `worstRank` is -1 for a clean partition.
+    */
+  final case class PartitionCounts(
+      nRows: Long,
+      nBadRows: Long,
+      nViolations: Long,
+      nWarnings: Long,
+      nErrors: Long,
+      worstRank: Int) {
+    def pass: Boolean = nErrors == 0L
+  }
+
+  /** One row's input to [[CountsByPartition]], in [[observeCounts]]'s
+    * counter-column order.
+    */
+  final case class RowCounts(
+      key: String,
+      nViolations: Int,
+      nErrors: Int,
+      nWarnings: Int,
+      worstRank: Int)
+
+  /** Partition key → [[PartitionCounts]] as ONE global aggregate, the
+    * map-valued aggregate Spark has no built-in for (an observed metric
+    * must be a single row). The buffer holds one counter array per key:
+    * rows, bad rows, violations, warnings, errors, worst rank.
+    */
+  private object CountsByPartition
+      extends Aggregator[RowCounts, Map[String, Array[Long]], Map[String, PartitionCounts]] {
+    type Buf = Map[String, Array[Long]]
+
+    def zero: Buf = Map.empty
+
+    def reduce(b: Buf, r: RowCounts): Buf =
+      add(b, r.key, Array(1L, if (r.nViolations > 0) 1L else 0L,
+        r.nViolations.toLong, r.nWarnings.toLong, r.nErrors.toLong, r.worstRank.toLong))
+
+    def merge(b1: Buf, b2: Buf): Buf =
+      b2.foldLeft(b1) { case (acc, (k, c)) => add(acc, k, c) }
+
+    private def add(b: Buf, key: String, c: Array[Long]): Buf = b.get(key) match {
+      case Some(a) =>
+        for (i <- 0 until 5) a(i) += c(i)
+        a(5) = math.max(a(5), c(5))
+        b
+      case None => b.updated(key, c)
+    }
+
+    def finish(b: Buf): Map[String, PartitionCounts] =
+      b.map { case (k, a) => k -> PartitionCounts(a(0), a(1), a(2), a(3), a(4), a(5).toInt) }
+
+    def bufferEncoder: Encoder[Buf] = ExpressionEncoder[Buf]()
+
+    def outputEncoder: Encoder[Map[String, PartitionCounts]] =
+      ExpressionEncoder[Map[String, PartitionCounts]]()
+  }
+
+  private val CountsMetric = "partition_counts"
+
+  /** `columns` of `df` plus, in the SAME projection, the per-row
+    * counters behind [[compute]]'s metrics, aggregated per
+    * `partitionKey` (a non-null string) into `observation` by whatever
+    * action runs the returned frame; read them with [[observedCounts]].
+    * One projection lets Catalyst evaluate each rule predicate once for
+    * both the caller's columns (e.g. the violations array) and the
+    * counters, so the verdicts cost no pass of their own.
+    */
+  def observeCounts(
+      df: DataFrame,
+      schema: Schema,
+      partitionKey: Column,
+      columns: Seq[Column],
+      observation: Observation): DataFrame = {
+    val counters = Seq(
+      "__key" -> partitionKey,
+      "__n_viol" -> RuleCompiler.violationCount(schema),
+      "__n_err" -> RuleCompiler.errorCount(schema),
+      "__n_warn" -> RuleCompiler.warningCount(schema),
+      "__worst" -> RuleCompiler.worstSeverityRank(schema))
+    df.select(columns ++ counters.map { case (n, c) => c.as(n) }: _*)
+      .observe(observation,
+        udaf(CountsByPartition).apply(counters.map(c => col(c._1)): _*).as(CountsMetric))
+  }
+
+  /** The counts [[observeCounts]] collected, sorted by partition key;
+    * blocks until the observed action has finished.
+    */
+  def observedCounts(observation: Observation): Seq[(String, PartitionCounts)] =
+    observation.get(CountsMetric).asInstanceOf[scala.collection.Map[String, Row]]
+      .toSeq
+      .map { case (k, r) =>
+        k -> PartitionCounts(r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getInt(5))
+      }
+      .sortBy(_._1)
+
+  /** The rows `compute(df, schema, partitionCol).withColumn("run_id",
+    * lit(runId))` yields, built on the driver from per-partition counts
+    * keyed by the partition VALUE (typed as `partitionField`, the
+    * input's partition column) — same schema, same semantics, no job.
+    */
+  def fromCounts(
+      spark: SparkSession,
+      partitionField: StructField,
+      runId: String,
+      counts: Seq[(Any, PartitionCounts)]): DataFrame = {
+    val rows = counts.map { case (v, c) =>
+      Row(v, c.nRows, c.nBadRows, c.nViolations, c.nWarnings, c.nErrors,
+        Severity.rank.collectFirst { case (n, r) if r == c.worstRank => n }.orNull,
+        c.pass, runId)
+    }
+    val long = (n: String) => StructField(n, LongType, nullable = true)
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      partitionField,
+      StructField("n_rows", LongType, nullable = false),
+      long("n_bad_rows"), long("n_violations"), long("n_warnings"), long("n_errors"),
+      StructField("worst_severity", StringType, nullable = true),
+      StructField("pass", BooleanType, nullable = true),
+      StructField("run_id", StringType, nullable = false))))
+  }
 
   /** Per-(field, rule, severity) violation breakdown — the triage view
     * a user reads FIRST after a failed run: which rules fired, how

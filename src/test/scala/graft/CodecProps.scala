@@ -160,6 +160,7 @@ object CodecProps extends Properties("graft.codecs") {
 
   /** Driver-side interpreter of the merged VALUE bounds: any string
     * accepted by either input spec must be accepted by the merge.
+    * Numeric bounds apply to values that parse as numbers.
     */
   private def accepts(sp: FieldSpec, v: String): Boolean = {
     val len = v.length
@@ -167,19 +168,31 @@ object CodecProps extends Properties("graft.codecs") {
       sp.forbidden.forall(!_.contains(v)) &&
       sp.minLength.forall(len >= _) &&
       sp.maxLength.forall(len <= _) &&
-      (!sp.notEmpty || v.trim.nonEmpty)
+      (!sp.notEmpty || v.trim.nonEmpty) &&
+      sp.regex.forall(v.matches) &&
+      v.toDoubleOption.forall(d => sp.min.forall(d >= _) && sp.max.forall(d <= _))
   }
 
   property("merge: accepts everything either side accepts (string rules)") =
     forAll(genInducedSpec, genInducedSpec,
-      Gen.oneOf("a", "b", "c", "x", "y", "", "  ", "abcdefghij")) {
-      (x0, y0, v) =>
-        // regexes differ per side → merged drops them; exclude from the
-        // driver interpreter (regex acceptance isn't a lattice op)
-        val x = x0.copy(regex = None)
-        val y = y0.copy(regex = None)
-        val m = Induction.merge(
-          Schema.of("f" -> x), Schema.of("f" -> y)).fields.head._2
-        !(accepts(x, v) || accepts(y, v)) || accepts(m, v)
+      Gen.oneOf("a", "b", "c", "x", "y", "", "  ", "abcdefghij", "42", "-150"),
+      Gen.oneOf(false, true)) {
+      (x0, y0, v, oneSided) =>
+        if (!oneSided) {
+          // regexes differ per side → merged drops them; exclude from the
+          // driver interpreter (regex acceptance isn't a lattice op)
+          val x = x0.copy(regex = None)
+          val y = y0.copy(regex = None)
+          val m = Induction.merge(
+            Schema.of("f" -> x), Schema.of("f" -> y)).fields.head._2
+          !(accepts(x, v) || accepts(y, v)) || accepts(m, v)
+        } else {
+          // `f` on the left only: the right side has no rule on it, so
+          // it accepts every value — and so must the merge, whatever
+          // bounds (regex included) the left side carried.
+          val m = Induction.merge(Schema.of("f" -> x0), Schema.of("g" -> y0))
+            .fields.toMap
+          accepts(m("f"), v) && m("f").severity == x0.severity
+        }
     }
 }

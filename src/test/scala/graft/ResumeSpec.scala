@@ -2,9 +2,18 @@ package graft
 
 import graft.data.SynthGen
 import graft.resume.{Checkpoint, ValidationRun}
+import graft.schema.{CustomCheck, FieldSpec, Schema, Severity}
 import graft.validate.Validator
+import graft.verdict.Verdict
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 class ResumeSpec extends SparkSpec {
 
@@ -12,14 +21,90 @@ class ResumeSpec extends SparkSpec {
   private def files = SynthGen.codeFiles(spark, cfg)
   private def tmp() = Files.createTempDirectory("graft-resume").toString
 
+  /** The run's verdicts equal [[Verdict.compute]] on the same input, in
+    * rows and schema (the report's frame and the written rows), and the
+    * run's manifest rows carry the same metrics.
+    */
+  private def assertVerdictParity(
+      df: DataFrame,
+      schema: Schema,
+      partitionCol: String,
+      out: String,
+      r: ValidationRun.Report): Unit = {
+    val want = Verdict.compute(df, schema, partitionCol)
+    val got = r.verdicts.drop("run_id")
+    assert(got.schema === want.schema)
+    val wantRows = want.collect().toSet
+    assert(got.collect().toSet === wantRows)
+    val written = spark.read.parquet(s"$out/verdicts")
+      .where(col("run_id") === r.runId).drop("run_id")
+    assert(written.collect().toSet === wantRows)
+    val metrics = Seq("n_rows", "n_bad_rows", "n_violations", "pass")
+    val manifest = Checkpoint.processed(spark, out).where(col("run_id") === r.runId)
+      .select("partition", metrics: _*)
+    val wantManifest = want.select(
+      Checkpoint.partitionKey(partitionCol).as("partition") +: metrics.map(col): _*)
+    assert(manifest.collect().toSet === wantManifest.collect().toSet)
+    assert(r.pending.toSet === wantManifest.collect().map(_.getString(0)).toSet)
+  }
+
+  /** Every file under `dir` with its modification time. */
+  private def listing(dir: String): Map[String, Long] =
+    if (!Files.exists(Paths.get(dir))) Map.empty
+    else {
+      val s = Files.walk(Paths.get(dir))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      finally s.close()
+    }
+
+  /** The file scans of `inputDir` in every SQL execution `body` runs. */
+  private def scansOf(inputDir: String)(body: => Unit): Seq[FileSourceScanExec] = {
+    val plans = mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case o => o.children ++ o.subqueries
+    }).flatMap(nodes)
+    val root = Paths.get(inputDir).toUri.getPath.stripSuffix("/")
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toSeq).flatMap(nodes).collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == root) => f
+    }
+  }
+
   test("fresh run commits every partition; second run is a no-op") {
     val out = tmp()
     val r1 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
     assert(r1.pending.nonEmpty)
     val manifest = Checkpoint.processed(spark, out)
     assert(manifest.count() === r1.pending.size.toLong)
+    assertVerdictParity(files, CodeFiles.schema, "lang", out, r1)
+
+    // The second run writes nothing: no verdict or manifest file, and
+    // no violations partition rewritten (its write is empty).
+    val verdicts = listing(s"$out/verdicts")
+    val committed = listing(Checkpoint.manifestPath(out))
+    val partitionFiles = () => listing(s"$out/violations")
+      .filter { case (p, _) => Paths.get(p).getParent != Paths.get(s"$out/violations") }
+    val violations = partitionFiles()
+    assert(violations.nonEmpty)
     val r2 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
     assert(r2.pending.isEmpty && r2.skipped === r1.pending.size.toLong)
+    assert(listing(s"$out/verdicts") === verdicts)
+    assert(listing(Checkpoint.manifestPath(out)) === committed)
+    assert(partitionFiles() === violations)
   }
 
   test("resume processes only uncommitted partitions; results match a single run") {
@@ -69,7 +154,67 @@ class ResumeSpec extends SparkSpec {
       "name" -> graft.schema.FieldSpec(required = true))
     val r1 = ValidationRun.run(df, schema, "lang", Seq("id"), out)
     assert(r1.pending.toSet === Set("en", Checkpoint.NullPartitionToken))
+    assertVerdictParity(df, schema, "lang", out, r1)
+    val nullVerdict = r1.verdicts.where(col("lang").isNull).collect()
+    assert(nullVerdict.length === 1)
+    assert(nullVerdict.head.getAs[Long]("n_rows") === 1L)
+    assert(nullVerdict.head.getAs[Boolean]("pass"))
     val r2 = ValidationRun.run(df, schema, "lang", Seq("id"), out)
     assert(r2.pending.isEmpty)
+  }
+
+  test("verdicts match Verdict.compute: mixed severities, int partition column") {
+    val mixed = Schema.of(
+      "repo" -> FieldSpec(required = true,
+        regex = Some("[A-Za-z0-9._-]+/[A-Za-z0-9._-]+"), severity = Severity.Warning),
+      "commit" -> FieldSpec(required = true, regex = Some("[0-9a-f]{40}")),
+      "lang" -> FieldSpec(allowed = Some(SynthGen.langs), severity = Severity.Warning),
+      "content" -> FieldSpec(required = true,
+        checks = Seq(CustomCheck("check_sha256",
+          v => sha2(v, 256) === col("expected_sha"))),
+        ruleSeverity = Map("check_sha256" -> Severity.Fatal)))
+    // Shard 9 holds rows with no error-channel violation (it passes,
+    // with warnings); shards 0-2 hold the rest.
+    val df = files.withColumn("shard",
+      when(graft.compile.RuleCompiler.errorCount(mixed) === 0 && col("id") % 2 === 0, 9)
+        .otherwise((col("id") % 3).cast("int")))
+    val out = tmp()
+    val r = ValidationRun.run(df, mixed, "shard", CodeFiles.keyCols, out)
+    assert(r.pending.toSet === Set("0", "1", "2", "9"))
+    assertVerdictParity(df, mixed, "shard", out, r)
+    val bySeverity = r.verdicts.collect().map(v =>
+      v.getAs[Int]("shard") -> (v.getAs[Boolean]("pass"), v.getAs[String]("worst_severity"))).toMap
+    assert(bySeverity(9) === (true, Severity.Warning))
+    assert((0 to 2).forall(s => bySeverity(s) === (false, Severity.Fatal)))
+  }
+
+  test("a run reads its unpartitioned input in exactly one file scan") {
+    val in = s"${tmp()}/in"
+    files.write.parquet(in)
+    val out = tmp()
+    val scans = scansOf(in) {
+      ValidationRun.run(spark.read.parquet(in), CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    }
+    assert(scans.length === 1)
+    assert(scans.head.metrics("numOutputRows").value === cfg.rows)
+  }
+
+  test("partitioned input: a resumed run scans only the uncommitted partition's files") {
+    val in = s"${tmp()}/in"
+    files.write.partitionBy("lang").parquet(in)
+    val out = tmp()
+    ValidationRun.run(spark.read.parquet(in).where(col("lang") =!= "rust"),
+      CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    val rustFiles = Files.list(Paths.get(s"$in/lang=rust")).iterator().asScala
+      .count((p: Path) => p.getFileName.toString.endsWith(".parquet"))
+    val rustRows = files.where(col("lang") === "rust").count()
+    var r: ValidationRun.Report = null
+    val scans = scansOf(in) {
+      r = ValidationRun.run(spark.read.parquet(in), CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    }
+    assert(r.pending === Seq("rust"))
+    assert(scans.length === 1)
+    assert(scans.head.metrics("numFiles").value === rustFiles.toLong)
+    assert(scans.head.metrics("numOutputRows").value === rustRows)
   }
 }
