@@ -3,8 +3,11 @@ package graft.index
 import graft.dedup.Dedup
 import graft.refint.RefIntegrity
 import graft.util.CacheScope
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Persistent build-once / query-many dedup, key-membership, drift and
   * expectation indices.
@@ -21,8 +24,15 @@ import org.apache.spark.sql.functions._
   * silently returning garbage.
   *
   * Layout per index directory:
-  *   - `data/…` — the index table (parquet);
+  *   - `data/…` — the index table (parquet); for the Bloom filter,
+  *     numbered versions `data/v-<n>` (see below);
   *   - `meta/…` — one JSON row of build parameters (kind-tagged).
+  *
+  * The two artifacts this store REPLACES rather than appends to — the
+  * Bloom filter and [[saveText]] documents — are immutable numbered
+  * versions `v-<n>`: a new one is written to a fresh temp entry and
+  * committed by ONE rename, and readers take the highest committed
+  * version. A crash at any step leaves the previous version readable.
   *
   * At 100 TB this is the difference between one corpus-wide shingle
   * pass per QUERY BATCH and one per INDEX REBUILD.
@@ -32,12 +42,13 @@ import org.apache.spark.sql.functions._
   * serialized retries, but two concurrent appenders (or a batch append
   * racing the streaming `minHashIndexSink` on the same path) can both
   * pass the anti-join and land duplicate index rows; `appendBloom`'s
-  * read-merge-swap can likewise lose one writer's keys. Serialize
+  * read-merge-publish can likewise lose one writer's keys, and two
+  * concurrent publishes can claim the same version number. Serialize
   * writers per index path (the [[graft.resume.Checkpoint]] manifest,
   * a scheduler lock, or one owning streaming query). Concurrent
-  * READERS are safe: appends never rewrite existing rows, and
-  * [[loadBloom]] falls back to the complete `data.swap-old` aside
-  * during `appendBloom`'s brief between-renames window.
+  * READERS are safe: appends never rewrite existing rows, and a
+  * published version is never rewritten — only pruned once two newer
+  * ones exist, which a reader survives by resolving again.
   */
 object IndexStore {
 
@@ -75,7 +86,8 @@ object IndexStore {
   /** Build and persist a Bloom filter over `dim`'s key tuple — the
     * build-once artifact for [[graft.refint.RefIntegrity]]'s bloom
     * paths. MB-sized regardless of dim width, so every later fact scan
-    * loads it in one driver read and probes with zero shuffle.
+    * loads it in one driver read and probes with zero shuffle. The meta
+    * sidecar lands first, so a committed filter always has one.
     */
   def buildBloom(
       dim: DataFrame,
@@ -85,87 +97,42 @@ object IndexStore {
       fpp: Double = 0.01): Unit = {
     val spark = dim.sparkSession
     val bytes = RefIntegrity.buildKeyBloom(dim, keys, expectedItems, fpp)
-    import spark.implicits._
-    Seq(Tuple1(bytes)).toDF("bloom")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/data")
     writeMeta(spark, path,
       BloomMeta("bloom", keys.mkString(","), expectedItems, fpp))(
       Encoders.product[BloomMeta])
+    publishBloom(spark, path, bytes)
   }
 
-  /** Stored filter bytes + build parameters. Callers must probe with
-    * the SAME key columns in the meta's recorded order.
-    *
-    * Safe against a concurrent [[appendBloom]] swap: between its two
-    * renames `data` is briefly absent while the complete pre-merge
-    * filter sits at `data.swap-old` — a not-found read falls back to
-    * the aside (and retries `data` once more for the reverse
-    * interleaving) before giving up.
+  private def publishBloom(spark: SparkSession, path: String, bytes: Array[Byte]): Unit = {
+    import spark.implicits._
+    publish(spark, new Path(s"$path/data")) { tmp =>
+      Seq(Tuple1(bytes)).toDF("bloom").coalesce(1).write.parquet(tmp.toString)
+    }
+  }
+
+  /** Stored filter bytes (the latest committed version) + build
+    * parameters. Callers must probe with the SAME key columns in the
+    * meta's recorded order.
     */
   def loadBloom(spark: SparkSession, path: String): (Array[Byte], BloomMeta) = {
     val meta = readMeta[BloomMeta](spark, path, "bloom")(Encoders.product[BloomMeta])
-    def read(sub: String): Array[org.apache.spark.sql.Row] =
-      spark.read.parquet(s"$path/$sub").collect()
-    // Both swap-race shapes: planning-time PATH_NOT_FOUND (dir gone
-    // before resolution) AND execution-time FileNotFound (dir renamed
-    // away between file listing and the task's open) — walk the cause
-    // chain; anything else rethrows untouched.
-    def transientMissing(e: Throwable): Boolean = {
-      var t = e; var depth = 0
-      while (t != null && depth < 16) {
-        if (t.isInstanceOf[java.io.FileNotFoundException]) return true
-        if (t.getMessage != null && t.getMessage.contains("PATH_NOT_FOUND"))
-          return true
-        t = t.getCause; depth += 1
-      }
-      false
-    }
-    val rows =
-      try read("data")
-      catch {
-        case e: Exception if transientMissing(e) =>
-          try read("data.swap-old")
-          catch { case e2: Exception if transientMissing(e2) =>
-            read("data") // swap completed meanwhile: live copy is back
-          }
-      }
+    val rows = latest(spark, new Path(s"$path/data"))(v => spark.read.parquet(v.toString).collect())
+      .getOrElse(throw new IllegalArgumentException(s"bloom index at $path has no filter"))
     require(rows.length == 1, s"bloom index at $path must hold exactly one row")
     (rows.head.getAs[Array[Byte]]("bloom"), meta)
   }
 
   /** Incrementally fold a new dim slice into a stored Bloom index:
-    * deserialize, merge the new keys' partial filter, rewrite. Bloom
-    * filters absorb re-inserted keys idempotently, so ingest retries
-    * are safe; the fpp guarantee holds while total distinct keys stay
-    * within the stored `expectedItems` (checked nowhere — the filter
-    * degrades gracefully to a higher fpp, never to false negatives).
-    *
-    * Crash-safe: unlike the row-append indices (whose old rows are
-    * never touched), this REPLACES the only copy of the filter — so the
-    * merged filter is written to a sibling temp dir and rename-swapped
-    * into place (the [[graft.sources.TableIO.compact]] protocol): a
-    * crash at any step leaves a complete filter under `data`,
-    * `data.swap-tmp`, or `data.swap-old`, never a half-written one.
-    * Both crash windows self-heal BEFORE any work runs (the crashed
-    * call never committed, so its caller retries it): a leftover
-    * `data.swap-old` WITHOUT a live `data` is renamed back (crash
-    * between the two swap renames); one alongside a live `data` is a
-    * stale aside from a crash after the swap, deleted. A leftover
-    * `data.swap-tmp` is an uncommitted merge, deleted either way.
-    * Single-writer, like every append path (object scaladoc).
+    * deserialize, merge the new keys' partial filter, publish the merge
+    * as the next version. Bloom filters absorb re-inserted keys
+    * idempotently, so ingest retries are safe; the fpp guarantee holds
+    * while total distinct keys stay within the stored `expectedItems`
+    * (checked nowhere — the filter degrades gracefully to a higher fpp,
+    * never to false negatives). Single-writer, like every append path
+    * (object scaladoc).
     */
   def appendBloom(dim: DataFrame, path: String): Unit = {
     val spark = dim.sparkSession
-    val live = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(live.getParent, "data.swap-tmp")
-    val old = new org.apache.hadoop.fs.Path(live.getParent, "data.swap-old")
-    if (fs.exists(old)) {
-      if (fs.exists(live)) fs.delete(old, true) // stale aside, post-swap crash
-      else require(fs.rename(old, live), // mid-swap crash: restore the filter
-        s"appendBloom recovery rename $old -> $live failed")
-    }
-    fs.delete(tmp, true) // an uncommitted merge from a crashed writer
     val (bytes, meta) = loadBloom(spark, path)
     val keys = meta.keys.split(",").toSeq
     val bf = graft.functions.BloomExprs.deserialize(bytes)
@@ -176,15 +143,7 @@ object IndexStore {
       .select(RefIntegrity.keyHash(keys).as("__kh"))
       .stat.bloomFilter("__kh", meta.expectedItems, meta.fpp)
     bf.mergeInPlace(partial)
-    import spark.implicits._
-    Seq(Tuple1(graft.functions.BloomExprs.serialize(bf))).toDF("bloom")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    require(fs.rename(live, old), s"appendBloom aside-rename failed for $live")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(old, live) // restore rather than leave the index missing
-      throw new IllegalStateException(s"appendBloom swap-rename failed for $live")
-    }
-    fs.delete(old, true)
+    publishBloom(spark, path, graft.functions.BloomExprs.serialize(bf))
   }
 
   // -------------------------------------------------------------------
@@ -336,70 +295,104 @@ object IndexStore {
   }
 
   // -------------------------------------------------------------------
+  // Text artifacts (SchemaJson documents, ExpectJson suites)
+  // -------------------------------------------------------------------
+
+  /** Replace a SMALL text artifact (a SchemaJson document, an
+    * ExpectJson suite) at `path`: the text is published as the next
+    * version under `path/` ([[publish]]). Single-writer, like every
+    * other mutation in this store.
+    */
+  def saveText(spark: SparkSession, path: String, text: String): Unit =
+    publish(spark, new Path(path)) { tmp =>
+      val out = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(tmp)
+      try out.write(text.getBytes(UTF_8)) finally out.close()
+    }
+
+  /** The latest [[saveText]] version at `path`; None when never written.
+    * Fails if `path` is a file: that is not an artifact this store wrote.
+    */
+  def loadText(spark: SparkSession, path: String): Option[String] =
+    latest(spark, new Path(path)) { v =>
+      val in = v.getFileSystem(spark.sparkContext.hadoopConfiguration).open(v)
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+
+  // -------------------------------------------------------------------
+  // Versioned publish: the Bloom filter and text artifacts are
+  // immutable `v-<n>` entries under an artifact root
+  // -------------------------------------------------------------------
+
+  private val VersionName = "v-(\\d+)".r
+
+  /** The highest committed version number under `root` (numeric, not
+    * lexical order); None when `root` is absent or holds none. A FILE at
+    * `root` fails loudly: it is not an artifact this store wrote, and
+    * reading it as "never written" would silently restart what it holds.
+    */
+  private def newest(fs: FileSystem, root: Path): Option[Long] = {
+    val entries =
+      try {
+        require(fs.getFileStatus(root).isDirectory,
+          s"$root is a file, not a versioned artifact directory")
+        fs.listStatus(root)
+      } catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    entries.map(_.getPath.getName).collect { case VersionName(n) => n.toLong }.maxOption
+  }
+
+  /** Publish the next version of the artifact under `root`: `write`
+    * fills a fresh `_tmp-<uuid>`, and ONE rename commits it as
+    * `v-<n+1>` (n the highest committed version). Then stray temps and
+    * every version older than the predecessor are deleted; the
+    * predecessor stays for a reader that resolved it just before the
+    * rename. A crash at any step leaves the latest committed version
+    * whole; the next publish clears what the crash stranded.
+    */
+  private def publish(spark: SparkSession, root: Path)(write: Path => Unit): Unit = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val n = newest(fs, root).getOrElse(0L) + 1
+    val tmp = new Path(root, s"_tmp-${java.util.UUID.randomUUID()}")
+    write(tmp)
+    val next = new Path(root, s"v-$n")
+    require(fs.rename(tmp, next), s"could not publish $tmp as $next")
+    fs.listStatus(root).map(_.getPath).foreach { p =>
+      p.getName match {
+        case VersionName(m) if m.toLong < n - 1 => fs.delete(p, true)
+        case name if name.startsWith("_tmp-") => fs.delete(p, true)
+        case _ =>
+      }
+    }
+  }
+
+  /** `read` of the latest committed version under `root`; None when
+    * none is committed. A version pruned between resolve and read (two
+    * publishes landed meanwhile) resolves once more.
+    */
+  private def latest[T](spark: SparkSession, root: Path)(read: Path => T): Option[T] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def attempt() = newest(fs, root).map(n => read(new Path(root, s"v-$n")))
+    try attempt()
+    catch { case e: Exception if notFound(e) => attempt() }
+  }
+
+  /** Both shapes of a vanished path: planning-time PATH_NOT_FOUND and
+    * execution-time FileNotFoundException (gone between listing and
+    * open) — walk the cause chain.
+    */
+  private def notFound(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists { t =>
+      t.isInstanceOf[java.io.FileNotFoundException] ||
+        (t.getMessage != null && t.getMessage.contains("PATH_NOT_FOUND"))
+    }
+
+  // -------------------------------------------------------------------
   // Expectation-observation snapshots (baseline-relative gates:
   // "a snapshot 40% smaller than YESTERDAY'S" needs yesterday's
   // observations persisted — no static bound can express it)
   // -------------------------------------------------------------------
 
-  /** Atomically replace a SMALL text artifact (a SchemaJson document,
-    * an ExpectJson suite) at `path`: stale tmp/aside copies are cleared,
-    * the new text lands at `<path>.tmp`, the live file is swapped aside,
-    * tmp renamed into place, the aside copy dropped — the same rename
-    * discipline as [[appendBloom]]. Crash windows self-heal: [[loadText]]
-    * falls back to the aside copy while live is briefly absent, and the
-    * next save clears whatever a crash stranded. Single-writer, like
-    * every other mutation in this store.
-    */
-  def saveText(spark: SparkSession, path: String, text: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val aside = new org.apache.hadoop.fs.Path(path + ".swap-old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // create(overwrite) clears any stranded tmp; the aside copy is NOT
-    // cleared up front — after a crash between the two renames it is
-    // the ONLY surviving copy, and deleting it before the new live is
-    // published would turn a second crash into total artifact loss.
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(live)) {
-      fs.delete(aside, false) // stale aside is superseded by live
-      require(fs.rename(live, aside), s"saveText: could not swap aside $live")
-    }
-    require(fs.rename(tmp, live), s"saveText: could not publish $tmp -> $live")
-    fs.delete(aside, false)
-    ()
-  }
-
-  /** Read a [[saveText]] artifact; None when never written. Tolerates a
-    * CONCURRENT swap: each probe treats a file vanishing between
-    * exists() and open() as absent (the TOCTOU window is real — the
-    * writer renames between those calls), falls back to the aside copy,
-    * and retries live once for the complementary race (reader saw live
-    * absent mid-swap; writer then published and dropped the aside).
-    */
-  def loadText(spark: SparkSession, path: String): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def read(p: org.apache.hadoop.fs.Path): Option[String] = {
-      val fs = p.getFileSystem(conf)
-      try {
-        // read the OPENED stream to EOF — a stat-then-read by length
-        // would have its own TOCTOU (stat the old file, open the new
-        // one, hand back a silently truncated artifact)
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      } catch {
-        case _: java.io.FileNotFoundException => None
-      }
-    }
-    val live = new org.apache.hadoop.fs.Path(path)
-    val aside = new org.apache.hadoop.fs.Path(path + ".swap-old")
-    read(live).orElse(read(aside)).orElse(read(live))
-  }
-
   private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -511,10 +504,10 @@ object IndexStore {
       .select(col("snapshot_id"), col("seq")).distinct().collect()
     val drop = pairs.sortBy(-_.getLong(1)).drop(keepLast)
     if (drop.isEmpty) return 0L
-    val root = new org.apache.hadoop.fs.Path(s"$path/data")
+    val root = new Path(s"$path/data")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     drop.foreach { r =>
-      fs.delete(new org.apache.hadoop.fs.Path(root,
+      fs.delete(new Path(root,
         s"snapshot_id=${r.getString(0)}"), true)
     }
     drop.length.toLong

@@ -262,8 +262,7 @@ object CorpusPipeline {
     // Manifest stats: one aggregate over the input slice (+ a
     // metadata-cheap count of what landed), keyed by the sentinel-
     // mapped partition value.
-    val partKey = coalesce(col(partitionCol).cast("string"),
-      lit(Checkpoint.NullPartitionToken)).as("partition")
+    val partKey = Checkpoint.partitionKey(partitionCol).as("partition")
     val inStats = slice
       .withColumn("__n_err", RuleCompiler.errorCount(cfg.schema))
       .withColumn("__n_viol", RuleCompiler.violationCount(cfg.schema))
@@ -272,8 +271,7 @@ object CorpusPipeline {
         sum(col("__n_viol").cast("long")).as("n_violations"),
         (sum(col("__n_err").cast("long")) === 0L).as("pass"))
     val outStats = curatedTable()
-      .select(coalesce(col(partitionCol).cast("string"),
-        lit(Checkpoint.NullPartitionToken)).as("partition"))
+      .select(Checkpoint.partitionKey(partitionCol).as("partition"))
       .where(col("partition").isin(pendingParts: _*))
       .groupBy(col("partition"))
       .agg(count(lit(1)).as("__n_out"))

@@ -45,9 +45,8 @@ object Checkpoint {
   /** All committed partition values (empty frame when no manifest yet). */
   def processed(spark: SparkSession, outDir: String): DataFrame = {
     val path = manifestPath(outDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    if (hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath))
       spark.read.schema(manifestSchema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -136,6 +136,9 @@ object TableIO {
     * directory (a real deployment still prefers the table format's
     * snapshot swap; the engine's own outputs additionally resolve
     * committed data through the [[graft.resume.Checkpoint]] manifest).
+    * It keeps this swap rather than a versioned publish because readers
+    * and writers reach the table by its own path, and on a plain
+    * filesystem no single rename can replace a non-empty directory.
     * Non-parquet sidecars living under the table dir (other than
     * `_SUCCESS`/hidden committer files) are NOT carried through a
     * rewrite, so compaction REFUSES such tables instead of silently

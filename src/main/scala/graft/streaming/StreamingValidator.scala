@@ -236,8 +236,7 @@ object StreamingValidator {
               .partitionBy("run_id")
               .parquet(s"$outDir/verdicts")
             val entries = verdicts.select(
-              coalesce(col(partitionCol).cast("string"),
-                lit(Checkpoint.NullPartitionToken)).as("partition"),
+              Checkpoint.partitionKey(partitionCol).as("partition"),
               col("run_id"), col("n_rows"), col("n_bad_rows"),
               col("n_violations"), col("pass"),
               lit(System.currentTimeMillis() - t0).as("wall_ms"),
@@ -430,12 +429,12 @@ object StreamingValidator {
     * induction incremental), and the widening itself is the batch's
     * DRIFT report (`Induction.diff` of stored vs merged: every rule the
     * new data forced looser, every field it added). The schema-so-far
-    * persists as a SchemaJson document (`IndexStore.saveText` rename
-    * swap), so any later job — batch validation, another stream — can
-    * load and enforce it.
+    * persists as a SchemaJson document (`IndexStore.saveText`: each
+    * save is a new version, committed by one rename), so any later job
+    * — batch validation, another stream — can load and enforce it.
     *
     * Replay semantics (foreachBatch is at-least-once): drift lands
-    * BEFORE the schema swap. A crash between them replays to the
+    * BEFORE the schema save. A crash between them replays to the
     * IDENTICAL diff (stored unchanged) and dynamic-overwrites the same
     * `batch_id` partition; a replay after both is a row-level no-op —
     * merge is idempotent, so the re-merge equals the stored schema, the

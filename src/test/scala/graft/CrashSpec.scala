@@ -1,0 +1,181 @@
+package graft
+
+import graft.index.IndexStore
+import graft.resume.Checkpoint
+import graft.sources.TableIO
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions._
+
+import java.io.File
+import java.nio.file.Files
+import scala.util.Try
+
+/** Crash proof for every path that replaces a persisted artifact: each
+  * is run once per step of its fault-free run, with a one-shot fault at
+  * that step ([[FaultyFileSystem]]), and a reader must then see the
+  * state before or after the interrupted operation — never an absent or
+  * partial artifact — and a fault-free retry must complete it.
+  */
+class CrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  private lazy val registered: Unit =
+    FaultyFileSystem.register(spark.sparkContext.hadoopConfiguration)
+
+  /** A fresh directory under the faulty scheme. */
+  private def fresh(name: String): String = {
+    registered
+    FaultyFileSystem.uri(Files.createTempDirectory(s"graft-crash-$name").toString)
+  }
+
+  private def local(dir: String): File = new File(new Path(dir).toUri.getPath)
+
+  /** Spark logs every injected task failure and every read of a path
+    * not yet written; keep the test output quiet.
+    */
+  private def quietly[T](body: => T): T = {
+    val level = org.apache.logging.log4j.LogManager.getRootLogger.getLevel.toString
+    spark.sparkContext.setLogLevel("OFF")
+    try body finally spark.sparkContext.setLogLevel(level)
+  }
+
+  /** Crash-tests the operation `stages` (run in order on a fresh
+    * directory prepared by `setup`). The fault-free run gives each
+    * stage's step count and the `view` a reader sees at each stage
+    * boundary. Then for every step k of the K in total: a fresh run
+    * faulted once at k must leave a view that is one of those boundary
+    * views, no earlier than the start of the faulted stage (or is
+    * `crashView`, where a crash may leave one more), and pass
+    * `invariant`; `recover` and a fault-free rerun of the faulted stage
+    * and those after it must reach the final view and pass `after`.
+    * Returns each stage's step count.
+    */
+  private def crashProof[V](name: String)(
+      setup: String => Unit = _ => (),
+      stages: Seq[String => Unit],
+      view: String => V,
+      crashView: Option[V] = None,
+      invariant: String => Unit = _ => (),
+      recover: String => Unit = _ => (),
+      after: String => Unit = _ => ()): Seq[Int] = quietly {
+    val dir0 = fresh(name)
+    setup(dir0)
+    val views = Seq.newBuilder[V]
+    views += view(dir0)
+    val perStage = stages.map { stage =>
+      val (n, _) = FaultyFileSystem.run(dir0, 0)(stage(dir0))
+      views += view(dir0)
+      n
+    }
+    val boundary = views.result()
+    val total = perStage.sum
+    assert(total > 0, s"$name: no counted step")
+    (1 to total).foreach { k =>
+      val dir = fresh(name)
+      setup(dir)
+      val (_, fired) = FaultyFileSystem.run(dir, k)(stages.foreach(_(dir)))
+      assert(fired, s"$name: no fault fired at step $k of $total")
+      val faulted = perStage.scanLeft(0)(_ + _).tail.indexWhere(k <= _)
+      val seen = view(dir)
+      assert(boundary.drop(faulted).contains(seen) || crashView.contains(seen),
+        s"$name: a fault at step $k (stage ${faulted + 1}) left $seen")
+      invariant(dir)
+      recover(dir)
+      stages.drop(faulted).foreach(_(dir))
+      assert(view(dir) === boundary.last, s"$name: the retry after step $k")
+      after(dir)
+    }
+    perStage
+  }
+
+  /** No stray temp entry and at most two versions under an artifact root. */
+  private def tidy(root: File): Unit = {
+    val names = root.list().toSeq
+    assert(!names.exists(_.startsWith("_tmp-")), s"stray temp under $root: $names")
+    assert(names.count(_.matches("v-\\d+")) <= 2, s"unpruned versions under $root: $names")
+  }
+
+  test("saveText: every crash leaves the previous or the new text; a retry saves it") {
+    val texts = Seq("first", "second", "third")
+    val ks = crashProof[Option[String]]("text")(
+      stages = texts.map(t => (dir: String) => IndexStore.saveText(spark, s"$dir/doc", t)),
+      view = dir => IndexStore.loadText(spark, s"$dir/doc"),
+      after = dir => tidy(new File(local(dir), "doc")))
+    info(s"K per save: ${ks.mkString(", ")}")
+    // the third save is the first to prune a version
+    assert(ks.last > ks.head)
+  }
+
+  test("buildBloom then appendBloom: a crash leaves no filter, the built or the merged one") {
+    val dim = spark.range(0L, 200L, 1L, 2)
+      .select(concat(lit("r"), ($"id" % 7).cast("string")).as("repo"),
+        $"id".cast("string").as("commit"))
+    val keys = Seq("repo", "commit")
+    def committed(dir: String): Boolean =
+      Option(new File(local(dir), "bloom/data").list()).exists(_.exists(_.matches("v-\\d+")))
+    val ks = crashProof[Option[Seq[Byte]]]("bloom")(
+      stages = Seq(
+        dir => IndexStore.buildBloom(dim.where($"id" % 2 === 0), keys, s"$dir/bloom",
+          expectedItems = 1000L),
+        dir => IndexStore.appendBloom(dim, s"$dir/bloom")),
+      view = dir =>
+        if (!committed(dir)) {
+          assert(Try(IndexStore.loadBloom(spark, s"$dir/bloom")).isFailure)
+          None
+        } else Some(IndexStore.loadBloom(spark, s"$dir/bloom")._1.toSeq),
+      after = dir => tidy(new File(local(dir), "bloom/data")))
+    info(s"K for build, append: ${ks.mkString(", ")}")
+  }
+
+  test("compact: every crash leaves all rows readable or a documented complete copy") {
+    def table(dir: String) = s"$dir/t"
+    val rows = (0L until 40L).toSet
+    def read(p: String): Option[Set[Long]] =
+      Try(spark.read.parquet(p).as[Long].collect().toSet).toOption
+    val ks = crashProof[Option[Set[Long]]]("compact")(
+      setup = dir => spark.range(0L, 40L, 1L, 4).toDF("id").write.parquet(table(dir)),
+      stages = Seq(dir => TableIO.compact(spark, table(dir), targetFileBytes = 1L << 30)),
+      view = dir => {
+        val seen = Try(spark.read.parquet(table(dir)).as[Long].collect().toSet)
+        seen.failed.foreach { e =>
+          assert(e.getMessage.contains("PATH_NOT_FOUND"), s"unexpected read failure: $e")
+        }
+        seen.toOption
+      },
+      // between the swap's two renames the table is briefly absent
+      crashView = Some(None),
+      invariant = dir => assert(
+        Seq("", ".compact-tmp", ".compact-old").exists(s => read(table(dir) + s).contains(rows)),
+        s"no complete copy of ${table(dir)}"),
+      // the documented recovery of a crashed swap: put the aside copy
+      // back if the live table is missing, otherwise drop it
+      recover = dir => {
+        val t = local(table(dir))
+        val old = new File(t.getPath + ".compact-old")
+        if (old.exists) {
+          if (t.exists) assert(org.apache.hadoop.fs.FileUtil.fullyDelete(old))
+          else assert(old.renameTo(t))
+        }
+      })
+    info(s"K: ${ks.mkString}")
+  }
+
+  test("Checkpoint.commit: a crash leaves the prior or all new rows; a retry adds the rest") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(Checkpoint.manifestSchema)
+    def entries(keys: Seq[String]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(keys.map(k =>
+        org.apache.spark.sql.Row(k, "run", 1L, 0L, 0L, true, 1L, 1L)), 1),
+      schema)
+    val prior = Seq("scala", "java")
+    val added = Seq("rust", "go", Checkpoint.NullPartitionToken)
+    val ks = crashProof[Seq[String]]("manifest")(
+      setup = dir => Checkpoint.commit(spark, dir, entries(prior)),
+      // resume commits only what the manifest does not hold yet
+      stages = Seq { dir =>
+        val rest = added.filterNot(Checkpoint.committed(spark, dir).toSet)
+        if (rest.nonEmpty) Checkpoint.commit(spark, dir, entries(rest))
+      },
+      view = dir => Checkpoint.committed(spark, dir).sorted)
+    info(s"K: ${ks.mkString}")
+  }
+}

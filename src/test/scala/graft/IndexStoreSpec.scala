@@ -171,31 +171,42 @@ class IndexStoreSpec extends SparkSpec {
     assert(storedScores === directScores && storedScores.nonEmpty)
   }
 
-  test("saveText/loadText: swap replaces atomically and both crash windows self-heal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-text").toString
-    val p = s"$dir/artifact.json"
+  test("saveText/loadText: numerically latest version wins; a stranded temp is cleared") {
+    val p = s"${tmpDir("text")}/artifact.json"
+    val root = new java.io.File(p)
+    def entries = root.list().filterNot(_.startsWith(".")).toSet // not the .crc sidecars
     assert(IndexStore.loadText(spark, p) === None)
-    IndexStore.saveText(spark, p, "v1")
-    assert(IndexStore.loadText(spark, p) === Some("v1"))
-    IndexStore.saveText(spark, p, "v2")
-    assert(IndexStore.loadText(spark, p) === Some("v2"))
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash window A: live swapped aside, tmp not yet published —
-    // readers fall back to the aside copy; the next save recovers
-    fs.rename(new org.apache.hadoop.fs.Path(p),
-      new org.apache.hadoop.fs.Path(p + ".swap-old"))
-    assert(IndexStore.loadText(spark, p) === Some("v2"))
-    IndexStore.saveText(spark, p, "v3")
-    assert(IndexStore.loadText(spark, p) === Some("v3"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + ".swap-old")))
-    // crash window B: a stranded tmp from a dead writer never shadows
-    // the live copy and is cleared by the next save
-    val out = fs.create(new org.apache.hadoop.fs.Path(p + ".tmp"), true)
-    out.write("garbage".getBytes); out.close()
-    assert(IndexStore.loadText(spark, p) === Some("v3"))
-    IndexStore.saveText(spark, p, "v4")
-    assert(IndexStore.loadText(spark, p) === Some("v4"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + ".tmp")))
+    // v-10 must beat v-9: the order is numeric, not lexical
+    (1 to 11).foreach { i =>
+      IndexStore.saveText(spark, p, s"text $i")
+      assert(IndexStore.loadText(spark, p) === Some(s"text $i"))
+    }
+    assert(entries === Set("v-10", "v-11")) // the predecessor stays, older ones go
+    // a temp stranded by a dead writer never shadows the latest version
+    // and is cleared by the next save
+    java.nio.file.Files.writeString(new java.io.File(root, "_tmp-dead").toPath, "garbage")
+    assert(IndexStore.loadText(spark, p) === Some("text 11"))
+    IndexStore.saveText(spark, p, "text 12")
+    assert(IndexStore.loadText(spark, p) === Some("text 12"))
+    assert(entries === Set("v-11", "v-12"))
+  }
+
+  test("a file at an artifact path fails loudly; an empty dir reads as never written") {
+    val dir = tmpDir("unversioned")
+    val text = s"$dir/artifact.json"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(text), "{}")
+    val e = intercept[IllegalArgumentException](IndexStore.loadText(spark, text))
+    assert(e.getMessage.contains(text))
+
+    val bloom = s"$dir/bloom"
+    IndexStore.buildBloom(Seq(("r", "c")).toDF("repo", "commit"), Seq("repo", "commit"),
+      bloom, expectedItems = 10L)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$bloom/data"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$bloom/data"), "")
+    val e2 = intercept[IllegalArgumentException](IndexStore.loadBloom(spark, bloom))
+    assert(e2.getMessage.contains(s"$bloom/data"))
+
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$dir/empty"))
+    assert(IndexStore.loadText(spark, s"$dir/empty") === None)
   }
 }

@@ -107,6 +107,17 @@ class ResumeSpec extends SparkSpec {
     assert(partitionFiles() === violations)
   }
 
+  test("an outDir containing a space: every partition commits; a second run is a no-op") {
+    val out = s"${tmp()}/out dir"
+    val r1 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    val keys = files.select(Checkpoint.partitionKey("lang")).distinct().collect()
+      .map(_.getString(0)).toSet
+    assert(r1.pending.toSet === keys)
+    assert(Checkpoint.committed(spark, out).toSet === keys)
+    val r2 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    assert(r2.pending.isEmpty && r2.skipped === keys.size.toLong)
+  }
+
   test("resume processes only uncommitted partitions; results match a single run") {
     val single = tmp()
     ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, single)
