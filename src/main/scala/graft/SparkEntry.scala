@@ -725,30 +725,6 @@ object SparkEntry {
     "q_drift_documents" -> ((s, dir) =>
       Drift.againstGlobal(docs(s, dir), "n_chars", Seq("lang"),
         nBins = 20, lo = 0d, hi = 600d)),
-    "q_asof_events" -> ((s, dir) => {
-      // Point-in-time join: each click sees the user's most recent
-      // purchase value at-or-before its timestamp (never the future).
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .where(col("ts").isNotNull)
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      graft.temporal.Temporal.asofJoin(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("purchase_value"))
-    }),
-    "q_sessions_events" -> ((s, dir) => {
-      // Gap-based sessionization (1 h inactivity gap) + per-session
-      // rollup — the unit a session-level pipeline samples/dedups on.
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .where(col("ts").isNotNull)
-        .select(col("user_id"), col("ts"), col("event_id"))
-      graft.temporal.Temporal.sessionSummary(ev, "user_id", "ts",
-        gapSeconds = 3600L, tieBreak = Seq("event_id"))
-    }),
     "q_drift_categorical_documents" -> ((s, dir) => {
       // Categorical drift (PSI + total variation) of the source
       // distribution per lang, between even- and odd-id halves.
@@ -819,50 +795,6 @@ object SparkEntry {
       // Exact corpus-wide heavy hitters (vocabulary head): shuffle
       // bounded by vocab size, top-k via TakeOrderedAndProject.
       TextAnalysis.topTokens(docs(s, dir), "text", k = 20)),
-
-    "q_pipeline_documents" -> ((s, dir) =>
-      // End-to-end corpus curation funnel (validate → dedup → quality →
-      // sample → pack) — per-stage counts, fully replayed by the oracle.
-      graft.pipeline.CorpusPipeline.metrics(docs(s, dir),
-        graft.pipeline.CorpusPipeline.Config(
-          schema = docSchema,
-          qualityMin = 0.5,
-          sampleRates = Map("en" -> 0.5)))),
-    "q_pack_documents" -> ((s, dir) =>
-      // Sequence packing: bucket-local first-fit-by-start packs with a
-      // 2000-char budget; audit view (docs + fill per pack). The bucket
-      // count is DERIVED from the input size (ceil(rows/100) here —
-      // bounded per-bucket sorts at any scale); the oracle recomputes
-      // the identical derivation from the same table.
-      graft.pack.Packing.packSummaryAuto(docs(s, dir), "doc_id", "n_chars",
-        budget = 2000L, targetRowsPerBucket = 100L)),
-    "q_sample_documents" -> ((s, dir) =>
-      // Deterministic stratified downsampling (rebalance languages):
-      // keep/drop is a pure function of (doc_id, seed) → identical
-      // rows at any parallelism, rerun, or engine (md5-bucket based —
-      // the oracle recomputes it exactly in DuckDB).
-      graft.sample.Sampling.stratified(docs(s, dir), "doc_id", "lang",
-          rates = Map("en" -> 0.25, "zh" -> 0.5), defaultRate = 1.0)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"))),
-    "q_sample_joined_documents" -> ((s, dir) =>
-      // The SAME rates forced through stratified()'s broadcast-join
-      // compilation (whenChainMaxStrata = 0) — the high-cardinality
-      // path whose plan is O(1) in |rates| — against the identical
-      // DuckDB oracle as q_sample: both compilations must select the
-      // same rows.
-      graft.sample.Sampling.stratified(docs(s, dir), "doc_id", "lang",
-          rates = Map("en" -> 0.25, "zh" -> 0.5), defaultRate = 1.0,
-          seed = 42L, whenChainMaxStrata = 0)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"))),
-
-    "q_reservoir_documents" -> ((s, dir) =>
-      // Fixed-size per-group sample (per-domain cap): exactly
-      // min(7, |lang|) docs per language, selection a pure function of
-      // (doc_id, lang, seed) — the oracle replays it row-for-row.
-      graft.sample.Sampling.reservoirPerGroup(docs(s, dir), "doc_id", "lang", k = 7)
-        .select(col("lang"), col("doc_id"))),
 
     "q_profile_documents" -> ((s, dir) =>
       // Schema inference step 1: one-pass per-field corpus profile
@@ -1038,23 +970,6 @@ object SparkEntry {
       graft.schema.Induction.diff(s, before, after)
     }),
 
-    "q_temperature_documents" -> ((s, dir) =>
-      // UniMax-style mixture rebalancing: per-lang keep rates
-      // r_g = (n_min/n_g)^(1-alpha) derived from the group counts, then
-      // the same pure (key, seed) filter as q_sample — the oracle
-      // re-derives the rates, thresholds, and exact row set.
-      graft.sample.Sampling.temperatureSample(
-          docs(s, dir), "doc_id", "lang", alpha = 0.5)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))),
-    "q_temperature_joined_documents" -> ((s, dir) =>
-      // The DISTRIBUTED temperature path (rates derived and broadcast-
-      // joined fully in-plan, zero driver collect — the 10⁵⁺-strata
-      // variant) against the identical oracle: both derivations must
-      // select the same rows.
-      graft.sample.Sampling.temperatureSampleDistributed(
-          docs(s, dir), "doc_id", "lang", alpha = 0.5)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))),
-
     "q_normalize_documents" -> ((s, dir) =>
       // Cerberus's NORMALIZATION half end-to-end: rename (source →
       // origin), purge_unknown (drops the derived size_tag column),
@@ -1103,19 +1018,6 @@ object SparkEntry {
         when(col("doc_id") % 29 === 0, array(col("source"), col("lang")))
           .otherwise(array(col("source"), col("lang"), col("size_tag"))))
       Validator.violations(d, itemsSchema, Seq("doc_id"))
-    }),
-
-    "q_budget_documents" -> ((s, dir) => {
-      // Quality-ranked trim to a global token budget: keep the maximal
-      // quality-descending prefix whose token sum fits. Computed via
-      // the binned-cutoff plan (no global sort — only the boundary
-      // score bin pays an ordered scan); the oracle replays the
-      // global-prefix SEMANTICS directly with a window cumsum.
-      val scored = TextAnalysis.qualityFeatures(docs(s, dir), "text")
-        .withColumn("quality_r", round(col("quality"), 6))
-      graft.sample.Sampling.selectByTokenBudget(
-          scored, "doc_id", "n_tokens", "quality_r", budget = 20000L)
-        .select(col("doc_id"), col("lang"))
     }),
 
     // --- training-data pipeline: deduplication -------------------------
@@ -1347,32 +1249,6 @@ object SparkEntry {
          |       ${docViolationCountSql(Set("error", "fatal"))} AS e
          |      FROM $docsXSql)
          |GROUP BY ROLLUP(lang)""".stripMargin,
-    "q_asof_events" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'click' AND ts IS NOT NULL),
-        |r AS (
-        |  SELECT user_id, ts, max(value) AS purchase_value FROM events
-        |  WHERE event_type = 'purchase' AND ts IS NOT NULL GROUP BY 1, 2)
-        |SELECT l.user_id, l.event_id, l.ts, r.purchase_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-    "q_sessions_events" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_id,
-        |   CASE WHEN lag(ts) OVER w IS NULL
-        |     OR date_diff('second', lag(ts) OVER w, ts) > 3600 THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |x AS (
-        |  SELECT user_id, ts,
-        |   sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM e)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        | count(*) AS n_events, min(ts) AS start_ts, max(ts) AS end_ts,
-        | CAST(date_diff('second', min(ts), max(ts)) AS BIGINT) AS duration_s
-        |FROM x GROUP BY 1, 2""".stripMargin,
     "q_stats_lineitem" ->
       """SELECT l_returnflag, count(*) AS n_rows,
         | min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
@@ -1722,88 +1598,6 @@ object SparkEntry {
         | CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS BIGINT) AS rank
         |FROM c ORDER BY n DESC, token ASC LIMIT 20""".stripMargin,
 
-    "q_pipeline_documents" ->
-      s"""WITH v AS (
-         | SELECT * FROM $docsXSql
-         | WHERE (${docViolationCountSql(Set("error", "fatal"))}) = 0),
-         |d AS (
-         | SELECT * FROM (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-         |    ORDER BY doc_id) AS rn
-         |  FROM v)
-         | WHERE rn = 1),
-         |q AS (
-         | SELECT * FROM (
-         |  SELECT *,
-         |   0.4 * (CASE WHEN length(text) > 0
-         |          THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g')) / CAST(length(text) AS DOUBLE)
-         |          ELSE 0 END)
-         |   + 0.3 * least(1.0, (CASE WHEN ntok > 0 THEN nstop / CAST(ntok AS DOUBLE) ELSE 0 END) * 4)
-         |   + 0.3 * least(1.0, ntok / 50.0) AS quality
-         |  FROM (SELECT *,
-         |         CASE WHEN length(trim(text)) = 0 THEN 0
-         |          ELSE len(regexp_extract_all(trim(text), '\\S+')) END AS ntok,
-         |         len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|it|with|a)\\b')) AS nstop
-         |        FROM d))
-         | WHERE quality >= 0.5),
-         |s AS (
-         | SELECT * FROM q
-         | WHERE CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000
-         |  < CASE lang WHEN 'en' THEN 500000 ELSE 1000000 END),
-         |p AS (
-         | SELECT pack_bucket, CAST(floor((cum - w) / 2000.0) AS BIGINT) AS pack_id
-         | FROM (
-         |  SELECT pack_bucket, w,
-         |   sum(w) OVER (PARTITION BY pack_bucket ORDER BY doc_id
-         |                ROWS UNBOUNDED PRECEDING) AS cum
-         |  FROM (SELECT doc_id, length(text) AS w,
-         |         CAST(CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000 % 16 AS INT) AS pack_bucket
-         |        FROM s WHERE doc_id IS NOT NULL AND length(text) > 0)))
-         |SELECT '0_input' AS stage, count(*) AS n_rows FROM documents
-         |UNION ALL SELECT '1_validated', count(*) FROM v
-         |UNION ALL SELECT '2_deduped', count(*) FROM d
-         |UNION ALL SELECT '3_quality', count(*) FROM q
-         |UNION ALL SELECT '4_sampled', count(*) FROM s
-         | WHERE doc_id IS NOT NULL AND length(text) > 0
-         |UNION ALL SELECT '5_packs', count(*) FROM (SELECT DISTINCT pack_bucket, pack_id FROM p)""".stripMargin,
-    "q_pack_documents" ->
-      """WITH nb AS (
-        | SELECT CAST(least(greatest(CAST(ceil(count(*) / 100.0) AS BIGINT), 1), 65536) AS INT) AS n
-        | FROM documents
-        | WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0),
-        |b AS (
-        | SELECT doc_id, n_chars,
-        |  CAST(CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000 % (SELECT n FROM nb) AS INT) AS pack_bucket
-        | FROM documents
-        | WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0),
-        |c AS (
-        | SELECT doc_id, n_chars, pack_bucket,
-        |  sum(n_chars) OVER (PARTITION BY pack_bucket ORDER BY doc_id
-        |                     ROWS UNBOUNDED PRECEDING) AS cum
-        | FROM b)
-        |SELECT pack_bucket,
-        | CAST(floor((cum - n_chars) / 2000.0) AS BIGINT) AS pack_id,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_weight
-        |FROM c GROUP BY 1, 2""".stripMargin,
-    "q_sample_documents" ->
-      """SELECT lang, count(*) AS n_kept FROM (
-        | SELECT lang,
-        |  CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000 AS b
-        | FROM documents)
-        |WHERE b < (CASE lang WHEN 'en' THEN 250000 WHEN 'zh' THEN 500000
-        |           ELSE 1000000 END)
-        |GROUP BY lang""".stripMargin,
-    // Identical semantics (and oracle) on the broadcast-join rate path.
-    "q_sample_joined_documents" ->
-      """SELECT lang, count(*) AS n_kept FROM (
-        | SELECT lang,
-        |  CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000 AS b
-        | FROM documents)
-        |WHERE b < (CASE lang WHEN 'en' THEN 250000 WHEN 'zh' THEN 500000
-        |           ELSE 1000000 END)
-        |GROUP BY lang""".stripMargin,
-
     // region_hint is NULL (→ defaulted) when the doc is oversized OR
     // lang itself is null — coalesce over the full derivation, not the
     // sf0.01 data quirk of lang having no nulls.
@@ -1865,14 +1659,6 @@ object SparkEntry {
         |FROM $docsXSql WHERE NOT coalesce(doc_id % 29 = 0, FALSE)
         | AND size_tag IS NOT NULL
         | AND TRY_CAST(size_tag AS BIGINT) IS NULL""".stripMargin,
-
-    "q_reservoir_documents" ->
-      """SELECT lang, doc_id FROM (
-        | SELECT lang, doc_id, row_number() OVER (PARTITION BY lang ORDER BY
-        |   CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000,
-        |   doc_id) AS rk
-        | FROM documents)
-        |WHERE rk <= 7""".stripMargin,
 
     "q_induced_validate_documents" -> inducedValidateSql,
     "q_schema_merge_documents" -> schemaMergeSql,
@@ -1987,59 +1773,6 @@ object SparkEntry {
            | CAST(max(length(CAST($f AS VARCHAR))) AS BIGINT) AS max_len
            |FROM documents""".stripMargin
       }.mkString("\nUNION ALL\n"),
-
-    "q_temperature_documents" ->
-      """WITH counts AS (SELECT lang, count(*) AS n FROM documents
-        |               WHERE lang IS NOT NULL GROUP BY 1),
-        |thr AS (SELECT lang,
-        |  round(pow(CAST((SELECT min(n) FROM counts) AS DOUBLE) / n, 0.5)
-        |        * 1000000) AS t
-        | FROM counts)
-        |SELECT d.lang, count(*) AS n_kept
-        |FROM documents d LEFT JOIN thr USING (lang)
-        |WHERE CAST('0x' || substring(md5(coalesce(CAST(d.doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000
-        |      < coalesce(t, 1000000)
-        |GROUP BY d.lang""".stripMargin,
-    // Identical semantics (and oracle) with the rates derived fully
-    // in-plan and broadcast-joined (temperatureSampleDistributed).
-    "q_temperature_joined_documents" ->
-      """WITH counts AS (SELECT lang, count(*) AS n FROM documents
-        |               WHERE lang IS NOT NULL GROUP BY 1),
-        |thr AS (SELECT lang,
-        |  round(pow(CAST((SELECT min(n) FROM counts) AS DOUBLE) / n, 0.5)
-        |        * 1000000) AS t
-        | FROM counts)
-        |SELECT d.lang, count(*) AS n_kept
-        |FROM documents d LEFT JOIN thr USING (lang)
-        |WHERE CAST('0x' || substring(md5(coalesce(CAST(d.doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000
-        |      < coalesce(t, 1000000)
-        |GROUP BY d.lang""".stripMargin,
-
-    "q_budget_documents" ->
-      """WITH f AS (
-        | SELECT doc_id,
-        |  length(text) AS n_chars_txt,
-        |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-        |  CASE WHEN text IS NULL THEN NULL
-        |   WHEN length(trim(text)) = 0 THEN 0
-        |   ELSE len(regexp_extract_all(trim(text), '\S+')) END AS n_tokens,
-        |  len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|it|with|a)\b')) AS n_stop
-        | FROM documents),
-        |r AS (
-        | SELECT doc_id, n_tokens,
-        |  round(0.4 * (CASE WHEN n_chars_txt > 0 THEN n_alpha / CAST(n_chars_txt AS DOUBLE) ELSE 0 END)
-        |   + 0.3 * least(1.0, (CASE WHEN n_tokens > 0 THEN n_stop / CAST(n_tokens AS DOUBLE) ELSE 0 END) * 4)
-        |   + 0.3 * least(1.0, n_tokens / 50.0), 6) AS quality_r
-        | FROM f),
-        |sel AS (
-        | SELECT r.doc_id,
-        |  sum(r.n_tokens) OVER (ORDER BY r.quality_r DESC,
-        |   CAST('0x' || substring(md5(coalesce(CAST(r.doc_id AS VARCHAR), '__NULL_KEY__') || ':42'), 1, 8) AS UBIGINT) % 1000000,
-        |   r.doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        | FROM r
-        | WHERE r.quality_r IS NOT NULL AND r.n_tokens IS NOT NULL)
-        |SELECT s.doc_id, d.lang FROM sel s JOIN documents d USING (doc_id)
-        |WHERE s.cum <= 20000""".stripMargin,
 
     // --- deduplication -------------------------------------------------
     "q_dedup_exact_documents" ->

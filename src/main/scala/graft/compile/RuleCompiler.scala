@@ -3,7 +3,7 @@ package graft.compile
 import graft.schema.{FieldSpec, Schema, Severity}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Compiles a declarative [[graft.schema.Schema]] into Catalyst `Column`
   * expressions — pure built-in functions, zero UDFs, so every rule stays
@@ -222,7 +222,17 @@ object RuleCompiler {
 
   /** Array of all (nullable) violation structs for a row. */
   def violationsArray(schema: Schema): Column =
-    array(violationStructs(schema): _*)
+    structArray(violationStructs(schema))
+
+  /** `array(structs)`, typed even when there are none: a bare `array()`
+    * is `array<void>`, whose fields cannot be extracted, so a schema
+    * with no rules gets an empty array of the violation struct type
+    * `(field, rule, value, severity)` (every rule reports a string).
+    */
+  def structArray(structs: Seq[Column]): Column =
+    if (structs.nonEmpty) array(structs: _*)
+    else array().cast(ArrayType(StructType(
+      Seq("field", "rule", "value", "severity").map(StructField(_, StringType)))))
 
   /** Number of failed rules for a row — plain integer arithmetic, fully
     * codegen'd, no array materialization.

@@ -111,25 +111,6 @@ object Checkpoint {
       committedParts: Seq[String]): org.apache.spark.sql.Column =
     !partitionKey(partitionCol).isin(committedParts.distinct: _*)
 
-  /** Input filter selecting exactly the rows of `pendingParts` (as
-    * produced by [[pending]], sentinel included) — ONE predicate, so a
-    * single Spark job processes every pending partition together
-    * (partition/predicate pruning at the scan; no driver-side
-    * per-partition loop). Shared by every resumable runner so the
-    * slice semantics cannot drift from the manifest's.
-    */
-  def partitionFilter(
-      partitionCol: String,
-      pendingParts: Seq[String]): org.apache.spark.sql.Column = {
-    val hasNull = pendingParts.contains(NullPartitionToken)
-    val concrete = pendingParts.filterNot(_ == NullPartitionToken)
-    val in =
-      if (concrete.nonEmpty)
-        col(partitionCol).cast("string").isin(concrete: _*)
-      else lit(false)
-    if (hasNull) in || col(partitionCol).isNull else in
-  }
-
   /** Append manifest rows — the commit point. Called only after the
     * partition's data writes succeeded.
     */

@@ -91,8 +91,7 @@ object StreamingValidator {
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Gap-based SESSION-window verdicts — the streaming mirror of
-    * [[graft.temporal.Temporal.sessionize]] for live pipelines: events
+  /** Gap-based SESSION-window verdicts for live pipelines: events
     * of one `partitionCol` value belong to a session while consecutive
     * gaps stay under `gapDuration`; the watermark closes sessions (in
     * append mode a session row is emitted once the watermark passes its
@@ -103,10 +102,7 @@ object StreamingValidator {
     *
     * Boundary semantics: Spark's `session_window` is end-EXCLUSIVE (a
     * session ends at lastEvent + gap, and an event exactly at the
-    * boundary starts a NEW session), while the batch
-    * `Temporal.sessionize` keeps an event at exactly `gapSeconds` in
-    * the SAME session (`gap > gapSeconds` splits). Identical everywhere
-    * except gaps exactly equal to the threshold.
+    * boundary starts a NEW session).
     */
   def sessionWindowedVerdicts(
       stream: DataFrame,

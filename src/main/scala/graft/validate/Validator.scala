@@ -393,7 +393,7 @@ object Validator {
           lit(r.severity).as("severity")))
     }
     exploded
-      .select(keys :+ explode(array(structs: _*)).as("v"): _*)
+      .select(keys :+ explode(RuleCompiler.structArray(structs)).as("v"): _*)
       .where(col("v").isNotNull)
       .select(keys :+ col("v.field") :+ col("v.rule") :+ col("v.value")
         :+ col("v.severity"): _*)

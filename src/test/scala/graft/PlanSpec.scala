@@ -93,27 +93,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"))
   }
 
-  test("stratified join path: plan size is O(1) in the rate-table cardinality") {
-    import graft.sample.Sampling
-    // The rate table is broadcast DATA, not plan literals: growing it
-    // 100× must not change the optimized plan's node count (the
-    // when-chain path grows one CASE arm per stratum — the IVF-literal
-    // failure class the join path exists to avoid).
-    val df = docs.withColumn("g", concat(lit("s"), pmod(col("doc_id"), lit(997L))))
-    def nodes(nStrata: Int): Int = {
-      val rates = (0 until nStrata).map(i => s"s$i" -> 0.5).toMap
-      Sampling.stratified(df, "doc_id", "g", rates, defaultRate = 1.0,
-          seed = 42L, whenChainMaxStrata = 0)
-        .queryExecution.optimizedPlan.collect { case p => p }.size
-    }
-    assert(nodes(200) === nodes(20000))
-    // and the small-map when-chain path stays join-free (pure filter)
-    val chain = Sampling.stratified(docs, "doc_id", "lang",
-      Map("en" -> 0.5), defaultRate = 1.0)
-    assert(shuffles(chain).isEmpty)
-    assert(!physical(chain).toString.contains("Join"))
-  }
-
   test("co-bucketed tables sort-merge join with zero exchanges and zero sorts") {
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-bucket").toString
     // repartition by the bucket key first → ONE file per bucket, which

@@ -673,4 +673,28 @@ class ValidatorSpec extends SparkSpec {
     assert(twice.columns.toSeq === once.columns.toSeq)
     assert(twice.exceptAll(once).isEmpty && once.exceptAll(twice).isEmpty)
   }
+
+  test("a schema with no rules: zero violations, and every partition passes") {
+    // Cerberus accepts a field with an empty rule set (`{'repo': {}}`).
+    val df = Seq((1L, "r1", "py"), (2L, null.asInstanceOf[String], "py"), (3L, "r3", "go"))
+      .toDF("id", "repo", "lang")
+    val empty = Schema.of("repo" -> FieldSpec())
+    assert(Validator.violations(df, empty, Seq("id")).count() === 0L)
+
+    val arr = Seq((1L, Seq(("a", 1L)))).toDF("id", "accounts")
+      .select($"id", $"accounts".cast("array<struct<name:string,n:bigint>>"))
+    assert(Validator.elementViolations(arr, Schema.of("name" -> FieldSpec()),
+      "accounts", Seq("id")).count() === 0L)
+
+    val out = java.nio.file.Files.createTempDirectory("graft-empty-schema").toString
+    val r = graft.resume.ValidationRun.run(df, empty, "lang", Seq("id"), out)
+    assert(r.pending.toSet === Set("py", "go"))
+    assert(r.verdicts.select($"lang", $"n_rows", $"n_violations", $"pass")
+      .as[(String, Long, Long, Boolean)].collect().toSet ===
+      Set(("py", 2L, 0L, true), ("go", 1L, 0L, true)))
+    assert(graft.resume.Checkpoint.processed(spark, out)
+      .select($"partition", $"n_violations", $"pass")
+      .as[(String, Long, Boolean)].collect().toSet ===
+      Set(("py", 0L, true), ("go", 0L, true)))
+  }
 }

@@ -24,9 +24,7 @@ look for, per the scale-design rules in SURVEY.md §4 / README:
   **no Exchange** (zero shuffle);
 - referential integrity uses `BroadcastHashJoin … LeftAnti`;
 - aggregates show `partial_*` → Exchange → `merge_*`/final (map-side
-  combine);
-- top-k windows show `WindowGroupLimit` (per-partition partial top-k
-  before the shuffle).
+  combine).
 """
 
 DETAIL_HEADS = re.compile(
