@@ -2,6 +2,7 @@ package graft
 
 import graft.data.SynthGen
 import graft.refint.RefIntegrity
+import graft.resume.ValidationRun
 import graft.unique.Uniqueness
 import graft.validate.Validator
 import graft.verdict.Verdict
@@ -14,8 +15,9 @@ import org.apache.spark.sql.functions._
   * = (throughput_4N / throughput_N) / 4, plus a result-equality
   * checksum across levels (scaling must not change answers).
   *
-  * {{{ sbt "runMain graft.ScalingBench [rows] [n] [runs]" }}}
-  * Defaults: rows=2000000, n=8 (so 4N=32), runs=3 (after 1 warm-up).
+  * {{{ sbt "runMain graft.ScalingBench [rows] [n] [runs] [job] [mode]" }}}
+  * Defaults: rows=2000000, n=8 (so 4N=32), runs=3 (after 1 warm-up),
+  * job=full, mode=block.
   * Prints one JSON line; full protocol + measured numbers live in
   * BASELINE.md.
   */
@@ -40,18 +42,21 @@ object ScalingBench {
     s
   }
 
-  /** The measured job: full rule validation + per-lang verdicts +
-    * uniqueness + referential integrity over the code-file table.
+  /** The measured job over the code-file table. `full` is a
+    * `ValidationRun.run` into the fresh directory `out` (violations
+    * write, verdicts and manifest commit) + uniqueness + referential
+    * integrity; `verdict` is the per-lang verdict aggregate alone.
     * Returns (violations, badRows, dupRows, orphans) — the checksum.
     */
   private def pipeline(spark: SparkSession, inputPath: String, dimPath: String,
-      job: String, scope: graft.util.CacheScope): (Long, Long, Long, Long) = {
+      job: String, scope: graft.util.CacheScope, out: String): (Long, Long, Long, Long) = {
     val df = spark.read.parquet(inputPath)
     val dim = spark.read.parquet(dimPath)
+    val verdictTotals = (v: DataFrame) => v.agg(sum(col("n_violations")), sum(col("n_bad_rows"))).head()
     val verdicts =
-      if (job == "full" || job == "verdict")
-        Verdict.compute(df, CodeFiles.schema, "lang")
-          .agg(sum(col("n_violations")), sum(col("n_bad_rows"))).head()
+      if (job == "full")
+        verdictTotals(ValidationRun.run(df, CodeFiles.schema, "lang", CodeFiles.keyCols, out).verdicts)
+      else if (job == "verdict") verdictTotals(Verdict.compute(df, CodeFiles.schema, "lang"))
       else null
     val uniq =
       if (job == "full" || job == "unique")
@@ -101,6 +106,20 @@ object ScalingBench {
       s.stop()
     }
 
+    // One timed pipeline run, writing into a fresh out dir that is
+    // deleted after the timer stops. Each run owns a CacheScope,
+    // released after its action completes — deterministic unpersist of
+    // the miners' internal frames between runs (no session-wide
+    // clearCache sledgehammer).
+    def timed(s: SparkSession): (Double, (Long, Long, Long, Long)) = {
+      val out = new org.apache.hadoop.fs.Path(s"/tmp/graft-scaling/out-${java.util.UUID.randomUUID()}")
+      try {
+        val t0 = System.nanoTime()
+        val c = graft.util.CacheScope.withScope(sc => pipeline(s, input, dimP, job, sc, out.toString))
+        ((System.nanoTime() - t0) / 1e9, c)
+      } finally out.getFileSystem(s.sparkContext.hadoopConfiguration).delete(out, true)
+    }
+
     // Estimator: MIN across runs, not median. This sandbox is a shared
     // host with external load spikes (observed 1-min load 0.2 → 13.8
     // with nothing of ours running); interference only ever ADDS time,
@@ -108,17 +127,11 @@ object ScalingBench {
     // are printed for transparency.
     def measure(cores: Int): (Double, Seq[Double], (Long, Long, Long, Long)) = {
       val s = session(cores)
-      // Each run owns a CacheScope, released after its action completes —
-      // deterministic unpersist of the miners' internal frames between
-      // runs (no session-wide clearCache sledgehammer).
-      val check = graft.util.CacheScope.withScope { sc =>
-        pipeline(s, input, dimP, job, sc) // warm-up (JIT + codegen cache)
-      }
+      val check = timed(s)._2 // warm-up (JIT + codegen cache)
       val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        val c = graft.util.CacheScope.withScope(sc => pipeline(s, input, dimP, job, sc))
+        val (t, c) = timed(s)
         require(c == check, s"result drift across runs at $cores cores: $c vs $check")
-        (System.nanoTime() - t0) / 1e9
+        t
       }
       s.stop()
       (times.min, times, check)
@@ -133,11 +146,7 @@ object ScalingBench {
     // conservative direction for efficiency).
     def sampleOnce(cores: Int): (Double, (Long, Long, Long, Long)) = {
       val s = session(cores)
-      val t0 = System.nanoTime()
-      val c = graft.util.CacheScope.withScope(sc => pipeline(s, input, dimP, job, sc))
-      val t = (System.nanoTime() - t0) / 1e9
-      s.stop()
-      (t, c)
+      try timed(s) finally s.stop()
     }
 
     val mode = args.lift(4).getOrElse("block")

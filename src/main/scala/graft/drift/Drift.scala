@@ -1,7 +1,7 @@
 package graft.drift
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift detection per partition (north rule: KS/PSI per
@@ -11,6 +11,12 @@ import org.apache.spark.sql.functions._
   * UDAF (SURVEY.md §2g): histograms shrink the data to
   * O(groups × nBins) rows before any join or window runs, so the only
   * full-data pass is one map-side-combined groupBy per side.
+  *
+  * Group keys match null-safely: a NULL group is a group like any other
+  * and is compared with the NULL group of the other side. A group with
+  * no (non-null) values on one side has no distribution to compare: its
+  * row carries its counts, with a zero count for the empty side, and
+  * null `psi` and `ks` (`tv` for [[categoricalCompare]]).
   */
 object Drift {
 
@@ -95,7 +101,7 @@ object Drift {
       .withColumnRenamed("n", "n_cur")
     val b = binsByEdges(base, valueCol, groupCols, edges)
       .withColumnRenamed("n", "n_base")
-    scoreBins(c.join(b, groupCols :+ "bin", "full_outer"), groupCols, eps)
+    scoreBins(alignCounts(c, b, groupCols :+ "bin"), groupCols, eps)
   }
 
   /** [[compare]] with AUTO-derived binning: edges come from the
@@ -146,7 +152,7 @@ object Drift {
     val c = binsByEdges(cur, valueCol, groupCols, edges)
       .withColumnRenamed("n", "n_cur")
     val b = baselineSketch.withColumnRenamed("n", "n_base")
-    scoreBins(c.join(b, groupCols :+ "bin", "full_outer"), groupCols, eps)
+    scoreBins(alignCounts(c, b, groupCols :+ "bin"), groupCols, eps)
   }
 
   /** PSI/KS of `cur` against an already-materialized baseline sketch
@@ -165,7 +171,7 @@ object Drift {
     val c = bins(cur, valueCol, groupCols, nBins, lo, hi)
       .withColumnRenamed("n", "n_cur")
     val b = baselineSketch.withColumnRenamed("n", "n_base")
-    scoreBins(c.join(b, groupCols :+ "bin", "full_outer"), groupCols, eps)
+    scoreBins(alignCounts(c, b, groupCols :+ "bin"), groupCols, eps)
   }
 
   /** PSI + KS per group between `cur` and `base` over a shared binning.
@@ -188,7 +194,7 @@ object Drift {
       .withColumnRenamed("n", "n_cur")
     val b = bins(base, valueCol, groupCols, nBins, lo, hi)
       .withColumnRenamed("n", "n_base")
-    scoreBins(c.join(b, groupCols :+ "bin", "full_outer"), groupCols, eps)
+    scoreBins(alignCounts(c, b, groupCols :+ "bin"), groupCols, eps)
   }
 
   /** Drift of each group's distribution against the GLOBAL distribution
@@ -215,10 +221,7 @@ object Drift {
     // O(groups × nBins) rows, built from already-aggregated frames.
     val groups = c.select(groupCols.map(col): _*).distinct()
     val grid = groups.crossJoin(broadcast(b))
-    val joined = grid
-      .join(c, groupCols :+ "bin", "left_outer")
-      .na.fill(0L, Seq("n_cur"))
-    scoreBins(joined, groupCols, eps)
+    scoreBins(alignCounts(c, grid, groupCols :+ "bin"), groupCols, eps)
   }
 
   /** Categorical drift: PSI + total-variation distance of a CATEGORY
@@ -240,13 +243,9 @@ object Drift {
       df.where(col(valueCol).isNotNull)
         .groupBy((groupCols.map(col) :+ col(valueCol).cast("string").as("category")): _*)
         .agg(count(lit(1)).as(as))
-    val joined = counts(cur, "n_cur")
-      .join(counts(base, "n_base"), groupCols :+ "category", "full_outer")
-      .na.fill(0L, Seq("n_cur", "n_base"))
+    val joined = alignCounts(counts(cur, "n_cur"), counts(base, "n_base"), groupCols :+ "category")
     val g = groupCols.map(col)
-    val wg = Window.partitionBy(g: _*)
-    val p = col("n_cur") / sum(col("n_cur")).over(wg)
-    val q = col("n_base") / sum(col("n_base")).over(wg)
+    val (p, q) = fractions(Window.partitionBy(g: _*))
     val pc = greatest(p, lit(eps))
     val qc = greatest(q, lit(eps))
     joined
@@ -257,9 +256,31 @@ object Drift {
       .agg(
         sum(col("n_cur")).as("n_cur"),
         sum(col("n_base")).as("n_base"),
-        round(sum(col("psi_term")), 6).as("psi"),
-        round(sum(abs(col("p") - col("q"))) / 2d, 6).as("tv"))
+        whenBothSides(round(sum(col("psi_term")), 6)).as("psi"),
+        whenBothSides(round(sum(abs(col("p") - col("q"))) / 2d, 6)).as("tv"))
   }
+
+  /** One row per `keys` value on either side with its `n_cur` and
+    * `n_base` (0 where that side has none): the two count frames
+    * unioned and summed per key. Grouping matches NULL keys with each
+    * other, which a `using` join's `=` never does.
+    */
+  private def alignCounts(cur: DataFrame, base: DataFrame, keys: Seq[String]): DataFrame =
+    cur.select(keys.map(col) :+ col("n_cur") :+ lit(0L).as("n_base"): _*)
+      .unionByName(base.select(keys.map(col) :+ lit(0L).as("n_cur") :+ col("n_base"): _*))
+      .groupBy(keys.map(col): _*)
+      .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
+
+  /** Each row's share `p` of its group's `n_cur` and `q` of its `n_base`;
+    * null for a side with no rows in the group (no division by zero).
+    */
+  private def fractions(group: WindowSpec): (Column, Column) =
+    (try_divide(col("n_cur"), sum(col("n_cur")).over(group)),
+      try_divide(col("n_base"), sum(col("n_base")).over(group)))
+
+  /** `score` for a group with rows on both sides, null otherwise. */
+  private def whenBothSides(score: Column): Column =
+    when(sum(col("n_cur")) > 0 && sum(col("n_base")) > 0, score)
 
   /** Shared scoring over joined per-bin counts. Operates on
     * O(groups × nBins) rows — window use here is cheap by construction.
@@ -275,13 +296,11 @@ object Drift {
       .orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    val filled = joined.na.fill(0L, Seq("n_cur", "n_base"))
-    val p = col("n_cur") / sum(col("n_cur")).over(wg)
-    val q = col("n_base") / sum(col("n_base")).over(wg)
+    val (p, q) = fractions(wg)
     val pc = greatest(p, lit(eps))
     val qc = greatest(q, lit(eps))
 
-    filled
+    joined
       .withColumn("p", p)
       .withColumn("q", q)
       .withColumn("psi_term", (pc - qc) * log(pc / qc))
@@ -291,8 +310,8 @@ object Drift {
       .agg(
         sum(col("n_cur")).as("n_cur"),
         sum(col("n_base")).as("n_base"),
-        round(sum(col("psi_term")), 6).as("psi"),
-        round(max(abs(col("cdf_p") - col("cdf_q"))), 6).as("ks")
+        whenBothSides(round(sum(col("psi_term")), 6)).as("psi"),
+        whenBothSides(round(max(abs(col("cdf_p") - col("cdf_q"))), 6)).as("ks")
       )
   }
 }

@@ -212,18 +212,33 @@ object IndexStore {
     appendCounted(sigs, s"$path/data")
   }
 
-  /** Write `rows` via append and report how many landed — the count
-    * runs BEFORE the write (on a cached frame) so the data is read
-    * once, not twice.
+  /** Write `rows` and report how many landed — the count runs BEFORE
+    * the write (on a cached frame) so the data is read once, not twice.
+    * With `sliceCol` the rows are one `<sliceCol>=<id>` partition and
+    * replace that partition if it exists (dynamic overwrite: a retried
+    * slice is rewritten, never counted twice); otherwise they append.
     */
-  private def appendCounted(rows: DataFrame, dataPath: String): Long = {
+  private def appendCounted(rows: DataFrame, dataPath: String, sliceCol: Option[String] = None): Long = {
     rows.persist()
     try {
       val n = rows.count()
-      if (n > 0) rows.write.mode(SaveMode.Append).parquet(dataPath)
+      if (n > 0) sliceCol match {
+        case None => rows.write.mode(SaveMode.Append).parquet(dataPath)
+        case Some(c) => rows.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic").partitionBy(c).parquet(dataPath)
+      }
       n
     } finally rows.unpersist()
   }
+
+  /** A slice id lands (and is replaced) as the literal directory
+    * `<column>=<id>`: path-escaping characters would silently
+    * desynchronize the write and replace paths, so only
+    * partition-path-safe ids are accepted.
+    */
+  private def requireSliceId(id: String, what: String): Unit =
+    require(id.nonEmpty && id.matches("[A-Za-z0-9._-]+"),
+      s"$what '$id' must match [A-Za-z0-9._-]+ (it names a partition directory)")
 
   // -------------------------------------------------------------------
   // Drift baseline sketch (north rule: "KS/PSI against a baseline
@@ -233,7 +248,9 @@ object IndexStore {
   /** Derive auto-binning edges from the baseline's quantiles, bin it
     * once, and persist sketch + edges. Every later snapshot scores
     * against O(groups × bins) stored rows — the baseline corpus is
-    * never rescanned (at 100 TB the baseline scan IS the cost).
+    * never rescanned (at 100 TB the baseline scan IS the cost). The
+    * built bins are the `slice_id=build` partition of `data/`; a
+    * rebuild replaces every slice.
     */
   def buildDriftBaseline(
       base: DataFrame,
@@ -242,18 +259,23 @@ object IndexStore {
       path: String,
       nBins: Int = 10,
       exact: Boolean = false): Unit = {
+    require(!groupCols.contains(SliceCol), s"'$SliceCol' names the baseline's slices, not a group column")
     val edges = graft.drift.Drift.quantileEdges(base, valueCol, nBins, exact)
     graft.drift.Drift.binsByEdges(base, valueCol, groupCols, edges)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
+      .withColumn(SliceCol, lit(BuildSlice))
+      .write.mode(SaveMode.Overwrite).partitionBy(SliceCol).parquet(s"$path/data")
     writeMeta(base.sparkSession, path,
       DriftMeta("drift", valueCol, groupCols.mkString(","), edges.toSeq))(
       Encoders.product[DriftMeta])
   }
 
+  private val SliceCol = "slice_id"
+  private val BuildSlice = "build"
+
   /** Stored sketch frame + build parameters (incl. the exact edges).
-    * Counts are re-summed per (group, bin) on load: appends write each
-    * slice's bins as extra rows (see [[appendDriftBaseline]]), and the
-    * aggregation is O(stored rows) — bins × groups × slices, tiny.
+    * Counts are re-summed per (group, bin) over the slices on load
+    * (see [[appendDriftBaseline]]); the aggregation is O(stored rows) —
+    * bins × groups × slices, tiny.
     */
   def loadDriftBaseline(spark: SparkSession, path: String): (DataFrame, DriftMeta) = {
     val meta = readMeta[DriftMeta](spark, path, "drift")(Encoders.product[DriftMeta])
@@ -280,18 +302,24 @@ object IndexStore {
 
   /** Fold a new baseline slice into the stored sketch: bin by the
     * STORED edges (binning never changes after build — comparability
-    * beats re-quantiling) and APPEND the slice's bin rows; the load
-    * path re-sums per (group, bin). Append-only, so a crashed append
-    * never corrupts the existing sketch.
+    * beats re-quantiling) and write the slice's bin rows as the
+    * `slice_id=<sliceId>` partition; the load path re-sums per
+    * (group, bin). Idempotent per `sliceId`: a retry (after a crash
+    * that followed a completed append, or a replay) replaces that
+    * slice's rows instead of counting them again. Returns rows written.
+    * A baseline written before slices existed has its bins at the root
+    * of `data/`; rebuild it before appending.
     */
-  def appendDriftBaseline(slice: DataFrame, path: String): Long = {
+  def appendDriftBaseline(slice: DataFrame, path: String, sliceId: String): Long = {
+    requireSliceId(sliceId, "sliceId")
+    require(sliceId != BuildSlice, s"sliceId '$BuildSlice' names the built baseline")
     val meta = readMeta[DriftMeta](slice.sparkSession, path, "drift")(
       Encoders.product[DriftMeta])
     val groupCols = meta.groupCols.split(",").toSeq.filter(_.nonEmpty)
     appendCounted(
-      graft.drift.Drift.binsByEdges(
-        slice, meta.valueCol, groupCols, meta.edges.toArray),
-      s"$path/data")
+      graft.drift.Drift.binsByEdges(slice, meta.valueCol, groupCols, meta.edges.toArray)
+        .withColumn(SliceCol, lit(sliceId)),
+      s"$path/data", Some(SliceCol))
   }
 
   // -------------------------------------------------------------------
@@ -415,12 +443,7 @@ object IndexStore {
       snapshotId: String,
       approxDistinct: Boolean = false): Long = {
     val spark = df.sparkSession
-    // Partition-path-safe ids only: the snapshot lands (and is pruned)
-    // as the literal directory `snapshot_id=<id>` — path-escaping
-    // characters would silently desynchronize write and prune paths.
-    require(snapshotId.nonEmpty && snapshotId.matches("[A-Za-z0-9._-]+"),
-      s"snapshotId '$snapshotId' must match [A-Za-z0-9._-]+ " +
-        "(it names a partition directory)")
+    requireSliceId(snapshotId, "snapshotId")
     val enc = Encoders.product[ExpectationsMeta]
     val seq =
       if (!exists(spark, s"$path/meta")) {
@@ -444,17 +467,7 @@ object IndexStore {
       .evaluate(df, expects, groupCols, approxDistinct)
       .withColumn("seq", lit(seq))
       .withColumn("snapshot_id", lit(snapshotId))
-    rows.persist()
-    try {
-      val n = rows.count()
-      if (n > 0)
-        rows.write
-          .mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("snapshot_id")
-          .parquet(s"$path/data")
-      n
-    } finally rows.unpersist()
+    appendCounted(rows, s"$path/data", Some("snapshot_id"))
   }
 
   /** The LATEST stored snapshot's observation rows (max `seq`) + meta.

@@ -1,7 +1,13 @@
 package graft.resume
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Checkpoint/resume manifest — the engine's commit protocol.
   *
@@ -17,10 +23,17 @@ import org.apache.spark.sql.functions._
   * explicit snapshot manifest — no Iceberg jars in this sandbox):
   * {{{
   *   outDir/violations/<partitionCol>=<v>/…   (dynamic-overwrite parquet)
-  *   outDir/verdicts/…                        (append, keyed by run_id)
-  *   outDir/manifest/…                        (append; one row per
-  *                                             committed partition)
+  *   outDir/verdicts/part-….parquet           (one file per run)
+  *   outDir/manifest/part-….parquet           (one file per commit; one
+  *                                             row per committed partition)
   * }}}
+  *
+  * The verdict and manifest rows are few and already on the driver, so
+  * the driver writes each batch of them as ONE Parquet file with Spark's
+  * own writer ([[writeRows]]) — no Spark job, no `_temporary` directory,
+  * no `_SUCCESS` file. The file is written under a hidden `.part-…` name,
+  * which readers skip, and published by one rename: a manifest commit is
+  * that single rename, so a reader sees all of a commit's rows or none.
   *
   * Scale notes: the manifest is O(partitions) rows and is never joined
   * against the data. [[ValidationRun]] collects its committed keys on
@@ -42,22 +55,23 @@ object Checkpoint {
 
   def manifestPath(outDir: String): String = s"$outDir/manifest"
 
-  /** All committed partition values (empty frame when no manifest yet). */
-  def processed(spark: SparkSession, outDir: String): DataFrame = {
-    val path = manifestPath(outDir)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    if (hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath))
-      spark.read.schema(manifestSchema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(manifestSchema))
+  private def hasManifest(spark: SparkSession, outDir: String): Boolean = {
+    val path = new Path(manifestPath(outDir))
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
+  /** All committed partition values (empty frame when no manifest yet). */
+  def processed(spark: SparkSession, outDir: String): DataFrame =
+    if (hasManifest(spark, outDir)) spark.read.schema(manifestSchema).parquet(manifestPath(outDir))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(manifestSchema))
+
   /** The `partition` value of every manifest row, collected on the
-    * driver (one entry per committed row; empty when no manifest yet).
+    * driver (one entry per committed row). Without a manifest this is
+    * `Nil` and reads nothing: a fresh run starts no job for it.
     */
   def committed(spark: SparkSession, outDir: String): Seq[String] =
-    processed(spark, outDir).select(col("partition")).collect().map(_.getString(0)).toSeq
+    if (!hasManifest(spark, outDir)) Nil
+    else processed(spark, outDir).select(col("partition")).collect().map(_.getString(0)).toSeq
 
   /** Partition values present in the input but not yet committed —
     * left_anti against the (tiny, broadcast) manifest.
@@ -93,7 +107,6 @@ object Checkpoint {
   def partitionValue(key: String, dataType: org.apache.spark.sql.types.DataType): Any =
     if (key == NullPartitionToken) null
     else {
-      import org.apache.spark.sql.catalyst.CatalystTypeConverters
       import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
       val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
       CatalystTypeConverters.convertToScala(
@@ -111,9 +124,40 @@ object Checkpoint {
       committedParts: Seq[String]): org.apache.spark.sql.Column =
     !partitionKey(partitionCol).isin(committedParts.distinct: _*)
 
-  /** Append manifest rows — the commit point. Called only after the
-    * partition's data writes succeeded.
+  /** Append manifest rows (of [[manifestSchema]]) — the commit point,
+    * one rename. Called only after the partitions' data writes succeeded.
+    */
+  def commit(spark: SparkSession, outDir: String, entries: Seq[Row]): Unit =
+    writeRows(spark, manifestPath(outDir), StructType.fromDDL(manifestSchema), entries)
+
+  /** [[commit]] of a frame's rows, collected on the driver: the entries
+    * are O(partitions) rows.
     */
   def commit(spark: SparkSession, outDir: String, entries: DataFrame): Unit =
-    entries.write.mode(SaveMode.Append).parquet(manifestPath(outDir))
+    writeRows(spark, manifestPath(outDir), entries.schema, entries.collect().toSeq)
+
+  /** Add `rows` (of `schema`) to the Parquet table at `dir` as ONE new
+    * file, written on the driver by Spark's own Parquet writer — the
+    * codec, footer metadata and type mapping of `df.write.parquet` —
+    * with no Spark job. The file is written under a hidden temp name,
+    * which readers skip, and published by one rename; a crash before
+    * the rename leaves only that hidden file behind.
+    */
+  def writeRows(spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit = {
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+    val job = Job.getInstance(conf)
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}"
+    val (tmp, target) = (new Path(dir, s".$name"), new Path(dir, name))
+    val writer = factory.newInstance(tmp.toString, schema, task)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    if (!target.getFileSystem(job.getConfiguration).rename(tmp, target))
+      throw new java.io.IOException(s"could not publish $tmp as $target")
+  }
 }

@@ -6,25 +6,26 @@ import graft.validate.Validator
 import graft.verdict.Verdict
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** End-to-end resumable validation run: violations + per-partition
   * verdicts + lineage metrics, committed per partition via
   * [[Checkpoint]].
   *
-  * ONE Spark job reads the input: the violations write over every
-  * uncommitted partition together (the complement of the manifest's
-  * committed keys — partition pruning at the scan when the input is
-  * partitioned by `partitionCol`; no driver-side per-partition loop,
-  * so wall-clock does not degrade with partition count). The per-
+  * A run into a fresh `outDir` is ONE Spark job: the violations write
+  * over every uncommitted partition together (the complement of the
+  * manifest's committed keys — partition pruning at the scan when the
+  * input is partitioned by `partitionCol`; no driver-side per-partition
+  * loop, so wall-clock does not degrade with partition count). The per-
   * partition verdict counts are observed in that same pass
   * ([[Verdict.observeCounts]]), so the pending partitions are the
-  * observed keys and the verdict and manifest rows are built on the
-  * driver from them. The manifest append AFTER the data writes is the
-  * single commit point for every partition in the batch
-  * (validate-all-then-commit, cf. reference import flow
-  * app/.../HomeViewModel.kt:168-175).
+  * observed keys, and the verdict and manifest rows are built on the
+  * driver from them and written there, one file each
+  * ([[Checkpoint.writeRows]]). The manifest file's rename AFTER the
+  * data writes is the single commit point for every partition in the
+  * batch (validate-all-then-commit, cf. reference import flow
+  * app/.../HomeViewModel.kt:168-175). A run into an `outDir` with a
+  * manifest reads it first: one more job.
   */
 object ValidationRun {
 
@@ -72,21 +73,20 @@ object ValidationRun {
     if (counts.isEmpty)
       return Report(runId, Nil, committed.size, Checkpoint.processed(spark, outDir))
 
-    // One file each: the rows are few and local.
     val field = df.schema(partitionCol)
-    val verdicts = Verdict.fromCounts(spark, field, runId,
+    val verdictSchema = Verdict.verdictSchema(field)
+    val verdicts = Verdict.verdictRows(runId,
       counts.map { case (k, c) => Checkpoint.partitionValue(k, field.dataType) -> c })
-    verdicts.coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
+    Checkpoint.writeRows(spark, s"$outDir/verdicts", verdictSchema, verdicts)
 
-    // … then the manifest append is the commit point.
+    // … then the manifest file is the commit point.
     val wallMs = System.currentTimeMillis() - t0
     val completedAt = System.currentTimeMillis()
-    val entries = counts.map { case (k, c) =>
+    Checkpoint.commit(spark, outDir, counts.map { case (k, c) =>
       Row(k, runId, c.nRows, c.nBadRows, c.nViolations, c.pass, wallMs, completedAt)
-    }
-    Checkpoint.commit(spark, outDir, spark.createDataFrame(entries.asJava,
-      StructType.fromDDL(Checkpoint.manifestSchema)).coalesce(1))
+    })
 
-    Report(runId, counts.map(_._1), committed.size, verdicts)
+    Report(runId, counts.map(_._1), committed.size,
+      spark.createDataFrame(verdicts.asJava, verdictSchema))
   }
 }

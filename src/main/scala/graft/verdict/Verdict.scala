@@ -3,12 +3,11 @@ package graft.verdict
 import graft.compile.RuleCompiler
 import graft.schema.{Schema, Severity}
 import graft.validate.Validator
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Per-partition pass/fail verdicts + metrics.
   *
@@ -98,10 +97,13 @@ object Verdict {
     def finish(b: Buf): Map[String, PartitionCounts] =
       b.map { case (k, a) => k -> PartitionCounts(a(0), a(1), a(2), a(3), a(4), a(5).toInt) }
 
-    def bufferEncoder: Encoder[Buf] = ExpressionEncoder[Buf]()
+    // Derived once: each derivation walks the types by Scala reflection.
+    val bufferEncoder: Encoder[Buf] = ExpressionEncoder[Buf]()
 
-    def outputEncoder: Encoder[Map[String, PartitionCounts]] =
+    val outputEncoder: Encoder[Map[String, PartitionCounts]] =
       ExpressionEncoder[Map[String, PartitionCounts]]()
+
+    val inputEncoder: Encoder[RowCounts] = ExpressionEncoder[RowCounts]()
   }
 
   private val CountsMetric = "partition_counts"
@@ -128,7 +130,7 @@ object Verdict {
       "__worst" -> RuleCompiler.worstSeverityRank(schema))
     df.select(columns ++ counters.map { case (n, c) => c.as(n) }: _*)
       .observe(observation,
-        udaf(CountsByPartition).apply(counters.map(c => col(c._1)): _*).as(CountsMetric))
+        udaf(CountsByPartition, CountsByPartition.inputEncoder).apply(counters.map(c => col(c._1)): _*).as(CountsMetric))
   }
 
   /** The counts [[observeCounts]] collected, sorted by partition key;
@@ -143,30 +145,33 @@ object Verdict {
       }
       .sortBy(_._1)
 
-  /** The rows `compute(df, schema, partitionCol).withColumn("run_id",
-    * lit(runId))` yields, built on the driver from per-partition counts
-    * keyed by the partition VALUE (typed as `partitionField`, the
-    * input's partition column) — same schema, same semantics, no job.
+  /** The schema of [[verdictRows]]: that of `compute(df, schema,
+    * partitionCol).withColumn("run_id", lit(runId))`, where
+    * `partitionField` is the input's partition column.
     */
-  def fromCounts(
-      spark: SparkSession,
-      partitionField: StructField,
-      runId: String,
-      counts: Seq[(Any, PartitionCounts)]): DataFrame = {
-    val rows = counts.map { case (v, c) =>
-      Row(v, c.nRows, c.nBadRows, c.nViolations, c.nWarnings, c.nErrors,
-        Severity.rank.collectFirst { case (n, r) if r == c.worstRank => n }.orNull,
-        c.pass, runId)
-    }
+  def verdictSchema(partitionField: StructField): StructType = {
     val long = (n: String) => StructField(n, LongType, nullable = true)
-    spark.createDataFrame(rows.asJava, StructType(Seq(
+    StructType(Seq(
       partitionField,
       StructField("n_rows", LongType, nullable = false),
       long("n_bad_rows"), long("n_violations"), long("n_warnings"), long("n_errors"),
       StructField("worst_severity", StringType, nullable = true),
       StructField("pass", BooleanType, nullable = true),
-      StructField("run_id", StringType, nullable = false))))
+      StructField("run_id", StringType, nullable = false)))
   }
+
+  /** The rows `compute(df, schema, partitionCol).withColumn("run_id",
+    * lit(runId))` yields, built on the driver from per-partition counts
+    * keyed by the partition VALUE (typed as the input's partition
+    * column) — same semantics as [[compute]], no job; their schema is
+    * [[verdictSchema]].
+    */
+  def verdictRows(runId: String, counts: Seq[(Any, PartitionCounts)]): Seq[Row] =
+    counts.map { case (v, c) =>
+      Row(v, c.nRows, c.nBadRows, c.nViolations, c.nWarnings, c.nErrors,
+        Severity.rank.collectFirst { case (n, r) if r == c.worstRank => n }.orNull,
+        c.pass, runId)
+    }
 
   /** Per-(field, rule, severity) violation breakdown — the triage view
     * a user reads FIRST after a failed run: which rules fired, how

@@ -133,4 +133,45 @@ class DriftSpec extends SparkSpec {
     val withNew = Drift.categoricalCompare(cur.union(extra), cur, "cat", Seq("grp")).head()
     assert(withNew.getAs[Double]("tv") > 0.0)
   }
+
+  private val edges = Array(25d, 50d, 75d)
+
+  /** `(group, n_cur, n_base, score1, score2)` per row; scores as Options. */
+  private def scores(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => Option(r.getString(0)) ->
+      (r.getLong(1), r.getLong(2), Option(r.get(3)), Option(r.get(4)))).toMap
+
+  test("a group on only one side scores null psi/ks (no DIVIDE_BY_ZERO under ANSI)") {
+    val both = spark.range(0, 400).select(lit("both").as("g"), pmod(col("id"), lit(100)).cast("double").as("v"))
+    val curOnly = both.withColumn("g", lit("cur_only"))
+    val baseOnly = both.withColumn("g", lit("base_only"))
+    val out = scores(Drift.compareWithEdges(both.union(curOnly), both.union(baseOnly), "v", Seq("g"), edges))
+    assert(out(Some("both")) === ((400L, 400L, Some(0d), Some(0d))))
+    assert(out(Some("cur_only")) === ((400L, 0L, None, None)))
+    assert(out(Some("base_only")) === ((0L, 400L, None, None)))
+    val cat = scores(Drift.categoricalCompare(both.union(curOnly), both.union(baseOnly), "v", Seq("g")))
+    assert(cat(Some("both")) === ((400L, 400L, Some(0d), Some(0d))))
+    assert(cat(Some("cur_only")) === ((400L, 0L, None, None)))
+    assert(cat(Some("base_only")) === ((0L, 400L, None, None)))
+  }
+
+  test("a NULL group key matches itself: a frame compared with itself scores psi 0 and ks 0") {
+    val df = spark.range(0, 400).select(
+      when(col("id") % 4 === 0, lit(null).cast("string")).otherwise(lit("g")).as("g"),
+      pmod(col("id") * 7, lit(100)).cast("double").as("v"))
+    def allZero(out: Map[Option[String], (Long, Long, Option[Any], Option[Any])], what: String) = {
+      assert(out.keySet === Set(None, Some("g")), what)
+      assert(out(None)._1 === 100L && out(None)._2 === 100L, what)
+      out.values.foreach(v => assert(v._3 === Some(0d) && v._4 === Some(0d), what))
+    }
+    allZero(scores(Drift.compareWithEdges(df, df, "v", Seq("g"), edges)), "compareWithEdges")
+    allZero(scores(Drift.compare(df, df, "v", Seq("g"), 10, 0d, 100d)), "compare")
+    allZero(scores(Drift.compareWithBaselineEdges(df,
+      Drift.binsByEdges(df, "v", Seq("g"), edges), "v", Seq("g"), edges)), "compareWithBaselineEdges")
+    allZero(scores(Drift.categoricalCompare(df, df, "v", Seq("g"))), "categoricalCompare")
+    // against the global distribution the NULL group is scored, not dropped
+    val global = scores(Drift.againstGlobal(df, "v", Seq("g"), 10, 0d, 100d))
+    assert(global.keySet === Set(None, Some("g")) && global(None)._1 === 100L)
+    assert(global.values.forall(v => v._3.isDefined && v._4.isDefined))
+  }
 }

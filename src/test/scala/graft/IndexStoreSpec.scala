@@ -156,7 +156,7 @@ class IndexStoreSpec extends SparkSpec {
 
     IndexStore.buildDriftBaseline(a, "n_chars", Seq("lang"), parts,
       nBins = 6, exact = true)
-    val n = IndexStore.appendDriftBaseline(b, parts)
+    val n = IndexStore.appendDriftBaseline(b, parts, "rest")
     assert(n > 0)
     // Whole-build sketch with the SAME edges (append keeps build edges,
     // so force them by sketching a union against the stored edges).
@@ -169,6 +169,19 @@ class IndexStoreSpec extends SparkSpec {
         "n_chars", Seq("lang"), meta.edges.toArray)
       .as[(String, Long, Long, Double, Double)].collect().toSet
     assert(storedScores === directScores && storedScores.nonEmpty)
+  }
+
+  test("drift baseline append: a retried slice replaces its rows, never counts them twice") {
+    val path = tmpDir("drift-retry")
+    IndexStore.buildDriftBaseline(docs.where(col("doc_id") % 2 === 0), "n_chars", Seq("lang"), path,
+      nBins = 4, exact = true)
+    def stored() = IndexStore.loadDriftBaseline(spark, path)._1.agg(sum(col("n"))).head().getLong(0)
+    assert(stored() === 250L)
+    val odd = docs.where(col("doc_id") % 2 === 1)
+    assert(IndexStore.appendDriftBaseline(odd, path, "odd") > 0)
+    assert(stored() === 500L)
+    IndexStore.appendDriftBaseline(odd, path, "odd")
+    assert(stored() === 500L)
   }
 
   test("saveText/loadText: numerically latest version wins; a stranded temp is cleared") {

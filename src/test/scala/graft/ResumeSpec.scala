@@ -5,11 +5,16 @@ import graft.resume.{Checkpoint, ValidationRun}
 import graft.schema.{CustomCheck, FieldSpec, Schema, Severity}
 import graft.validate.Validator
 import graft.verdict.Verdict
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
@@ -227,5 +232,74 @@ class ResumeSpec extends SparkSpec {
     assert(scans.length === 1)
     assert(scans.head.metrics("numFiles").value === rustFiles.toLong)
     assert(scans.head.metrics("numOutputRows").value === rustRows)
+  }
+
+  /** The number of Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("a run into a fresh outDir starts exactly one Spark job: the violations write") {
+    val in = s"${tmp()}/in"
+    files.write.parquet(in)
+    val df = spark.read.parquet(in)
+    val out = tmp()
+    var r: ValidationRun.Report = null
+    assert(jobsOf { r = ValidationRun.run(df, CodeFiles.schema, "lang", CodeFiles.keyCols, out) } === 1)
+    assert(r.pending.nonEmpty)
+    assert(Checkpoint.committed(spark, out).toSet === r.pending.toSet)
+    assertVerdictParity(df, CodeFiles.schema, "lang", out, r)
+    // the commit is one file, published by one rename: no committer leftovers
+    Seq("verdicts", "manifest").foreach { d =>
+      assert(Files.list(Paths.get(s"$out/$d")).iterator().asScala
+        .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq
+        .map(_.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")) === Seq("part-00000-<uuid>-c000.snappy.parquet"))
+    }
+  }
+
+  test("Checkpoint.writeRows writes what Spark's Parquet writer writes: string, int, date, NULL") {
+    val cases = Seq(
+      StructField("lang", StringType) -> Seq("scala", "java", null),
+      StructField("shard", IntegerType) -> Seq(3, -1, null),
+      StructField("day", DateType) -> Seq(java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Date.valueOf("1969-12-31"), null))
+    cases.foreach { case (part, values) =>
+      val schema = StructType(Seq(part,
+        StructField("n_rows", LongType, nullable = false),
+        StructField("pass", BooleanType),
+        StructField("run_id", StringType, nullable = false)))
+      val rows = values.zipWithIndex.map { case (v, i) => Row(v, i.toLong, i % 2 == 0, "run") }
+      val (mine, sparks) = (tmp(), tmp())
+      Checkpoint.writeRows(spark, s"$mine/t", schema, rows)
+      spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(s"$sparks/t")
+      val (a, b) = (spark.read.parquet(s"$mine/t"), spark.read.parquet(s"$sparks/t"))
+      assert(a.schema === b.schema, part.name)
+      assert(a.collect().toSet === b.collect().toSet && a.count() === rows.size.toLong, part.name)
+      assert(a.where(col(part.name).isNull).count() === 1L, part.name)
+      // The same file: Parquet schema, codec and Spark's footer metadata.
+      def footer(dir: String) = {
+        val f = Files.list(Paths.get(s"$dir/t")).iterator().asScala
+          .filter(_.getFileName.toString.matches("part-.*\\.parquet")).toSeq
+        assert(f.size === 1)
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new HPath(f.head.toUri), spark.sparkContext.hadoopConfiguration))
+        try {
+          val m = r.getFooter
+          (m.getFileMetaData.getSchema, m.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+            m.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+        } finally r.close()
+      }
+      assert(footer(mine) === footer(sparks), part.name)
+    }
   }
 }
