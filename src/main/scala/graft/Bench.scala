@@ -28,7 +28,6 @@ object Bench {
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName)) }
-        finally graft.util.CacheScope.shared.release() // miners' internal frames
       (name, (System.nanoTime() - t0) / 1e9, err)
     }
     // Truncate BEFORE escaping (truncating after could split an escape

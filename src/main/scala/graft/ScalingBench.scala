@@ -42,14 +42,21 @@ object ScalingBench {
     s
   }
 
+  /** The jobs [[pipeline]] can time; any other name is refused before
+    * a session starts or any input is generated.
+    */
+  private val Jobs: Seq[String] = Seq("full", "verdict", "unique", "ri")
+
   /** The measured job over the code-file table. `full` is a
     * `ValidationRun.run` into the fresh directory `out` (violations
     * write, verdicts and manifest commit) + uniqueness + referential
-    * integrity; `verdict` is the per-lang verdict aggregate alone.
+    * integrity; `verdict` is the per-lang verdict aggregate alone;
+    * `unique` and `ri` are the uniqueness and referential-integrity
+    * summaries alone.
     * Returns (violations, badRows, dupRows, orphans) — the checksum.
     */
   private def pipeline(spark: SparkSession, inputPath: String, dimPath: String,
-      job: String, scope: graft.util.CacheScope, out: String): (Long, Long, Long, Long) = {
+      job: String, out: String): (Long, Long, Long, Long) = {
     val df = spark.read.parquet(inputPath)
     val dim = spark.read.parquet(dimPath)
     val verdictTotals = (v: DataFrame) => v.agg(sum(col("n_violations")), sum(col("n_bad_rows"))).head()
@@ -71,18 +78,7 @@ object ScalingBench {
           df.where(col("repo").isNotNull),
           dim, Seq("repo", "commit"), broadcastDim = false).head()
       else null
-    // Training-data op at scale: MinHash+LSH near-dup mining over the
-    // content column (native zero-shuffle signatures → banded buckets →
-    // capped candidate pairs). Separate job so `full`'s baseline numbers
-    // stay comparable across rounds.
-    val dedup =
-      if (job == "dedup")
-        graft.dedup.Dedup.minHashNearDuplicates(
-          df.select(col("id"), col("content")), "id", "content",
-          k = 64, bands = 16, shingleN = 8, minEstJaccard = 0.5,
-          scope = scope).count()
-      else -1L
-    (if (verdicts != null) verdicts.getLong(0) else dedup,
+    (if (verdicts != null) verdicts.getLong(0) else -1L,
       if (verdicts != null) verdicts.getLong(1) else 0L,
       if (uniq != null) uniq.getAs[Long]("n_dup_rows") else 0L,
       if (ri != null) ri.getAs[Long]("n_orphans") else 0L)
@@ -93,6 +89,11 @@ object ScalingBench {
     val n = args.lift(1).map(_.toInt).getOrElse(8)
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
     val job = args.lift(3).getOrElse("full")
+    require(Jobs.contains(job), s"unknown job '$job' (${Jobs.mkString(" | ")})")
+    val mode = args.lift(4).getOrElse("block")
+    require(mode == "block" || mode == "interleaved",
+      s"unknown mode '$mode' (block | interleaved) — refusing to record " +
+        "evidence under a misattributed methodology label")
     val input = s"/tmp/graft-scaling/input-$rows"
     val dimP = s"/tmp/graft-scaling/dim-$rows"
 
@@ -107,15 +108,12 @@ object ScalingBench {
     }
 
     // One timed pipeline run, writing into a fresh out dir that is
-    // deleted after the timer stops. Each run owns a CacheScope,
-    // released after its action completes — deterministic unpersist of
-    // the miners' internal frames between runs (no session-wide
-    // clearCache sledgehammer).
+    // deleted after the timer stops.
     def timed(s: SparkSession): (Double, (Long, Long, Long, Long)) = {
       val out = new org.apache.hadoop.fs.Path(s"/tmp/graft-scaling/out-${java.util.UUID.randomUUID()}")
       try {
         val t0 = System.nanoTime()
-        val c = graft.util.CacheScope.withScope(sc => pipeline(s, input, dimP, job, sc, out.toString))
+        val c = pipeline(s, input, dimP, job, out.toString)
         ((System.nanoTime() - t0) / 1e9, c)
       } finally out.getFileSystem(s.sparkContext.hadoopConfiguration).delete(out, true)
     }
@@ -149,10 +147,6 @@ object ScalingBench {
       try timed(s) finally s.stop()
     }
 
-    val mode = args.lift(4).getOrElse("block")
-    require(mode == "block" || mode == "interleaved",
-      s"unknown mode '$mode' (block | interleaved) — refusing to record " +
-        "evidence under a misattributed methodology label")
     val (samplesN, samples4N, checkN) =
       if (mode == "interleaved") {
         // Alternate N / 4N samples so this host's multi-minute external

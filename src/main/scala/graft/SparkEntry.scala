@@ -1,7 +1,6 @@
 package graft
 
 import graft.data.SynthGen
-import graft.dedup.Dedup
 import graft.drift.Drift
 import graft.refint.RefIntegrity
 import graft.schema.{FieldSpec, Schema, SchemaJson}
@@ -1018,67 +1017,7 @@ object SparkEntry {
         when(col("doc_id") % 29 === 0, array(col("source"), col("lang")))
           .otherwise(array(col("source"), col("lang"), col("size_tag"))))
       Validator.violations(d, itemsSchema, Seq("doc_id"))
-    }),
-
-    // --- training-data pipeline: deduplication -------------------------
-    "q_dedup_exact_documents" -> ((s, dir) =>
-      Dedup.exactSummary(docs(s, dir), "text")),
-    "q_jaccard_pairs_documents" -> ((s, dir) =>
-      Dedup.jaccardPairs(docs(s, dir), "doc_id", "text",
-          n = 3, maxDf = 50, minJaccard = 0.5)
-        .select(col("id_a"), col("id_b"), col("n_common"),
-          col("size_a"), col("size_b"), round(col("jaccard"), 6).as("jaccard"))),
-    "q_contamination_documents" -> ((s, dir) => {
-      // Train/test leakage check: the "eval set" is a deterministic
-      // slice of documents reduced to a 120-char prefix (an eval item
-      // extracted from a training doc) — every probe must surface its
-      // source doc with high containment.
-      val corpus = docs(s, dir)
-      val probe = corpus
-        .where(col("doc_id") % 23 === 0)
-        .select(col("doc_id").as("probe_id"),
-          substring(col("text"), 1, 120).as("text"))
-      Dedup.contaminationPairs(corpus, "doc_id", probe, "probe_id", "text",
-          n = 3, maxDf = 50, minContainment = 0.4, broadcastProbe = true)
-        .select(col("probe_id"), col("corpus_id"), col("n_common"),
-          col("probe_size"), round(col("containment"), 6).as("containment"))
-    }),
-    "q_contaminated_probes_documents" -> ((s, dir) => {
-      val corpus = docs(s, dir)
-      val probe = corpus
-        .where(col("doc_id") % 23 === 0)
-        .select(col("doc_id").as("probe_id"),
-          substring(col("text"), 1, 120).as("text"))
-      Dedup.contaminatedProbes(
-          Dedup.contaminationPairs(corpus, "doc_id", probe, "probe_id", "text",
-            n = 3, maxDf = 50, minContainment = 0.4, broadcastProbe = true))
-        .select(col("probe_id"), col("n_matches"),
-          round(col("max_containment"), 6).as("max_containment"),
-          col("best_corpus_id"))
-    }),
-    "q_cluster_documents" -> ((s, dir) =>
-      // Near-dup CLUSTERS from pairs: connected components (iterative
-      // min-label propagation) over the exact Jaccard pair graph —
-      // (doc_id, component = min reachable id, n_members). The oracle
-      // replays the transitive closure with a recursive CTE.
-      Dedup.clusterAssignments(
-          Dedup.jaccardPairs(docs(s, dir), "doc_id", "text",
-            n = 3, maxDf = 50, minJaccard = 0.5))
-        .select(col("id").as("doc_id"), col("component"), col("n_members"))),
-    "q_minhash_documents" -> ((s, dir) =>
-      // MinHash signatures, exploded to one (doc_id, pos, minhash) row
-      // per signature coordinate — scalar columns so the driver's
-      // rows-only harness can sort/hash them (an array<bigint> column
-      // crashes pandas). xxhash64 isn't DuckDB-expressible → rows-only;
-      // bit-level semantics pinned in DedupSpec/HashExprsSpec.
-      Dedup.minHashSignatures(docs(s, dir), "doc_id", "text", k = 64, shingleN = 8)
-        .select(col("id").as("doc_id"), posexplode(col("sig")))
-        .select(col("doc_id"), col("pos"), col("col").as("minhash"))),
-    "q_neardup_minhash_documents" -> ((s, dir) =>
-      Dedup.minHashNearDuplicates(docs(s, dir), "doc_id", "text",
-        k = 64, bands = 16, shingleN = 8, minEstJaccard = 0.5)),
-    "q_simhash_documents" -> ((s, dir) =>
-      Dedup.simHash(docs(s, dir), "doc_id", "text"))
+    })
   )
 
   /** Element-rule replay for the accounts array: element 0 = (source,
@@ -1095,72 +1034,6 @@ object SparkEntry {
       s"SELECT doc_id, 'accounts[$i].n' AS field, 'max' AS rule, CAST($nv AS VARCHAR) AS value, 'error' AS severity FROM documents WHERE ($nv) IS NOT NULL AND ($nv) > 500"
     )}.mkString(" UNION ALL ")
   }
-
-  /** Shared CTE chain recomputing [[Dedup.jaccardPairs]] (n=3,
-    * maxDf=50) in DuckDB — `jp` = all candidate pairs with exact
-    * jaccard; consumed by the pair oracle (threshold filter) and the
-    * clustering oracle (recursive closure).
-    */
-  private val jaccardCtes: String =
-    """d AS (
-      | SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-      | FROM documents WHERE text IS NOT NULL),
-      |w AS (SELECT doc_id, string_split(t, ' ') AS ws FROM d),
-      |g AS (SELECT doc_id,
-      |  list_distinct(list_transform(range(1, len(ws) - 1),
-      |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      | FROM w WHERE len(ws) >= 3),
-      |s0 AS (SELECT doc_id, unnest(gs) AS sh FROM g),
-      |s AS (SELECT doc_id, sh FROM (
-      |  SELECT doc_id, sh, count(*) OVER (PARTITION BY sh) AS dfc FROM s0)
-      | WHERE dfc <= 50),
-      |sz AS (SELECT doc_id, count(*) AS sz FROM s GROUP BY 1),
-      |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |      GROUP BY 1, 2),
-      |jp AS (SELECT id_a, id_b, n_common, sa.sz AS size_a, sb.sz AS size_b,
-      |        n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS jaccard
-      |       FROM p JOIN sz sa ON sa.doc_id = p.id_a
-      |              JOIN sz sb ON sb.doc_id = p.id_b)""".stripMargin
-
-  /** Cross-corpus contamination CTEs: corpus trigram index with the
-    * corpus hot-shingle (df > 50) filter, probe = 120-char prefixes of
-    * every 23rd doc, containment = |probe ∩ corpus| / |probe| — the
-    * exact replay of `Dedup.contaminationPairs` for the oracle.
-    */
-  private val contaminationCtes: String =
-    """cd AS (
-      | SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-      | FROM documents WHERE text IS NOT NULL),
-      |cw AS (SELECT doc_id, string_split(t, ' ') AS ws FROM cd),
-      |cg AS (SELECT doc_id,
-      |  list_distinct(list_transform(range(1, len(ws) - 1),
-      |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      | FROM cw WHERE len(ws) >= 3),
-      |cs0 AS (SELECT doc_id, unnest(gs) AS sh FROM cg),
-      |hot AS (SELECT sh FROM cs0 GROUP BY sh HAVING count(*) > 50),
-      |cs AS (SELECT doc_id AS corpus_id, sh FROM cs0
-      |       WHERE sh NOT IN (SELECT sh FROM hot)),
-      |pd AS (
-      | SELECT doc_id AS probe_id,
-      |  trim(regexp_replace(lower(substr(text, 1, 120)), '\s+', ' ', 'g')) AS t
-      | FROM documents WHERE text IS NOT NULL AND doc_id % 23 = 0),
-      |pw AS (SELECT probe_id, string_split(t, ' ') AS ws FROM pd),
-      |pg AS (SELECT probe_id,
-      |  list_distinct(list_transform(range(1, len(ws) - 1),
-      |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs
-      | FROM pw WHERE len(ws) >= 3),
-      |ps0 AS (SELECT probe_id, unnest(gs) AS sh FROM pg),
-      |ps AS (SELECT probe_id, sh FROM ps0
-      |       WHERE sh NOT IN (SELECT sh FROM hot)),
-      |psz AS (SELECT probe_id, count(*) AS probe_size FROM ps GROUP BY 1),
-      |cp AS (
-      | SELECT probe_id, corpus_id, count(*) AS n_common
-      | FROM cs JOIN ps USING (sh) GROUP BY 1, 2),
-      |cpj AS (
-      | SELECT probe_id, corpus_id, n_common, psz.probe_size,
-      |  n_common / CAST(psz.probe_size AS DOUBLE) AS containment
-      | FROM cp JOIN psz USING (probe_id))""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "q_validate_documents" -> docViolationsSql,
@@ -1772,55 +1645,6 @@ object SparkEntry {
            | CAST(min(length(CAST($f AS VARCHAR))) AS BIGINT) AS min_len,
            | CAST(max(length(CAST($f AS VARCHAR))) AS BIGINT) AS max_len
            |FROM documents""".stripMargin
-      }.mkString("\nUNION ALL\n"),
-
-    // --- deduplication -------------------------------------------------
-    "q_dedup_exact_documents" ->
-      """SELECT CAST(sum(n) AS BIGINT) AS n_rows, count(*) AS n_distinct,
-        | CAST(sum(CASE WHEN n > 1 THEN n - 1 ELSE 0 END) AS BIGINT) AS n_dup_rows
-        |FROM (SELECT sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h,
-        |       count(*) AS n
-        |      FROM documents WHERE text IS NOT NULL GROUP BY 1)""".stripMargin,
-    "q_jaccard_pairs_documents" ->
-      s"""WITH $jaccardCtes
-        |SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
-        | CAST(size_a AS BIGINT) AS size_a, CAST(size_b AS BIGINT) AS size_b,
-        | round(jaccard, 6) AS jaccard
-        |FROM jp WHERE jaccard >= 0.5""".stripMargin,
-    "q_contamination_documents" ->
-      s"""WITH $contaminationCtes
-        |SELECT probe_id, corpus_id, CAST(n_common AS BIGINT) AS n_common,
-        | CAST(probe_size AS BIGINT) AS probe_size,
-        | round(containment, 6) AS containment
-        |FROM cpj WHERE containment >= 0.4""".stripMargin,
-    "q_contaminated_probes_documents" ->
-      s"""WITH $contaminationCtes,
-        |r AS (
-        | SELECT probe_id, corpus_id, n_common, containment,
-        |  row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY containment DESC, n_common DESC, corpus_id DESC) AS rn,
-        |  count(*) OVER (PARTITION BY probe_id) AS n_matches
-        | FROM cpj WHERE containment >= 0.4)
-        |SELECT probe_id, CAST(n_matches AS BIGINT) AS n_matches,
-        | round(containment, 6) AS max_containment,
-        | corpus_id AS best_corpus_id
-        |FROM r WHERE rn = 1""".stripMargin,
-    // Transitive closure of the jaccard pair graph via a recursive CTE:
-    // walk enumerates (node, reachable-node) over the symmetric edges;
-    // min per node = the component's minimum id (the engine's label).
-    "q_cluster_documents" ->
-      s"""WITH RECURSIVE $jaccardCtes,
-        |e AS (
-        |  SELECT id_a AS src, id_b AS dst FROM jp WHERE jaccard >= 0.5
-        |  UNION
-        |  SELECT id_b AS src, id_a AS dst FROM jp WHERE jaccard >= 0.5),
-        |walk(id, lab) AS (
-        |  SELECT src, src FROM e
-        |  UNION
-        |  SELECT e2.dst, w2.lab FROM walk w2 JOIN e e2 ON e2.src = w2.id),
-        |cc AS (SELECT id, min(lab) AS component FROM walk GROUP BY id)
-        |SELECT id AS doc_id, component,
-        | count(*) OVER (PARTITION BY component) AS n_members
-        |FROM cc""".stripMargin
+      }.mkString("\nUNION ALL\n")
   )
 }

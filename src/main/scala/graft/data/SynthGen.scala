@@ -98,8 +98,7 @@ object SynthGen {
     // Content: seeded pseudo-source, token count varies per lang (python
     // gets a wider distribution → drift fixture dial lives here).
     // Keyed on keyId, NOT id: rows sharing (repo, path, commit) carry
-    // IDENTICAL content — true duplicates, as a real corpus would have —
-    // which also gives the dedup miners real pairs to find.
+    // IDENTICAL content — true duplicates, as a real corpus would have.
     val wordArr = array(words.map(lit): _*)
     val nTokens = (pmod(kh(6), lit(40L)) + lit(20L) +
       when(goodLang === "python", pmod(kh(7), lit(60L))).otherwise(lit(0L))).cast("int")

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -13,17 +12,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: MinHash/SimHash are per-row computations, but the
   * compose-built-ins route (explode shingles → shuffle → k min/64 sum
-  * aggregates, graft.dedup.Dedup) materializes |doc|·shingles rows and
-  * shuffles them — pure overhead at 100 TB. These expressions compute
-  * the whole signature inside one projection: zero shuffle, zero row
+  * aggregates) materializes |doc|·shingles rows and shuffles them —
+  * pure overhead at 100 TB. These expressions compute the whole
+  * signature inside one projection: zero shuffle, zero row
   * amplification, and `doGenCode` emits a single static call so the
   * operator stays inside WholeStageCodegen.
   *
   * Hash-family parity: both use Spark's own xxhash64 kernel
   * (`XxHash64Function`, seed 42) exactly as the built-in `xxhash64(col)`
   * / `xxhash64(col, lit(i))` expressions chain it, so results are
-  * bit-identical to the DataFrame-composed versions in
-  * `graft.dedup.Dedup` — pinned by HashExprsSpec.
+  * bit-identical to the DataFrame-composed versions — pinned by
+  * HashExprsSpec, which keeps those compositions as its reference.
   *
   * Semantics grounding: deterministic per-row hash kernels mirror the
   * reference's digest dispatch (rust/src/lib.rs:194-214) and
@@ -43,70 +42,6 @@ object HashExprs {
     */
   def simhash64(c: Column): Column =
     GraftExprBridge.column(SimHash64(GraftExprBridge.expression(c)))
-
-  /** Count of positions where two long arrays agree — the MinHash
-    * signature-match kernel (estimated Jaccard = matchCount / k). The
-    * composed form (`aggregate(zip_with(a, b, =), +)`) is an
-    * INTERPRETED higher-order-function chain evaluated per candidate
-    * pair — millions of times in a mining job; this stays inside
-    * WholeStageCodegen as one static loop.
-    */
-  def matchCount(a: Column, b: Column): Column =
-    GraftExprBridge.column(
-      MatchCount(GraftExprBridge.expression(a), GraftExprBridge.expression(b)))
-}
-
-/** Positions where two long arrays hold equal values, compared up to
-  * the shorter length — identical to the composed
-  * `aggregate(zip_with(a, b, (x, y) => if (x = y) 1 else 0), +)` form,
-  * whose null padding on unequal lengths contributes 0 (pinned by
-  * HashExprsSpec). Null in either argument → null.
-  */
-case class MatchCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "match_count"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"match_count requires two array<bigint> arguments, got ${l.sql}, ${r.sql}")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MatchCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MatchCount.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MatchCount =
-    copy(left = newLeft, right = newRight)
-}
-
-object MatchCount {
-
-  /** Static kernel (called from generated code — keep Java-callable).
-    * A null ELEMENT never matches anything — `x = y` is null-valued in
-    * SQL when either side is null, and the composed fold's
-    * `otherwise(0)` turns that into 0 (ArrayData.getLong on a null slot
-    * would silently read 0 and fabricate matches).
-    */
-  def compute(a: ArrayData, b: ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
-    var i = 0
-    var c = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
-        c += 1
-      i += 1
-    }
-    c
-  }
 }
 
 /** Per-row MinHash signature: for each of `k` hash families, the min of

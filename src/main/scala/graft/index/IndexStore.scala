@@ -1,27 +1,20 @@
 package graft.index
 
-import graft.dedup.Dedup
 import graft.refint.RefIntegrity
-import graft.util.CacheScope
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Persistent build-once / query-many dedup, key-membership, drift and
-  * expectation indices.
-  *
-  * Every near-dup miner in [[graft.dedup]] recomputes its signatures /
-  * buckets per call — fine for one-shot jobs, wrong for the real corpus
-  * workflow where an index is built once and queried many times (the
-  * reference's own pattern is precompute-once-per-tick into a keyed
-  * view, app/.../HomeViewModel.kt:43-47). This store writes each index
-  * as a parquet table plus a one-row JSON parameter sidecar, and the
-  * load path validates the stored parameters before handing the frame
-  * to the `...FromSigs` variants of the miners — so a query against an
-  * index built with different hash parameters fails loudly instead of
-  * silently returning garbage.
+/** Persistent build-once / query-many key-membership, drift and
+  * expectation indices: each is built once and queried (or appended to)
+  * many times, instead of rescanning the source per check. This store
+  * writes each index as a parquet table plus a one-row JSON parameter
+  * sidecar, and the load path validates the stored parameters (and the
+  * sidecar's kind) before handing the frame to a consumer — so a query
+  * against an index built with different parameters fails loudly
+  * instead of silently returning garbage.
   *
   * Layout per index directory:
   *   - `data/…` — the index table (parquet); for the Bloom filter,
@@ -34,25 +27,20 @@ import java.nio.charset.StandardCharsets.UTF_8
   * committed by ONE rename, and readers take the highest committed
   * version. A crash at any step leaves the previous version readable.
   *
-  * At 100 TB this is the difference between one corpus-wide shingle
-  * pass per QUERY BATCH and one per INDEX REBUILD.
-  *
-  * CONCURRENCY: every `append…` path is SINGLE-WRITER. The row-append
-  * indices read the stored ids and then append — idempotent for
-  * serialized retries, but two concurrent appenders (or a batch append
-  * racing the streaming `minHashIndexSink` on the same path) can both
-  * pass the anti-join and land duplicate index rows; `appendBloom`'s
-  * read-merge-publish can likewise lose one writer's keys, and two
-  * concurrent publishes can claim the same version number. Serialize
-  * writers per index path (the [[graft.resume.Checkpoint]] manifest,
-  * a scheduler lock, or one owning streaming query). Concurrent
-  * READERS are safe: appends never rewrite existing rows, and a
-  * published version is never rewritten — only pruned once two newer
-  * ones exist, which a reader survives by resolving again.
+  * CONCURRENCY: every `append…` path is SINGLE-WRITER. The slice
+  * appends (drift baseline, expectation snapshots) are idempotent for
+  * serialized retries of one slice, but two concurrent writers of the
+  * same store can interleave their reads and writes; `appendBloom`'s
+  * read-merge-publish can lose one writer's keys, and two concurrent
+  * publishes can claim the same version number. Serialize writers per
+  * index path (the [[graft.resume.Checkpoint]] manifest, a scheduler
+  * lock, or one owning streaming query). Concurrent READERS are safe:
+  * a slice append replaces only its own partition, and a published
+  * version is never rewritten — only pruned once two newer ones exist,
+  * which a reader survives by resolving again.
   */
 object IndexStore {
 
-  final case class MinHashMeta(kind: String, k: Int, shingleN: Int)
   final case class BloomMeta(kind: String, keys: String, expectedItems: Long, fpp: Double)
   final case class DriftMeta(kind: String, valueCol: String, groupCols: String, edges: Seq[Double])
   final case class ExpectationsMeta(kind: String, groupCols: String)
@@ -146,87 +134,18 @@ object IndexStore {
     publishBloom(spark, path, graft.functions.BloomExprs.serialize(bf))
   }
 
-  // -------------------------------------------------------------------
-  // MinHash signature index
-  // -------------------------------------------------------------------
-
-  /** Compute and persist MinHash signatures `(id, sig)` once. */
-  def buildMinHash(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      k: Int = 64,
-      shingleN: Int = 8): Unit = {
-    Dedup.minHashSignatures(df, idCol, textCol, k, shingleN)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
-    writeMeta(df.sparkSession, path, MinHashMeta("minhash", k, shingleN))(
-      Encoders.product[MinHashMeta])
-  }
-
-  /** Stored signature frame + its build parameters. */
-  def loadMinHash(spark: SparkSession, path: String): (DataFrame, MinHashMeta) = {
-    val meta = readMeta[MinHashMeta](spark, path, "minhash")(Encoders.product[MinHashMeta])
-    (spark.read.parquet(s"$path/data"), meta)
-  }
-
-  /** Near-duplicate mining over the STORED signatures — no shingling,
-    * no signature recompute; the only corpus-sized input is the index
-    * scan itself.
+  /** Write `rows` as one `<sliceCol>=<id>` partition and report how
+    * many landed — the count runs BEFORE the write (on a cached frame)
+    * so the data is read once, not twice. The partition is replaced if
+    * it exists (dynamic overwrite: a retried slice is rewritten, never
+    * counted twice).
     */
-  def minHashNearDuplicates(
-      spark: SparkSession,
-      path: String,
-      bands: Int = 16,
-      minEstJaccard: Double = 0.7,
-      maxBucket: Int = 1000,
-      scope: CacheScope = CacheScope.shared): DataFrame = {
-    val (sigs, meta) = loadMinHash(spark, path)
-    Dedup.minHashNearDuplicatesFromSigs(
-      sigs, meta.k, bands, minEstJaccard, maxBucket, scope)
-  }
-
-  /** Incrementally extend a stored MinHash index with the rows of `df`
-    * whose id is NOT yet indexed (anti-join against the stored ids —
-    * re-appending an already-indexed batch is a no-op, so ingest
-    * retries are idempotent at the row level). Signatures are computed
-    * with the INDEX's stored (k, shingleN) — the caller cannot drift
-    * the parameters. Returns the number of rows appended.
-    *
-    * This is the daily-ingest path at corpus scale: one signature pass
-    * over the NEW slice only, never a corpus rebuild. The parquet
-    * append itself is not atomic (crash mid-append can leave a partial
-    * batch visible); wrap calls in the [[graft.resume.Checkpoint]]
-    * manifest protocol when exactly-once batch visibility matters.
-    */
-  def appendMinHash(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String): Long = {
-    val spark = df.sparkSession
-    val (stored, meta) = loadMinHash(spark, path)
-    val fresh = df.join(
-        stored.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    val sigs = Dedup.minHashSignatures(fresh, idCol, textCol, meta.k, meta.shingleN)
-    appendCounted(sigs, s"$path/data")
-  }
-
-  /** Write `rows` and report how many landed — the count runs BEFORE
-    * the write (on a cached frame) so the data is read once, not twice.
-    * With `sliceCol` the rows are one `<sliceCol>=<id>` partition and
-    * replace that partition if it exists (dynamic overwrite: a retried
-    * slice is rewritten, never counted twice); otherwise they append.
-    */
-  private def appendCounted(rows: DataFrame, dataPath: String, sliceCol: Option[String] = None): Long = {
+  private def appendCounted(rows: DataFrame, dataPath: String, sliceCol: String): Long = {
     rows.persist()
     try {
       val n = rows.count()
-      if (n > 0) sliceCol match {
-        case None => rows.write.mode(SaveMode.Append).parquet(dataPath)
-        case Some(c) => rows.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic").partitionBy(c).parquet(dataPath)
-      }
+      if (n > 0) rows.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic").partitionBy(sliceCol).parquet(dataPath)
       n
     } finally rows.unpersist()
   }
@@ -319,7 +238,7 @@ object IndexStore {
     appendCounted(
       graft.drift.Drift.binsByEdges(slice, meta.valueCol, groupCols, meta.edges.toArray)
         .withColumn(SliceCol, lit(sliceId)),
-      s"$path/data", Some(SliceCol))
+      s"$path/data", SliceCol)
   }
 
   // -------------------------------------------------------------------
@@ -467,7 +386,7 @@ object IndexStore {
       .evaluate(df, expects, groupCols, approxDistinct)
       .withColumn("seq", lit(seq))
       .withColumn("snapshot_id", lit(snapshotId))
-    appendCounted(rows, s"$path/data", Some("snapshot_id"))
+    appendCounted(rows, s"$path/data", "snapshot_id")
   }
 
   /** The LATEST stored snapshot's observation rows (max `seq`) + meta.

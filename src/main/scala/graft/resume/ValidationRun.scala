@@ -70,11 +70,12 @@ object ValidationRun {
       .partitionBy(partitionCol)
       .parquet(s"$outDir/violations")
     val counts = Verdict.observedCounts(observation)
-    if (counts.isEmpty)
-      return Report(runId, Nil, committed.size, Checkpoint.processed(spark, outDir))
-
     val field = df.schema(partitionCol)
     val verdictSchema = Verdict.verdictSchema(field)
+    if (counts.isEmpty)
+      return Report(runId, Nil, committed.size,
+        spark.createDataFrame(java.util.List.of[Row](), verdictSchema))
+
     val verdicts = Verdict.verdictRows(runId,
       counts.map { case (k, c) => Checkpoint.partitionValue(k, field.dataType) -> c })
     Checkpoint.writeRows(spark, s"$outDir/verdicts", verdictSchema, verdicts)

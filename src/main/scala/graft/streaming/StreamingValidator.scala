@@ -72,14 +72,14 @@ object StreamingValidator {
         (sum(col("__n_err").cast("long")) === 0L).as("pass"))
 
   /** Streaming exact dedup — the live-ingest mirror of
-    * [[graft.dedup.Dedup.exactDedup]]: drops rows whose `keyCols`
+    * [[graft.unique.Uniqueness.dedup]]: drops rows whose `keyCols`
     * (typically the content hash) were already seen, with state bounded
     * by the watermark (`dropDuplicatesWithinWatermark` — a duplicate
     * arriving within `watermarkDelay` of the original is always caught;
-    * older state is evicted, the batch dedup remains the exactness
-    * backstop). Without the bound, dedup state on an endless stream
-    * grows with distinct-key cardinality — the watermark makes it
-    * O(keys per delay window).
+    * older state is evicted, the batch uniqueness check remains the
+    * exactness backstop). Without the bound, dedup state on an endless
+    * stream grows with distinct-key cardinality — the watermark makes
+    * it O(keys per delay window).
     */
   def streamingDedup(
       stream: DataFrame,
@@ -240,33 +240,6 @@ object StreamingValidator {
             Checkpoint.commit(batch.sparkSession, outDir, entries)
           } finally verdicts.unpersist(false)
         }
-        ()
-      }
-      .start()
-
-  /** Streaming maintenance of a persistent MinHash index: each
-    * micro-batch folds its NEW documents into the stored index via
-    * [[graft.index.IndexStore.appendMinHash]] — signatures computed
-    * with the index's stored parameters, and the append's stored-id
-    * anti-join makes micro-batch REPLAY (at-least-once delivery,
-    * checkpoint recovery) a row-level no-op. The corpus-scale shape:
-    * ingest indexes only the day's slice; dedup queries hit the stored
-    * index, never a corpus rebuild.
-    */
-  def minHashIndexSink(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      indexPath: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("500 milliseconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.index.IndexStore.appendMinHash(batch, idCol, textCol, indexPath)
         ()
       }
       .start()

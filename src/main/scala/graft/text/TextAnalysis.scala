@@ -57,8 +57,7 @@ object TextAnalysis {
     regexp_count(lower(c), lit(wordSetPattern(words)))
 
   /** The composite quality score in [0, 1] as ONE expression —
-    * reusable inside short-circuiting conditionals (e.g. the one-pass
-    * pipeline funnel evaluates it only on dedup survivors). Formula is
+    * reusable inside short-circuiting conditionals. Formula is
     * fixed (mirrored verbatim in the DuckDB oracle):
     * 0.4·alpha_ratio + 0.3·min(1, stop_ratio·4) + 0.3·min(1, n_tokens/50).
     */
@@ -281,7 +280,8 @@ object TextAnalysis {
 
   /** Rolling-hash (Karp-Rabin flavored) shingle fingerprints: the
     * xxhash64 of each character n-gram window over the normalized text,
-    * distinct per document. The basis for MinHash (graft.dedup.Dedup).
+    * distinct per document. The basis for MinHash: the composed
+    * signature that [[graft.functions.MinHashSig]] reproduces bit for bit.
     * Array column `shingle_hashes: array<bigint>`.
     *
     * PERFORMANCE: `c` is referenced INSIDE the transform lambda, so any

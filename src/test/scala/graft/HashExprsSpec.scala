@@ -1,8 +1,8 @@
 package graft
 
-import graft.dedup.Dedup
 import graft.functions.HashExprs
 import graft.text.TextAnalysis
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class HashExprsSpec extends SparkSpec {
@@ -10,9 +10,63 @@ class HashExprsSpec extends SparkSpec {
 
   private lazy val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
 
+  /** Reference MinHash signatures composed from built-ins (explode →
+    * k min-aggregates): the oracle the native [[HashExprs.minhashSig]]
+    * must match bit for bit.
+    */
+  private def minHashSignaturesAgg(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      k: Int = 64,
+      shingleN: Int = 8): DataFrame = {
+    val exploded = df
+      .where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        TextAnalysis.normalizeText(col(textCol)).as("__norm"))
+      .select(col("id"),
+        explode(TextAnalysis.shingleHashesNormalized(col("__norm"), shingleN)).as("h"))
+    // k independent hash families: h_i = xxhash64(shingle_hash, i).
+    val minCols = (0 until k).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
+    exploded
+      .groupBy(col("id"))
+      .agg(minCols.head, minCols.tail: _*)
+      .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
+  /** Reference SimHash composed from built-ins: explode tokens → (id,
+    * token-hash, tf) aggregate → 64 conditional sums → bit assembly.
+    * The native [[HashExprs.simhash64]] must match it bit for bit on
+    * docs with ≥1 token.
+    */
+  private def simHashAgg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val tokens = df
+      .where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        explode(split(TextAnalysis.normalizeText(col(textCol)), " ")).as("tok"))
+      .where(length(col("tok")) > 0)
+      .groupBy(col("id"), xxhash64(col("tok")).as("h"))
+      .agg(count(lit(1)).as("tf"))
+    val bitSums = (0 until 64).map { j =>
+      sum(when(shiftrightunsigned(col("h"), j).bitwiseAND(lit(1L)) === 1L, col("tf"))
+        .otherwise(-col("tf"))).as(s"b$j")
+    }
+    val assembled = (0 until 64)
+      .map { j =>
+        // bit j contributes 2^j when its sum is positive; use the
+        // signed-long bit directly (bit 63 → Long.MinValue).
+        when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L))
+      }
+      .reduce[Column](_.bitwiseXOR(_))
+    tokens
+      .groupBy(col("id"))
+      .agg(bitSums.head, bitSums.tail: _*)
+      .select(col("id"), assembled.as("simhash"))
+  }
+
   test("native minhash_sig is bit-identical to the explode+aggregate path") {
     val k = 16; val n = 8
-    val viaAgg = Dedup.minHashSignaturesAgg(docs, "doc_id", "text", k = k, shingleN = n)
+    val viaAgg = minHashSignaturesAgg(docs, "doc_id", "text", k = k, shingleN = n)
       .as[(Long, Seq[Long])].collect().toMap
     val viaExpr = docs
       .where($"text".isNotNull)
@@ -25,7 +79,7 @@ class HashExprsSpec extends SparkSpec {
   }
 
   test("native simhash64 is bit-identical to the explode+aggregate path") {
-    val viaAgg = Dedup.simHashAgg(docs, "doc_id", "text").as[(Long, Long)].collect().toMap
+    val viaAgg = simHashAgg(docs, "doc_id", "text").as[(Long, Long)].collect().toMap
     val viaExpr = docs
       .where($"text".isNotNull)
       .select($"doc_id",
@@ -54,9 +108,12 @@ class HashExprsSpec extends SparkSpec {
     // "𝄞" (U+1D11E) is a surrogate pair in UTF-16; char-based windowing
     // would produce a different shingle count AND split the pair.
     val df = Seq((1L, "𝄞abcdefgh foo"), (2L, "日本語のテキストです長い")).toDF("doc_id", "text")
-    val viaAgg = Dedup.minHashSignaturesAgg(df, "doc_id", "text", k = 8, shingleN = 8)
+    val viaAgg = minHashSignaturesAgg(df, "doc_id", "text", k = 8, shingleN = 8)
       .as[(Long, Seq[Long])].collect().toMap
-    val viaExpr = Dedup.minHashSignatures(df, "doc_id", "text", k = 8, shingleN = 8)
+    val viaExpr = df
+      .select($"doc_id",
+        HashExprs.minhashSig(TextAnalysis.normalizeText($"text"), 8, 8).as("sig"))
+      .where(size($"sig") > 0)
       .as[(Long, Seq[Long])].collect().toMap
     assert(viaExpr === viaAgg)
   }
@@ -69,39 +126,5 @@ class HashExprsSpec extends SparkSpec {
     assert(byId(1L).isNullAt(1) && byId(1L).isNullAt(2))
     assert(byId(2L).getLong(1) === 0L)
     assert(byId(2L).getSeq[Long](2) === Seq.empty)
-  }
-
-  test("match_count: bit-parity with the composed zip_with fold, incl. unequal lengths and nulls") {
-    import org.apache.spark.sql.functions.{aggregate, zip_with, when, lit}
-    val df = Seq(
-      (1L, Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 4L)),
-      (2L, Seq(1L, 2L), Seq(1L, 2L, 3L)), // shorter left: padded tail matches 0
-      (3L, Seq.empty[Long], Seq(1L)),
-      (4L, Seq(7L, 7L, 7L), Seq(7L, 7L, 7L))
-    ).toDF("id", "a", "b")
-    val both = df.select($"id",
-      HashExprs.matchCount($"a", $"b").as("native"),
-      aggregate(
-        zip_with($"a", $"b", (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, v) => acc + v).as("composed"))
-      .collect()
-    both.foreach(r => assert(r.getInt(1) === r.getInt(2), s"id=${r.getLong(0)}"))
-    assert(both.find(_.getLong(0) == 1L).get.getInt(1) === 3)
-    assert(both.find(_.getLong(0) == 4L).get.getInt(1) === 3)
-    // null input → null out
-    val nr = Seq((Some(Seq(1L)), None: Option[Seq[Long]])).toDF("a", "b")
-      .select(HashExprs.matchCount($"a", $"b")).collect().head
-    assert(nr.isNullAt(0))
-    // null ELEMENTS never match (x = y is null-valued → otherwise(0)),
-    // even null-vs-null — parity with the composed fold, not with
-    // ArrayData.getLong's silent 0
-    val ne = Seq((Seq[java.lang.Long](null, 2L, null), Seq[java.lang.Long](null, 2L, 0L)))
-      .toDF("a", "b")
-      .select(HashExprs.matchCount($"a", $"b").as("native"),
-        aggregate(
-          zip_with($"a", $"b", (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).as("composed"))
-      .collect().head
-    assert(ne.getInt(0) === 1 && ne.getInt(1) === 1)
   }
 }

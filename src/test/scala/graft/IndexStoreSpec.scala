@@ -1,15 +1,11 @@
 package graft
 
-import graft.dedup.Dedup
-import graft.functions.MinHashSig
 import graft.index.IndexStore
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Build-once/query-many index persistence: stored indices reproduce
-  * the direct-compute results exactly, and the query-time plan reads
-  * the index parquet instead of recomputing signatures.
+  * the direct-compute results exactly, and a query against a stored
+  * index reads the index instead of rescanning its source.
   */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -20,82 +16,6 @@ class IndexStoreSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory(s"graft-idx-$name")
     d.toFile.deleteOnExit()
     d.toString
-  }
-
-  /** All expressions of the optimized plan matching a predicate. */
-  private def exprCount(df: DataFrame, p: Expression => Boolean): Int =
-    df.queryExecution.optimizedPlan.collect { case node =>
-      node.expressions.map(_.collect { case e if p(e) => e }.size).sum
-    }.sum
-
-  test("minhash: stored signatures reproduce direct mining, no signature recompute") {
-    val path = tmpDir("minhash")
-    IndexStore.buildMinHash(docs, "doc_id", "text", path, k = 64, shingleN = 8)
-
-    val direct = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
-        k = 64, bands = 16, shingleN = 8, minEstJaccard = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    graft.util.CacheScope.shared.release()
-
-    // query twice from the same stored index
-    (1 to 2).foreach { _ =>
-      val fromIndex = IndexStore.minHashNearDuplicates(spark, path,
-        bands = 16, minEstJaccard = 0.5)
-      assert(fromIndex.as[(Long, Long, Double)].collect().toSet === direct)
-      // the plan computes NO minhash signatures — the index scan is the input
-      assert(exprCount(fromIndex, _.isInstanceOf[MinHashSig]) === 0)
-      assert(fromIndex.inputFiles.forall(_.contains(path)),
-        "index query reads files outside the stored index")
-      graft.util.CacheScope.shared.release()
-    }
-  }
-
-  test("minhash append: build-half + append-half == build-full; re-append is a no-op") {
-    val half = tmpDir("mh-append")
-    val full = tmpDir("mh-full")
-    IndexStore.buildMinHash(docs.where($"doc_id" % 2 === 0), "doc_id", "text",
-      half, k = 64, shingleN = 8)
-    IndexStore.buildMinHash(docs, "doc_id", "text", full, k = 64, shingleN = 8)
-
-    val oddCount = docs.where($"doc_id" % 2 === 1 && $"text".isNotNull).count()
-    assert(IndexStore.appendMinHash(docs, "doc_id", "text", half) === oddCount)
-    // idempotent: every id is already indexed now
-    assert(IndexStore.appendMinHash(docs, "doc_id", "text", half) === 0L)
-
-    val a = IndexStore.loadMinHash(spark, half)._1
-      .select($"id", $"sig").as[(Long, Seq[Long])].collect().toSet
-    val b = IndexStore.loadMinHash(spark, full)._1
-      .select($"id", $"sig").as[(Long, Seq[Long])].collect().toSet
-    assert(a === b)
-  }
-
-  test("lsh append: appended index reproduces the full-built index") {
-    // The MinHash index is the banded-LSH index: an appended index must
-    // yield the same (band, bucket) keys and the same mined pairs as one
-    // built over the whole corpus in one go.
-    val half = tmpDir("lsh-append")
-    val full = tmpDir("lsh-full")
-    IndexStore.buildMinHash(docs.where($"doc_id" % 2 === 0), "doc_id", "text",
-      half, k = 64, shingleN = 8)
-    IndexStore.buildMinHash(docs, "doc_id", "text", full, k = 64, shingleN = 8)
-    assert(IndexStore.appendMinHash(docs, "doc_id", "text", half) ===
-      docs.where($"doc_id" % 2 === 1 && $"text".isNotNull).count())
-    assert(IndexStore.appendMinHash(docs, "doc_id", "text", half) === 0L)
-
-    val buckets = (p: String) =>
-      Dedup.bandedBuckets(IndexStore.loadMinHash(spark, p)._1, bands = 16)
-        .select($"id", $"band", $"bucket").as[(Long, Int, Long)].collect().toSet
-    assert(buckets(half) === buckets(full))
-
-    val pairs = (p: String) => {
-      val got = IndexStore.minHashNearDuplicates(spark, p, bands = 16, minEstJaccard = 0.5)
-        .as[(Long, Long, Double)].collect().toSet
-      graft.util.CacheScope.shared.release()
-      got
-    }
-    val fromFull = pairs(full)
-    assert(fromFull.nonEmpty)
-    assert(pairs(half) === fromFull)
   }
 
   test("bloom: stored filter probes like a fresh build; append folds a new dim slice in") {
@@ -124,11 +44,11 @@ class IndexStoreSpec extends SparkSpec {
 
   test("kind mismatch fails loudly at load") {
     val path = tmpDir("kind")
-    IndexStore.buildMinHash(docs, "doc_id", "text", path)
+    IndexStore.buildBloom(docs, Seq("doc_id"), path, expectedItems = 1000L)
     val e = intercept[IllegalArgumentException] {
       IndexStore.loadDriftBaseline(spark, path)
     }
-    assert(e.getMessage.contains("'minhash'"))
+    assert(e.getMessage.contains("'bloom'"))
   }
 
   test("drift baseline: stored sketch scores == direct compare; baseline never rescanned") {

@@ -150,9 +150,4 @@ class PlanSpec extends SparkSpec {
     val q = docs.where(col("lang") === "en").select(col("doc_id"))
     assert(physical(q).toString.contains("PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]"))
   }
-
-  test("minhash/simhash signature plans are shuffle-free (native single projection)") {
-    assert(shuffles(graft.dedup.Dedup.minHashSignatures(docs, "doc_id", "text")).isEmpty)
-    assert(shuffles(graft.dedup.Dedup.simHash(docs, "doc_id", "text")).isEmpty)
-  }
 }

@@ -107,6 +107,9 @@ class ResumeSpec extends SparkSpec {
     assert(violations.nonEmpty)
     val r2 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
     assert(r2.pending.isEmpty && r2.skipped === r1.pending.size.toLong)
+    // Its verdicts are the verdict frame with no rows, not the manifest.
+    assert(r2.verdicts.schema === r1.verdicts.schema)
+    assert(r2.verdicts.count() === 0L)
     assert(listing(s"$out/verdicts") === verdicts)
     assert(listing(Checkpoint.manifestPath(out)) === committed)
     assert(partitionFiles() === violations)

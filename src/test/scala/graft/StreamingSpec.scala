@@ -208,39 +208,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming index maintenance: micro-batches fold into the stored MinHash index; replay is a no-op") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val idxPath = Files.createTempDirectory("graft-stream-idx").toString
-    val ckpt = Files.createTempDirectory("graft-stream-idx-ckpt").toString
-    val d =
-      (1L to 6L).map(i => (i, s"document number $i with some distinctive words w$i x$i y$i z$i"))
-    // index bootstrapped from the first two docs (the batch build)
-    graft.index.IndexStore.buildMinHash(
-      d.take(2).toDF("doc_id", "text"), "doc_id", "text", idxPath, k = 32, shingleN = 4)
-
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingValidator.minHashIndexSink(
-      input.toDF.toDF("doc_id", "text"), "doc_id", "text", idxPath, ckpt)
-    try {
-      input.addData(d(2), d(3))
-      q.processAllAvailable()
-      input.addData(d(1), d(4), d(5)) // d(1) is a REPLAY of an indexed doc
-      q.processAllAvailable()
-    } finally q.stop()
-
-    // stored index == one-shot batch build over the full corpus
-    val fullPath = Files.createTempDirectory("graft-stream-idx-full").toString
-    graft.index.IndexStore.buildMinHash(
-      d.toDF("doc_id", "text"), "doc_id", "text", fullPath, k = 32, shingleN = 4)
-    val stored = graft.index.IndexStore.loadMinHash(spark, idxPath)._1
-      .select($"id", $"sig").as[(Long, Seq[Long])].collect().toSet
-    val full = graft.index.IndexStore.loadMinHash(spark, fullPath)._1
-      .select($"id", $"sig").as[(Long, Seq[Long])].collect().toSet
-    assert(stored === full)
-  }
-
   test("windowed verdicts roll up violation counts per tumbling window") {
     val src = Files.createTempDirectory("graft-stream-src2").toString
     val batch = spark.read.parquet(sf("sf0.001") + "/events.parquet")
