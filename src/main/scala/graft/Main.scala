@@ -16,10 +16,25 @@ import org.apache.spark.sql.SparkSession
   * `--out` skips committed partitions (see [[graft.resume.Checkpoint]]).
   */
 object Main {
+  private val flags = Seq("input", "rows", "out", "partitions")
+
+  /** `--flag value` pairs of the four flags above. An unknown flag, a
+    * flag without a value, a repeated flag or a stray argument throws
+    * `IllegalArgumentException`: a typo such as `--ouput` must not fall
+    * back to a default `--out` that may hold another run's manifest.
+    */
+  def parseArgs(args: Seq[String]): Map[String, String] =
+    args.grouped(2).foldLeft(Map.empty[String, String]) { (opts, pair) =>
+      val k = pair.head.stripPrefix("--")
+      require(pair.head.startsWith("--") && flags.contains(k),
+        s"unknown argument '${pair.head}'; expected ${flags.mkString("--", ", --", "")}")
+      require(pair.size == 2 && !pair(1).startsWith("--"), s"--$k needs a value")
+      require(!opts.contains(k), s"--$k given twice")
+      opts + (k -> pair(1))
+    }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = parseArgs(args.toSeq)
     val rows = opts.getOrElse("rows", "100000").toLong
     val out = opts.getOrElse("out", "/tmp/graft-run")
     val parts = opts.getOrElse("partitions", "32").toInt

@@ -5,7 +5,6 @@ import graft.drift.Drift
 import graft.refint.RefIntegrity
 import graft.schema.{FieldSpec, Schema, SchemaJson}
 import graft.stats.ColumnStats
-import graft.text.TextAnalysis
 import graft.unique.Uniqueness
 import graft.validate.Validator
 import graft.verdict.Verdict
@@ -586,24 +585,6 @@ object SparkEntry {
       keysRules = Some(FieldSpec(allowed = Some(Seq("de", "en", "es", "fr")))),
       valuesRules = Some(FieldSpec(regex = Some("src[0-9]{1,2}")))))
 
-  /** documents + a deterministically PII-injected text derivative —
-    * the synthetic corpus contains no natural PII, so the redaction
-    * entry injects one category per doc_id residue class (emails+URLs,
-    * IPv4+long ids, or untouched). Mirrored exactly by the
-    * `q_redact_documents` oracle.
-    */
-  private def docsWithPii(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).withColumn("text_pii",
-      when(pmod(col("doc_id"), lit(3)) === 0,
-        concat(col("text"), lit(" reach user"), col("doc_id").cast("string"),
-          lit("@example.com or https://site"), col("doc_id").cast("string"),
-          lit(".example.org/p?id="), col("doc_id").cast("string")))
-        .when(pmod(col("doc_id"), lit(3)) === 1,
-          concat(col("text"), lit(" host 10.0."),
-            pmod(col("doc_id"), lit(256)).cast("string"),
-            lit(".25 acct 900000000"), col("doc_id").cast("string")))
-        .otherwise(col("text")))
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_validate_documents" -> ((s, dir) =>
       Validator.violations(docs(s, dir), docSchema, Seq("doc_id"))),
@@ -751,49 +732,6 @@ object SparkEntry {
         ev.where(pmod(col("event_id"), lit(2)) === 1),
         "value", Seq("event_type"), nBins = 4, exact = true)
     }),
-
-    // --- training-data pipeline: text analysis -------------------------
-    "q_tokens_documents" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        TextAnalysis.tokenCountWs(col("text")).cast("long").as("n_tokens_ws"),
-        TextAnalysis.tokenCountBpe(col("text")).cast("long").as("n_tokens_bpe"))),
-    "q_langid_documents" -> ((s, dir) =>
-      TextAnalysis.langId(docs(s, dir), "text")
-        .select(col("doc_id"), col("s_en").cast("long"), col("s_de").cast("long"),
-          col("s_es").cast("long"), col("s_fr").cast("long"), col("lang_pred"))),
-    "q_quality_documents" -> ((s, dir) =>
-      TextAnalysis.qualityFeatures(docs(s, dir), "text")
-        .select(col("doc_id"), col("n_chars_txt").cast("long"),
-          col("n_tokens").cast("long"),
-          round(col("alpha_ratio"), 6).as("alpha_ratio"),
-          round(col("punct_ratio"), 6).as("punct_ratio"),
-          round(col("stop_ratio"), 6).as("stop_ratio"),
-          round(col("quality"), 6).as("quality"))),
-    "q_fingerprint_documents" -> ((s, dir) =>
-      TextAnalysis.fingerprint(docs(s, dir), "text")
-        .select(col("doc_id"), col("content_sha"), col("fp64"))),
-    "q_repetition_documents" -> ((s, dir) =>
-      // Gopher-style repetition/boilerplate features — per-doc mode via
-      // a zero-shuffle sorted-array run-length scan (aggregate HOF).
-      TextAnalysis.repetitionFeatures(docs(s, dir), "text")
-        .select(col("doc_id"), col("n_words"), col("n_distinct_words"),
-          round(col("dup_word_frac"), 6).as("dup_word_frac"),
-          round(col("top_word_frac"), 6).as("top_word_frac"),
-          round(col("top_bigram_frac"), 6).as("top_bigram_frac"),
-          round(col("symbol_ratio"), 6).as("symbol_ratio"))),
-    "q_redact_documents" -> ((s, dir) =>
-      // PII scrubbing over a deterministically PII-injected derivative
-      // of the text column (the base corpus is synthetic and clean, so
-      // the injection makes every category fire; the oracle injects the
-      // identical strings and replays the same ordered regex passes).
-      TextAnalysis.redactPii(docsWithPii(s, dir), "text_pii")
-        .select(col("doc_id"), col("n_url"), col("n_email"), col("n_ipv4"),
-          col("n_id_digits"), col("text_redacted"))),
-    "q_toptokens_documents" -> ((s, dir) =>
-      // Exact corpus-wide heavy hitters (vocabulary head): shuffle
-      // bounded by vocab size, top-k via TakeOrderedAndProject.
-      TextAnalysis.topTokens(docs(s, dir), "text", k = 20)),
 
     "q_profile_documents" -> ((s, dir) =>
       // Schema inference step 1: one-pass per-field corpus profile
@@ -1166,7 +1104,7 @@ object SparkEntry {
         |                        THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_outliers,
         | round(q1, 6) AS q1, round(q3, 6) AS q3,
         | round(lo, 6) AS lo, round(hi, 6) AS hi
-        |FROM v JOIN f USING (l_returnflag)
+        |FROM v JOIN f ON v.l_returnflag IS NOT DISTINCT FROM f.l_returnflag
         |GROUP BY v.l_returnflag, q1, q3, lo, hi""".stripMargin,
     "q_unique_lineitem" ->
       """SELECT CAST(sum(n) AS BIGINT) AS n_rows, count(*) AS n_keys,
@@ -1333,143 +1271,6 @@ object SparkEntry {
         | round(sum(psi_term), 6) AS psi,
         | round(max(abs(cdf_p - cdf_q)), 6) AS ks
         |FROM t GROUP BY event_type""".stripMargin,
-
-    // --- text analysis -------------------------------------------------
-    "q_tokens_documents" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN text IS NULL THEN NULL
-        |  WHEN length(trim(text)) = 0 THEN 0
-        |  ELSE len(regexp_extract_all(trim(text), '\S+')) END AS BIGINT) AS n_tokens_ws,
-        | CAST(CASE WHEN text IS NULL THEN NULL
-        |  ELSE len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) END AS BIGINT) AS n_tokens_bpe
-        |FROM documents""".stripMargin,
-    "q_langid_documents" ->
-      """WITH s AS (
-        | SELECT doc_id, text,
-        |  len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|it|with|a)\b')) AS s_en,
-        |  len(regexp_extract_all(lower(text), '\b(der|die|und|das|ist|nicht|ein|mit|von|zu)\b')) AS s_de,
-        |  len(regexp_extract_all(lower(text), '\b(el|la|los|que|y|en|un|por|con|se)\b')) AS s_es,
-        |  len(regexp_extract_all(lower(text), '\b(le|la|les|et|des|en|un|du|est|que)\b')) AS s_fr,
-        |  len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS cjk
-        | FROM documents)
-        |SELECT doc_id, CAST(s_en AS BIGINT) AS s_en, CAST(s_de AS BIGINT) AS s_de,
-        | CAST(s_es AS BIGINT) AS s_es, CAST(s_fr AS BIGINT) AS s_fr,
-        | CASE WHEN text IS NULL THEN NULL
-        |  WHEN cjk > 0 THEN 'zh'
-        |  WHEN s_en = 0 AND s_de = 0 AND s_es = 0 AND s_fr = 0 THEN 'und'
-        |  WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-        |  WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
-        |  WHEN s_es >= s_fr THEN 'es'
-        |  ELSE 'fr' END AS lang_pred
-        |FROM s""".stripMargin,
-    "q_quality_documents" ->
-      """WITH f AS (
-        | SELECT doc_id,
-        |  length(text) AS n_chars_txt,
-        |  length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-        |  length(regexp_replace(text, '[^.,;:!?''"()\[\]-]', '', 'g')) AS n_punct,
-        |  CASE WHEN text IS NULL THEN NULL
-        |   WHEN length(trim(text)) = 0 THEN 0
-        |   ELSE len(regexp_extract_all(trim(text), '\S+')) END AS n_tokens,
-        |  len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|it|with|a)\b')) AS n_stop
-        | FROM documents),
-        |r AS (
-        | SELECT doc_id, n_chars_txt, n_tokens,
-        |  CASE WHEN n_chars_txt > 0 THEN n_alpha / CAST(n_chars_txt AS DOUBLE) ELSE 0 END AS alpha_ratio,
-        |  CASE WHEN n_chars_txt > 0 THEN n_punct / CAST(n_chars_txt AS DOUBLE) ELSE 0 END AS punct_ratio,
-        |  CASE WHEN n_tokens > 0 THEN n_stop / CAST(n_tokens AS DOUBLE) ELSE 0 END AS stop_ratio
-        | FROM f)
-        |SELECT doc_id, CAST(n_chars_txt AS BIGINT) AS n_chars_txt,
-        | CAST(n_tokens AS BIGINT) AS n_tokens,
-        | round(alpha_ratio, 6) AS alpha_ratio,
-        | round(punct_ratio, 6) AS punct_ratio,
-        | round(stop_ratio, 6) AS stop_ratio,
-        | round(0.4 * alpha_ratio + 0.3 * least(1.0, stop_ratio * 4)
-        |       + 0.3 * least(1.0, n_tokens / 50.0), 6) AS quality
-        |FROM r""".stripMargin,
-    "q_fingerprint_documents" ->
-      """SELECT doc_id,
-        | sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS content_sha,
-        | substring(sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 16) AS fp64
-        |FROM documents""".stripMargin,
-    "q_repetition_documents" ->
-      """WITH d AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN text IS NULL THEN NULL
-        |   ELSE list_filter(
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
-        |    x -> length(x) > 0)
-        |  END AS ws
-        | FROM documents),
-        |b AS (
-        | SELECT doc_id, text, ws,
-        |  CASE WHEN ws IS NULL THEN NULL
-        |   ELSE list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])
-        |  END AS bg
-        | FROM d),
-        |wtf AS (
-        | SELECT doc_id, max(c) AS top_w FROM (
-        |  SELECT doc_id, tok, count(*) AS c
-        |  FROM (SELECT doc_id, unnest(ws) AS tok FROM d) GROUP BY 1, 2)
-        | GROUP BY 1),
-        |btf AS (
-        | SELECT doc_id, max(c) AS top_b FROM (
-        |  SELECT doc_id, tok, count(*) AS c
-        |  FROM (SELECT doc_id, unnest(bg) AS tok FROM b) GROUP BY 1, 2)
-        | GROUP BY 1)
-        |SELECT b.doc_id,
-        | CAST(len(ws) AS BIGINT) AS n_words,
-        | CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct_words,
-        | CASE WHEN text IS NULL THEN NULL WHEN len(ws) > 0
-        |  THEN round((len(ws) - len(list_distinct(ws))) / CAST(len(ws) AS DOUBLE), 6)
-        |  ELSE 0.0 END AS dup_word_frac,
-        | CASE WHEN text IS NULL THEN NULL WHEN len(ws) > 0
-        |  THEN round(coalesce(top_w, 0) / CAST(len(ws) AS DOUBLE), 6)
-        |  ELSE 0.0 END AS top_word_frac,
-        | CASE WHEN text IS NULL THEN NULL WHEN len(bg) > 0
-        |  THEN round(coalesce(top_b, 0) / CAST(len(bg) AS DOUBLE), 6)
-        |  ELSE 0.0 END AS top_bigram_frac,
-        | CASE WHEN text IS NULL THEN NULL WHEN length(text) > 0
-        |  THEN round(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) / CAST(length(text) AS DOUBLE), 6)
-        |  ELSE 0.0 END AS symbol_ratio
-        |FROM b LEFT JOIN wtf ON wtf.doc_id = b.doc_id
-        |       LEFT JOIN btf ON btf.doc_id = b.doc_id""".stripMargin,
-    "q_redact_documents" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN text || ' reach user' || CAST(doc_id AS VARCHAR)
-        |         || '@example.com or https://site' || CAST(doc_id AS VARCHAR)
-        |         || '.example.org/p?id=' || CAST(doc_id AS VARCHAR)
-        |       WHEN doc_id % 3 = 1 THEN text || ' host 10.0.'
-        |         || CAST(doc_id % 256 AS VARCHAR) || '.25 acct 900000000'
-        |         || CAST(doc_id AS VARCHAR)
-        |       ELSE text END AS t
-        | FROM documents)
-        |SELECT doc_id,
-        | CASE WHEN t IS NULL THEN NULL
-        |  ELSE CAST(len(regexp_extract_all(t, 'https?://[^\s]+')) AS BIGINT) END AS n_url,
-        | CASE WHEN t IS NULL THEN NULL
-        |  ELSE CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) END AS n_email,
-        | CASE WHEN t IS NULL THEN NULL
-        |  ELSE CAST(len(regexp_extract_all(t, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS BIGINT) END AS n_ipv4,
-        | CASE WHEN t IS NULL THEN NULL
-        |  ELSE CAST(len(regexp_extract_all(t, '\b[0-9]{9,}\b')) AS BIGINT) END AS n_id_digits,
-        | regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-        |   'https?://[^\s]+', '<URL>', 'g'),
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |   '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-        |   '\b[0-9]{9,}\b', '<ID>', 'g') AS text_redacted
-        |FROM p""".stripMargin,
-    "q_toptokens_documents" ->
-      """WITH tok AS (
-        | SELECT unnest(list_filter(
-        |   string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
-        |   x -> length(x) > 0)) AS token
-        | FROM documents WHERE text IS NOT NULL),
-        |c AS (SELECT token, count(*) AS n FROM tok GROUP BY 1)
-        |SELECT token, n,
-        | CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS BIGINT) AS rank
-        |FROM c ORDER BY n DESC, token ASC LIMIT 20""".stripMargin,
 
     // region_hint is NULL (→ defaulted) when the doc is oversized OR
     // lang itself is null — coalesce over the full derivation, not the

@@ -169,9 +169,8 @@ object ColumnStats {
       accuracy: Int = 10000
   ): DataFrame = {
     require(groupCols.nonEmpty, "outliers requires at least one group column")
-    val b = outlierBounds(df, valueCol, groupCols, k, exact, accuracy)
-      .select(groupCols.map(col) :+ col("lo") :+ col("hi"): _*)
-    df.join(broadcast(b), groupCols)
+    withFences(df, outlierBounds(df, valueCol, groupCols, k, exact, accuracy),
+        groupCols, Seq("lo", "hi"))
       .where(col(valueCol) < col("lo") || col(valueCol) > col("hi"))
   }
 
@@ -190,7 +189,7 @@ object ColumnStats {
     val b = outlierBounds(df, valueCol, groupCols, k, exact, accuracy)
     val out = (col(valueCol) < col("lo") || col(valueCol) > col("hi"))
       .cast("long")
-    df.join(broadcast(b), groupCols)
+    withFences(df, b, groupCols, Seq("q1", "q3", "lo", "hi"))
       .groupBy(groupCols.map(col): _*)
       .agg(
         count(col(valueCol)).as("n_values"),
@@ -199,6 +198,25 @@ object ColumnStats {
         first(col("q3")).as("q3"),
         first(col("lo")).as("lo"),
         first(col("hi")).as("hi"))
+  }
+
+  /** `df` plus its group's `fences` columns of `bounds`, with the
+    * group columns first: a BROADCAST join of the O(groups) bounds (the
+    * fact side never shuffles) on `<=>` per group column, so a NULL
+    * group meets the fences that [[outlierBounds]] computes for it.
+    */
+  private def withFences(
+      df: DataFrame,
+      bounds: DataFrame,
+      groupCols: Seq[String],
+      fences: Seq[String]
+  ): DataFrame = {
+    val keys = groupCols.map(c => c -> s"__fence_$c")
+    val b = bounds.select(
+      keys.map { case (c, k) => col(c).as(k) } ++ fences.map(col): _*)
+    df.join(broadcast(b), keys.map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _))
+      .select((groupCols ++ df.columns.filterNot(groupCols.contains) ++ fences)
+        .map(col): _*)
   }
 
   /** Value-length histogram per group: `(…groupCols, bin, n)` where

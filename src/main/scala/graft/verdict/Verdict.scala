@@ -29,21 +29,29 @@ object Verdict {
     * severity observed in the partition (null when clean).
     */
   def compute(df: DataFrame, schema: Schema, partitionCol: String): DataFrame =
+    counted(df, schema)
+      .groupBy(col(partitionCol))
+      .agg(metrics.head, metrics.tail: _*)
+
+  /** [[Validator.annotate]] plus the per-row error, warning and
+    * worst-severity counters that [[metrics]] aggregates.
+    */
+  private def counted(df: DataFrame, schema: Schema): DataFrame =
     Validator
       .annotate(df, schema)
       .withColumn("__n_err", RuleCompiler.errorCount(schema))
       .withColumn("__n_warn", RuleCompiler.warningCount(schema))
       .withColumn("__worst", RuleCompiler.worstSeverityRank(schema))
-      .groupBy(col(partitionCol))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("n_violations") > 0, 1L).otherwise(0L)).as("n_bad_rows"),
-        sum(col("n_violations").cast("long")).as("n_violations"),
-        sum(col("__n_warn").cast("long")).as("n_warnings"),
-        sum(col("__n_err").cast("long")).as("n_errors"),
-        RuleCompiler.severityName(max(col("__worst"))).as("worst_severity"),
-        (sum(col("__n_err").cast("long")) === 0L).as("pass")
-      )
+
+  /** The verdict metrics over [[counted]] rows, in output order. */
+  private val metrics: Seq[Column] = Seq(
+    count(lit(1)).as("n_rows"),
+    sum(when(col("n_violations") > 0, 1L).otherwise(0L)).as("n_bad_rows"),
+    sum(col("n_violations").cast("long")).as("n_violations"),
+    sum(col("__n_warn").cast("long")).as("n_warnings"),
+    sum(col("__n_err").cast("long")).as("n_errors"),
+    RuleCompiler.severityName(max(col("__worst"))).as("worst_severity"),
+    (sum(col("__n_err").cast("long")) === 0L).as("pass"))
 
   /** One partition's verdict metrics, as [[compute]] aggregates them;
     * `worstRank` is -1 for a clean partition.
@@ -221,20 +229,7 @@ object Verdict {
     * partition value.
     */
   def computeRollup(df: DataFrame, schema: Schema, partitionCol: String): DataFrame =
-    Validator
-      .annotate(df, schema)
-      .withColumn("__n_err", RuleCompiler.errorCount(schema))
-      .withColumn("__n_warn", RuleCompiler.warningCount(schema))
-      .withColumn("__worst", RuleCompiler.worstSeverityRank(schema))
+    counted(df, schema)
       .rollup(col(partitionCol))
-      .agg(
-        grouping(col(partitionCol)).cast("int").as("is_total"),
-        count(lit(1)).as("n_rows"),
-        sum(when(col("n_violations") > 0, 1L).otherwise(0L)).as("n_bad_rows"),
-        sum(col("n_violations").cast("long")).as("n_violations"),
-        sum(col("__n_warn").cast("long")).as("n_warnings"),
-        sum(col("__n_err").cast("long")).as("n_errors"),
-        RuleCompiler.severityName(max(col("__worst"))).as("worst_severity"),
-        (sum(col("__n_err").cast("long")) === 0L).as("pass")
-      )
+      .agg(grouping(col(partitionCol)).cast("int").as("is_total"), metrics: _*)
 }

@@ -20,24 +20,4 @@ object GraftExprBridge {
     case internal.SqlExpression(sql, _) => Some(sql)
     case _ => None
   }
-
-  /** Register a function into a LIVE session's registry (the
-    * `spark.sql.extensions` route only applies at session build).
-    */
-  def registerFunction(
-      spark: SparkSession,
-      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(name, info, builder)
-
-  /** Drain a SparkSessionExtensions' injected functions into a registry
-    * (`registerFunctions` is private[sql]) — lets tests exercise the
-    * `spark.sql.extensions` wiring without building a new session.
-    */
-  def applyExtensionFunctions(
-      ext: SparkSessionExtensions,
-      registry: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
-    ext.registerFunctions(registry)
 }

@@ -5,7 +5,6 @@ import graft.schema.{FieldSpec, Schema}
 import graft.unique.Uniqueness
 import graft.validate.Validator
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -15,9 +14,7 @@ import org.scalacheck.Prop.forAll
   *   - violations(df) is empty ⟺ every rule predicate holds row-wise
   *     (checked against an independent driver-side interpreter);
   *   - dedup idempotence;
-  *   - salting invariance (salted == unsalted counts);
-  *   - native-kernel laws (minhash bounds/identity, simhash metric
-  *     laws) without Spark in the loop.
+  *   - salting invariance (salted == unsalted counts).
   */
 object RuleProps extends Properties("graft.rules") {
 
@@ -101,31 +98,5 @@ object RuleProps extends Properties("graft.rules") {
       val salted = Uniqueness.groupCountsSalted(df, "repo", nSalts = 7)
         .as[(String, Long)].collect().toMap
       plain == salted
-    }
-
-  // ---------------- native kernels, no Spark in the loop ----------------
-
-  private def sig(s: String, n: Int, k: Int): Seq[Long] = {
-    val a = graft.functions.MinHashSig.compute(UTF8String.fromString(s), n, k)
-    (0 until a.numElements()).map(a.getLong)
-  }
-
-  property("minhash: identical text → identical signature; est jaccard ∈ [0,1]") =
-    forAll(Gen.alphaNumStr, Gen.alphaNumStr) { (a, b) =>
-      val (sa, sb) = (sig(a, 4, 32), sig(b, 4, 32))
-      val self = sig(a, 4, 32)
-      val selfEq = sa == self
-      val bounded = if (sa.nonEmpty && sb.nonEmpty) {
-        val est = sa.zip(sb).count { case (x, y) => x == y } / 32.0
-        est >= 0.0 && est <= 1.0 && (a != b || est == 1.0)
-      } else true
-      selfEq && bounded
-    }
-
-  property("simhash: d(a,a)=0, symmetric, ≤64") =
-    forAll(Gen.alphaNumStr, Gen.alphaNumStr) { (a, b) =>
-      def h(s: String) = graft.functions.SimHash64.compute(UTF8String.fromString(s))
-      def d(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
-      d(h(a), h(a)) == 0 && d(h(a), h(b)) == d(h(b), h(a)) && d(h(a), h(b)) <= 64
     }
 }

@@ -78,20 +78,28 @@ class StatsSpec extends SparkSpec {
   }
 
   test("outliers: planted extremes flagged, bulk untouched; summary agrees with row set") {
-    // 100 tightly clustered values + two planted extremes per group
+    // 100 tightly clustered values + two planted extremes per group;
+    // the NULL group is a group like any other (one planted extreme)
     val rows =
       (1 to 100).map(i => ("a", 100.0 + (i % 10))) ++
         Seq(("a", 10000.0), ("a", -10000.0)) ++
-        (1 to 100).map(i => ("b", 5.0 + (i % 3) * 0.1))
+        (1 to 100).map(i => ("b", 5.0 + (i % 3) * 0.1)) ++
+        (1 to 100).map(i => (null: String, 50.0 + (i % 5))) ++
+        Seq((null: String, 5000.0))
     val df = rows.toDF("g", "v")
     val out = ColumnStats.outliers(df, "v", Seq("g"), k = 1.5, exact = true)
       .select($"g", $"v").collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-    assert(out === Set(("a", 10000.0), ("a", -10000.0)))
+    assert(out === Set(("a", 10000.0), ("a", -10000.0), (null, 5000.0)))
     val sum = ColumnStats.outlierSummary(df, "v", Seq("g"), k = 1.5, exact = true)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(5), r.getDouble(6))).toMap
     assert(sum("a")._1 === 102L && sum("a")._2 === 2L)
     assert(sum("b")._1 === 100L && sum("b")._2 === 0L)
+    assert(sum.size === 3)
+    val nullFences = ColumnStats.outlierBounds(df, "v", Seq("g"), k = 1.5, exact = true)
+      .where($"g".isNull).select($"lo", $"hi").as[(Double, Double)].collect().toSeq
+    assert(nullFences.size === 1)
+    assert(sum(null) === ((101L, 1L, nullFences.head._1, nullFences.head._2)))
     // fences bracket the bulk
     assert(sum("a")._3 > -10000.0 && sum("a")._4 < 10000.0)
     // null values are never outliers

@@ -20,7 +20,7 @@ look for, per the scale-design rules in SURVEY.md §4 / README:
 
 - `ReadSchema` lists ONLY the referenced columns (column pruning);
 - `PushedFilters` shows predicates reaching the parquet scan;
-- rule validation/signatures are single `WholeStageCodegen` spans with
+- rule validation is a single `WholeStageCodegen` span with
   **no Exchange** (zero shuffle);
 - referential integrity uses `BroadcastHashJoin … LeftAnti`;
 - aggregates show `partial_*` → Exchange → `merge_*`/final (map-side
