@@ -119,28 +119,12 @@ object Drift {
     compareWithEdges(cur, base, valueCol, groupCols,
       quantileEdges(base, valueCol, nBins, exact), eps)
 
-  /** The persistable baseline sketch: per-(group, bin) counts. O(groups
-    * × nBins) rows — write it once per baseline snapshot
-    * (`sketch(df,…).write.parquet(…)`), then score any later snapshot
-    * against it WITHOUT rescanning the baseline data via
-    * [[compareWithBaseline]]. Binning parameters must match between
-    * sketch and compare (callers persist them alongside, cf.
-    * ValidationRun metrics).
-    */
-  def sketch(
-      df: DataFrame,
-      valueCol: String,
-      groupCols: Seq[String],
-      nBins: Int,
-      lo: Double,
-      hi: Double): DataFrame =
-    bins(df, valueCol, groupCols, nBins, lo, hi)
-
   /** PSI/KS of `cur` against a materialized EDGE-binned baseline
-    * sketch (the output of [[binsByEdges]] read back from storage, cf.
-    * `IndexStore.buildDriftBaseline`). Only `cur` is scanned; the
-    * sketch side is O(groups × bins). The edges must be the ones the
-    * sketch was built with — the store's meta sidecar carries them.
+    * sketch (the output of [[binsByEdges]] read back from storage) —
+    * the scorer behind `IndexStore.driftAgainstBaseline`, the one
+    * stored-baseline path. Only `cur` is scanned; the sketch side is
+    * O(groups × bins). The edges must be the ones the sketch was built
+    * with — the store's meta sidecar carries them.
     */
   def compareWithBaselineEdges(
       cur: DataFrame,
@@ -150,25 +134,6 @@ object Drift {
       edges: Array[Double],
       eps: Double = 1e-6): DataFrame = {
     val c = binsByEdges(cur, valueCol, groupCols, edges)
-      .withColumnRenamed("n", "n_cur")
-    val b = baselineSketch.withColumnRenamed("n", "n_base")
-    scoreBins(alignCounts(c, b, groupCols :+ "bin"), groupCols, eps)
-  }
-
-  /** PSI/KS of `cur` against an already-materialized baseline sketch
-    * (the output of [[sketch]], typically read back from parquet).
-    * Only `cur` is scanned; the sketch side is O(groups × nBins).
-    */
-  def compareWithBaseline(
-      cur: DataFrame,
-      baselineSketch: DataFrame,
-      valueCol: String,
-      groupCols: Seq[String],
-      nBins: Int,
-      lo: Double,
-      hi: Double,
-      eps: Double = 1e-6): DataFrame = {
-    val c = bins(cur, valueCol, groupCols, nBins, lo, hi)
       .withColumnRenamed("n", "n_cur")
     val b = baselineSketch.withColumnRenamed("n", "n_base")
     scoreBins(alignCounts(c, b, groupCols :+ "bin"), groupCols, eps)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSessio
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.Try
 
 /** Persistent build-once / query-many key-membership, drift and
   * expectation indices: each is built once and queried (or appended to)
@@ -18,14 +19,17 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   * Layout per index directory:
   *   - `data/…` — the index table (parquet); for the Bloom filter,
-  *     numbered versions `data/v-<n>` (see below);
-  *   - `meta/…` — one JSON row of build parameters (kind-tagged).
+  *     numbered versions `data/v-<n>`, each one row of the filter with
+  *     its own build parameters (see below);
+  *   - `meta/…` — one JSON row of build parameters (kind-tagged); the
+  *     Bloom store's holds only its kind, written once.
   *
   * The two artifacts this store REPLACES rather than appends to — the
   * Bloom filter and [[saveText]] documents — are immutable numbered
   * versions `v-<n>`: a new one is written to a fresh temp entry and
   * committed by ONE rename, and readers take the highest committed
-  * version. A crash at any step leaves the previous version readable.
+  * version. A crash at any step leaves the previous version readable,
+  * and a filter is never read with another build's parameters.
   *
   * CONCURRENCY: every `append…` path is SINGLE-WRITER. The slice
   * appends (drift baseline, expectation snapshots) are idempotent for
@@ -34,14 +38,20 @@ import java.nio.charset.StandardCharsets.UTF_8
   * read-merge-publish can lose one writer's keys, and two concurrent
   * publishes can claim the same version number. Serialize writers per
   * index path (the [[graft.resume.Checkpoint]] manifest, a scheduler
-  * lock, or one owning streaming query). Concurrent READERS are safe:
-  * a slice append replaces only its own partition, and a published
-  * version is never rewritten — only pruned once two newer ones exist,
-  * which a reader survives by resolving again.
+  * lock, or one owning streaming query). Concurrent READERS are safe
+  * against appends and Bloom publishes: a slice append replaces only its
+  * own partition, and a published version is never rewritten — only
+  * pruned once two newer ones exist, which a reader survives by
+  * resolving again. A drift baseline REBUILD is not: it overwrites
+  * `data/` and then `meta/` in place, so a reader in between can fail
+  * or see the new bins with the old edges; quiesce readers first.
   */
 object IndexStore {
 
   final case class BloomMeta(kind: String, keys: String, expectedItems: Long, fpp: Double)
+  /** One committed Bloom version: the filter and the parameters it was built with. */
+  private[index] final case class BloomVersion(bloom: Array[Byte], meta: BloomMeta)
+  private[index] final case class KindMeta(kind: String)
   final case class DriftMeta(kind: String, valueCol: String, groupCols: String, edges: Seq[Double])
   final case class ExpectationsMeta(kind: String, groupCols: String)
 
@@ -74,8 +84,10 @@ object IndexStore {
   /** Build and persist a Bloom filter over `dim`'s key tuple — the
     * build-once artifact for [[graft.refint.RefIntegrity]]'s bloom
     * paths. MB-sized regardless of dim width, so every later fact scan
-    * loads it in one driver read and probes with zero shuffle. The meta
-    * sidecar lands first, so a committed filter always has one.
+    * loads it in one driver read and probes with zero shuffle. The
+    * filter and its parameters are committed together, by one rename;
+    * the kind-only meta sidecar is written once, before the first
+    * filter, and never rewritten by a rebuild.
     */
   def buildBloom(
       dim: DataFrame,
@@ -85,29 +97,32 @@ object IndexStore {
       fpp: Double = 0.01): Unit = {
     val spark = dim.sparkSession
     val bytes = RefIntegrity.buildKeyBloom(dim, keys, expectedItems, fpp)
-    writeMeta(spark, path,
-      BloomMeta("bloom", keys.mkString(","), expectedItems, fpp))(
-      Encoders.product[BloomMeta])
-    publishBloom(spark, path, bytes)
-  }
-
-  private def publishBloom(spark: SparkSession, path: String, bytes: Array[Byte]): Unit = {
-    import spark.implicits._
-    publish(spark, new Path(s"$path/data")) { tmp =>
-      Seq(Tuple1(bytes)).toDF("bloom").coalesce(1).write.parquet(tmp.toString)
+    // Unreadable covers a crash inside the first sidecar write.
+    Try(spark.read.json(s"$path/meta").select(col("kind")).as[String](Encoders.STRING).head())
+      .toOption match {
+      case Some(kind) => require(kind == "bloom", s"index at $path is a '$kind' index, not 'bloom'")
+      case None => writeMeta(spark, path, KindMeta("bloom"))(Encoders.product[KindMeta])
     }
+    publishBloom(spark, path,
+      BloomVersion(bytes, BloomMeta("bloom", keys.mkString(","), expectedItems, fpp)))
   }
 
-  /** Stored filter bytes (the latest committed version) + build
-    * parameters. Callers must probe with the SAME key columns in the
-    * meta's recorded order.
+  private def publishBloom(spark: SparkSession, path: String, v: BloomVersion): Unit =
+    publish(spark, new Path(s"$path/data")) { tmp =>
+      spark.createDataset(Seq(v))(Encoders.product[BloomVersion])
+        .coalesce(1).write.parquet(tmp.toString)
+    }
+
+  /** Stored filter bytes + build parameters, both from the latest
+    * committed version. Callers must probe with the SAME key columns in
+    * the meta's recorded order.
     */
   def loadBloom(spark: SparkSession, path: String): (Array[Byte], BloomMeta) = {
-    val meta = readMeta[BloomMeta](spark, path, "bloom")(Encoders.product[BloomMeta])
-    val rows = latest(spark, new Path(s"$path/data"))(v => spark.read.parquet(v.toString).collect())
-      .getOrElse(throw new IllegalArgumentException(s"bloom index at $path has no filter"))
+    val rows = latest(spark, new Path(s"$path/data")) { v =>
+      spark.read.parquet(v.toString).as[BloomVersion](Encoders.product[BloomVersion]).collect()
+    }.getOrElse(throw new IllegalArgumentException(s"bloom index at $path has no filter"))
     require(rows.length == 1, s"bloom index at $path must hold exactly one row")
-    (rows.head.getAs[Array[Byte]]("bloom"), meta)
+    (rows.head.bloom, rows.head.meta)
   }
 
   /** Incrementally fold a new dim slice into a stored Bloom index:
@@ -131,7 +146,7 @@ object IndexStore {
       .select(RefIntegrity.keyHash(keys).as("__kh"))
       .stat.bloomFilter("__kh", meta.expectedItems, meta.fpp)
     bf.mergeInPlace(partial)
-    publishBloom(spark, path, graft.functions.BloomExprs.serialize(bf))
+    publishBloom(spark, path, BloomVersion(graft.functions.BloomExprs.serialize(bf), meta))
   }
 
   /** Write `rows` as one `<sliceCol>=<id>` partition and report how

@@ -56,7 +56,8 @@ object ValidationRun {
     // crashed-run retry idempotent), with the verdict counts observed
     // in the same pass …
     val observation = Observation()
-    val keys = keyCols :+ partitionCol
+    // The partition column may be a key column too (per-repo resume).
+    val keys = (keyCols :+ partitionCol).distinct
     Validator
       .explodeViolations(
         Verdict.observeCounts(slice, schema, Checkpoint.partitionKey(partitionCol),

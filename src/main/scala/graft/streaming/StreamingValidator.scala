@@ -3,6 +3,7 @@ package graft.streaming
 import graft.compile.RuleCompiler
 import graft.resume.Checkpoint
 import graft.schema.Schema
+import graft.validate.Validator
 import graft.verdict.Verdict
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
@@ -32,20 +33,6 @@ object StreamingValidator {
       pass: Boolean,
       expired: Boolean)
 
-  /** Stateless per-row validation: input stream + `n_violations`. */
-  def annotate(stream: DataFrame, schema: Schema): DataFrame =
-    stream.withColumn("n_violations", RuleCompiler.violationCount(schema))
-
-  /** Violation rows as a stream (explode + filter — still stateless). */
-  def violations(stream: DataFrame, schema: Schema, keyCols: Seq[String]): DataFrame = {
-    val keys = keyCols.map(col)
-    stream
-      .select(keys :+ explode(RuleCompiler.violationsArray(schema)).as("v"): _*)
-      .where(col("v").isNotNull)
-      .select(keys :+ col("v.field") :+ col("v.rule") :+ col("v.value")
-        :+ col("v.severity"): _*)
-  }
-
   /** Tumbling-window violation-rate verdicts per partition column:
     * `(window, partitionCol, n_rows, n_violations, pass)`. The
     * watermark bounds state so the query runs indefinitely.
@@ -58,7 +45,7 @@ object StreamingValidator {
       windowLength: String = "30 seconds",
       watermarkDelay: String = "1 minute"
   ): DataFrame =
-    annotate(stream, schema)
+    Validator.annotate(stream, schema)
       .withColumn("__n_err", RuleCompiler.errorCount(schema))
       // Event time must be TIMESTAMP (parquet often yields TIMESTAMP_NTZ;
       // session TZ is pinned UTC so the cast is deterministic).
@@ -111,7 +98,7 @@ object StreamingValidator {
       partitionCol: String,
       gapDuration: String = "30 minutes",
       watermarkDelay: String = "1 minute"): DataFrame =
-    annotate(stream, schema)
+    Validator.annotate(stream, schema)
       .withColumn("__n_err", RuleCompiler.errorCount(schema))
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, watermarkDelay)
@@ -145,7 +132,7 @@ object StreamingValidator {
     // Null keys group under the null String key directly — a sentinel
     // string would collide with a genuine key of the same value and
     // merge two keys' running state.
-    val perRow = annotate(stream, schema)
+    val perRow = Validator.annotate(stream, schema)
       .withColumn("__n_err", RuleCompiler.errorCount(schema))
       .select(
         col(keyCol).cast("string").as("key"),

@@ -56,7 +56,11 @@ object Validator {
     */
   def explodeViolations(projected: DataFrame, keyCols: Seq[String]): DataFrame = {
     val keys: Seq[Column] = keyCols.map(col)
-    projected.select(keys :+ explode(col(ViolationsCol)).as("v"): _*)
+    // explode_outer, not explode: for an explode of a column Catalyst
+    // infers `size(col) > 0` and pushes it through the projection, which
+    // evaluates every rule a second time. The outer variant's extra row
+    // (for a null or empty array) is dropped by the null filter below.
+    projected.select(keys :+ explode_outer(col(ViolationsCol)).as("v"): _*)
       .where(col("v").isNotNull)
       .select(keys :+ col("v.field") :+ col("v.rule") :+ col("v.value")
         :+ col("v.severity"): _*)
@@ -392,11 +396,9 @@ object Validator {
           r.value.as("value"),
           lit(r.severity).as("severity")))
     }
-    exploded
-      .select(keys :+ explode(RuleCompiler.structArray(structs)).as("v"): _*)
-      .where(col("v").isNotNull)
-      .select(keys :+ col("v.field") :+ col("v.rule") :+ col("v.value")
-        :+ col("v.severity"): _*)
+    explodeViolations(
+      exploded.select(keys :+ RuleCompiler.structArray(structs).as(ViolationsCol): _*),
+      keyCols)
   }
 
   /** Re-aggregated element-violation counts per input row: `(…keyCols,

@@ -2,7 +2,6 @@ package graft
 
 import graft.index.IndexStore
 import graft.resume.Checkpoint
-import graft.sources.TableIO
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -44,19 +43,15 @@ class CrashSpec extends SparkSpec {
     * stage's step count and the `view` a reader sees at each stage
     * boundary. Then for every step k of the K in total: a fresh run
     * faulted once at k must leave a view that is one of those boundary
-    * views, no earlier than the start of the faulted stage (or is
-    * `crashView`, where a crash may leave one more), and pass
-    * `invariant`; `recover` and a fault-free rerun of the faulted stage
-    * and those after it must reach the final view and pass `after`.
-    * Returns each stage's step count.
+    * views, no earlier than the start of the faulted stage, and a
+    * fault-free rerun of the faulted stage and those after it must
+    * reach the final view and pass `after`. Returns each stage's step
+    * count.
     */
   private def crashProof[V](name: String)(
       setup: String => Unit = _ => (),
       stages: Seq[String => Unit],
       view: String => V,
-      crashView: Option[V] = None,
-      invariant: String => Unit = _ => (),
-      recover: String => Unit = _ => (),
       after: String => Unit = _ => ()): Seq[Int] = quietly {
     val dir0 = fresh(name)
     setup(dir0)
@@ -77,10 +72,8 @@ class CrashSpec extends SparkSpec {
       assert(fired, s"$name: no fault fired at step $k of $total")
       val faulted = perStage.scanLeft(0)(_ + _).tail.indexWhere(k <= _)
       val seen = view(dir)
-      assert(boundary.drop(faulted).contains(seen) || crashView.contains(seen),
+      assert(boundary.drop(faulted).contains(seen),
         s"$name: a fault at step $k (stage ${faulted + 1}) left $seen")
-      invariant(dir)
-      recover(dir)
       stages.drop(faulted).foreach(_(dir))
       assert(view(dir) === boundary.last, s"$name: the retry after step $k")
       after(dir)
@@ -106,58 +99,31 @@ class CrashSpec extends SparkSpec {
     assert(ks.last > ks.head)
   }
 
-  test("buildBloom then appendBloom: a crash leaves no filter, the built or the merged one") {
+  test("buildBloom, appendBloom, rebuild: a crash leaves no filter or one with its own parameters") {
     val dim = spark.range(0L, 200L, 1L, 2)
       .select(concat(lit("r"), ($"id" % 7).cast("string")).as("repo"),
         $"id".cast("string").as("commit"))
     val keys = Seq("repo", "commit")
     def committed(dir: String): Boolean =
       Option(new File(local(dir), "bloom/data").list()).exists(_.exists(_.matches("v-\\d+")))
-    val ks = crashProof[Option[Seq[Byte]]]("bloom")(
+    // the rebuild changes the keys and the sizing: a filter read with
+    // the other build's parameters shows up in the view
+    val ks = crashProof[Option[(Seq[Byte], IndexStore.BloomMeta)]]("bloom")(
       stages = Seq(
         dir => IndexStore.buildBloom(dim.where($"id" % 2 === 0), keys, s"$dir/bloom",
           expectedItems = 1000L),
-        dir => IndexStore.appendBloom(dim, s"$dir/bloom")),
+        dir => IndexStore.appendBloom(dim, s"$dir/bloom"),
+        dir => IndexStore.buildBloom(dim, Seq("repo"), s"$dir/bloom", expectedItems = 50L)),
       view = dir =>
         if (!committed(dir)) {
           assert(Try(IndexStore.loadBloom(spark, s"$dir/bloom")).isFailure)
           None
-        } else Some(IndexStore.loadBloom(spark, s"$dir/bloom")._1.toSeq),
+        } else {
+          val (bytes, meta) = IndexStore.loadBloom(spark, s"$dir/bloom")
+          Some((bytes.toSeq, meta))
+        },
       after = dir => tidy(new File(local(dir), "bloom/data")))
-    info(s"K for build, append: ${ks.mkString(", ")}")
-  }
-
-  test("compact: every crash leaves all rows readable or a documented complete copy") {
-    def table(dir: String) = s"$dir/t"
-    val rows = (0L until 40L).toSet
-    def read(p: String): Option[Set[Long]] =
-      Try(spark.read.parquet(p).as[Long].collect().toSet).toOption
-    val ks = crashProof[Option[Set[Long]]]("compact")(
-      setup = dir => spark.range(0L, 40L, 1L, 4).toDF("id").write.parquet(table(dir)),
-      stages = Seq(dir => TableIO.compact(spark, table(dir), targetFileBytes = 1L << 30)),
-      view = dir => {
-        val seen = Try(spark.read.parquet(table(dir)).as[Long].collect().toSet)
-        seen.failed.foreach { e =>
-          assert(e.getMessage.contains("PATH_NOT_FOUND"), s"unexpected read failure: $e")
-        }
-        seen.toOption
-      },
-      // between the swap's two renames the table is briefly absent
-      crashView = Some(None),
-      invariant = dir => assert(
-        Seq("", ".compact-tmp", ".compact-old").exists(s => read(table(dir) + s).contains(rows)),
-        s"no complete copy of ${table(dir)}"),
-      // the documented recovery of a crashed swap: put the aside copy
-      // back if the live table is missing, otherwise drop it
-      recover = dir => {
-        val t = local(table(dir))
-        val old = new File(t.getPath + ".compact-old")
-        if (old.exists) {
-          if (t.exists) assert(org.apache.hadoop.fs.FileUtil.fullyDelete(old))
-          else assert(old.renameTo(t))
-        }
-      })
-    info(s"K: ${ks.mkString}")
+    info(s"K for build, append, rebuild: ${ks.mkString(", ")}")
   }
 
   test("Checkpoint.commit: a crash leaves the prior or all new rows; a retry adds the rest") {

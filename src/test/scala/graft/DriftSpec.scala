@@ -56,31 +56,6 @@ class DriftSpec extends SparkSpec {
     assert(out.getAs[Double]("ks") > 0.3)
   }
 
-  test("persisted baseline sketch scores identically to two-sided compare") {
-    val files = SynthGen.codeFiles(spark, SynthGen.Config(rows = 8000L))
-      .where(col("content").isNotNull && col("lang").isin(SynthGen.langs: _*))
-      .withColumn("len", length(col("content")))
-    val base = files.where(col("id") % 2 === 0)
-    val cur = files.where(col("id") % 2 === 1)
-
-    // Write the sketch to parquet and read it back — the baseline DATA
-    // is never rescanned by the comparison.
-    val dir = java.nio.file.Files.createTempDirectory("drift-sketch").toString
-    Drift.sketch(base, "len", Seq("lang"), 20, 0d, 800d)
-      .write.mode("overwrite").parquet(dir)
-    val sketch = spark.read.parquet(dir)
-
-    val viaSketch = Drift
-      .compareWithBaseline(cur, sketch, "len", Seq("lang"), 20, 0d, 800d)
-      .collect().map(r => r.getString(0) -> (r.getAs[Double]("psi"), r.getAs[Double]("ks"))).toMap
-    val direct = Drift.compare(cur, base, "len", Seq("lang"), 20, 0d, 800d)
-      .collect().map(r => r.getString(0) -> (r.getAs[Double]("psi"), r.getAs[Double]("ks"))).toMap
-    assert(viaSketch === direct)
-    // Same generator both halves → small drift (sampling noise only;
-    // ~700 rows per lang per half puts KS noise at a few percent).
-    viaSketch.values.foreach { case (psi, ks) => assert(psi < 0.1 && ks < 0.1) }
-  }
-
   test("auto-binning: quantile edges are exact on a known grid; auto == explicit edges") {
     // values 0..100 → type-7 quartile positions are integral → edges
     // are exact data values, no interpolation arithmetic

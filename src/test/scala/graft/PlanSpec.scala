@@ -4,7 +4,8 @@ import graft.refint.RefIntegrity
 import graft.validate.Validator
 import graft.verdict.Verdict
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.Size
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -39,6 +40,19 @@ class PlanSpec extends SparkSpec {
   test("per-row validation is shuffle-free (pure projection)") {
     assert(shuffles(Validator.annotate(docs, docSchema)).isEmpty)
     assert(shuffles(Validator.violations(docs, docSchema, Seq("doc_id"))).isEmpty)
+  }
+
+  test("violation rows evaluate the rules once: no inferred size filter over the rule array") {
+    def sizeFilters(df: DataFrame) = physical(df).collect {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[Size]) => f
+    }
+    val accounts = docs.select(col("doc_id"),
+      array(struct(col("source").as("name")), struct(col("lang").as("name"))).as("accounts"))
+    val elemSchema = graft.schema.Schema.of(
+      "name" -> graft.schema.FieldSpec(required = true, regex = Some("src[0-9]+")))
+    assert(sizeFilters(Validator.violations(docs, docSchema, Seq("doc_id"))).isEmpty)
+    assert(sizeFilters(
+      Validator.elementViolations(accounts, elemSchema, "accounts", Seq("doc_id"))).isEmpty)
   }
 
   test("verdict rollup is one exchange with map-side partial aggregation") {
@@ -91,40 +105,6 @@ class PlanSpec extends SparkSpec {
     val dim = spark.range(10).select(col("id").as("doc_id"))
     val p = physical(RefIntegrity.summary(docs, dim, Seq("doc_id"))).toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"))
-  }
-
-  test("co-bucketed tables sort-merge join with zero exchanges and zero sorts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-bucket").toString
-    // repartition by the bucket key first → ONE file per bucket, which
-    // is what lets the scan vouch for within-bucket sortedness
-    val left = spark.range(1000).select(
-      (col("id") % 41).as("k"), col("id").as("a")).repartition(8, col("k"))
-    val right = spark.range(300).select(
-      (col("id") % 41).as("k"), col("id").as("b")).repartition(8, col("k"))
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      graft.sources.TableIO.writeBucketed(left, "plan_bl", s"$dir/l", Seq("k"), 8, Seq("k"))
-      graft.sources.TableIO.writeBucketed(right, "plan_br", s"$dir/r", Seq("k"), 8, Seq("k"))
-      // force the sort-merge path (tiny test tables would broadcast)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = spark.table("plan_bl").join(spark.table("plan_br"), Seq("k"))
-      val p = physical(j)
-      assert(p.toString.contains("SortMergeJoin"))
-      assert(shuffles(j).isEmpty, "co-bucketed join must not exchange either side")
-      assert(p.toString.contains("Bucketed: true"))
-      // with the write-time sortBy honored (off by default since
-      // SPARK-28632 — one file per bucket required), the per-task
-      // sorts disappear too
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      val p2 = physical(spark.table("plan_bl").join(spark.table("plan_br"), Seq("k")))
-      assert(p2.collect { case s: org.apache.spark.sql.execution.SortExec => s }.isEmpty,
-        "bucket-sorted tables must not re-sort for the join")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
-      spark.sql("DROP TABLE IF EXISTS plan_bl")
-      spark.sql("DROP TABLE IF EXISTS plan_br")
-    }
   }
 
   test("approximate bloom RI is a shuffle-free scan; exact path joins only probe-hits") {

@@ -126,6 +126,16 @@ class ResumeSpec extends SparkSpec {
     assert(r2.pending.isEmpty && r2.skipped === keys.size.toLong)
   }
 
+  test("partitioned by a key column (per-repo resume): every partition commits") {
+    val df = SynthGen.codeFiles(spark, SynthGen.Config(rows = 2000L))
+    val out = tmp()
+    val r1 = ValidationRun.run(df, CodeFiles.schema, "repo", CodeFiles.keyCols, out)
+    assert(r1.pending.size.toLong === df.select("repo").distinct().count())
+    assertVerdictParity(df, CodeFiles.schema, "repo", out, r1)
+    val r2 = ValidationRun.run(df, CodeFiles.schema, "repo", CodeFiles.keyCols, out)
+    assert(r2.pending.isEmpty && r2.skipped === r1.pending.size.toLong)
+  }
+
   test("resume processes only uncommitted partitions; results match a single run") {
     val single = tmp()
     ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, single)

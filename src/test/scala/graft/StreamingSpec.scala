@@ -20,7 +20,7 @@ class StreamingSpec extends SparkSpec {
     batch.write.mode("overwrite").parquet(src)
 
     val stream = spark.readStream.schema(batch.schema).parquet(src)
-    val out = StreamingValidator
+    val out = graft.validate.Validator
       .violations(stream, evSchema, Seq("event_id"))
       .writeStream
       .format("memory")
