@@ -99,7 +99,7 @@ class CrashSpec extends SparkSpec {
     assert(ks.last > ks.head)
   }
 
-  test("buildBloom, appendBloom, rebuild: a crash leaves no filter or one with its own parameters") {
+  test("buildBloom then appendBloom: a crash leaves no filter, the built or the merged one") {
     val dim = spark.range(0L, 200L, 1L, 2)
       .select(concat(lit("r"), ($"id" % 7).cast("string")).as("repo"),
         $"id".cast("string").as("commit"))
