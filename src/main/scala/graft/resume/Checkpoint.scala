@@ -19,13 +19,16 @@ import org.apache.spark.sql.types.StructType
   * its manifest row appears, so a crash leaves at worst a re-processable
   * partition, never a half-acknowledged one.
   *
-  * Layout under `outDir` ("Iceberg-shaped" partitioned Parquet + an
-  * explicit snapshot manifest — no Iceberg jars in this sandbox):
+  * Layout under `outDir` ("Iceberg-shaped": immutable data files plus
+  * an explicit snapshot manifest naming the live ones, with no Iceberg
+  * dependency):
   * {{{
-  *   outDir/violations/<partitionCol>=<v>/…   (dynamic-overwrite parquet)
-  *   outDir/verdicts/part-….parquet           (one file per run)
-  *   outDir/manifest/part-….parquet           (one file per commit; one
-  *                                             row per committed partition)
+  *   outDir/violations/run_id=<id>/part-….parquet  (one directory per run;
+  *                                                 one file per scan task
+  *                                                 with violations)
+  *   outDir/verdicts/part-….parquet               (one file per run)
+  *   outDir/manifest/part-….parquet               (one file per commit; one
+  *                                                 row per committed partition)
   * }}}
   *
   * The verdict and manifest rows are few and already on the driver, so
@@ -36,16 +39,23 @@ import org.apache.spark.sql.types.StructType
   * that single rename, so a reader sees all of a commit's rows or none.
   *
   * Scale notes: the manifest is O(partitions) rows and is never joined
-  * against the data. [[ValidationRun]] collects its committed keys on
+  * against the input. [[ValidationRun]] collects its committed keys on
   * the driver ([[committed]]) and slices the input with their
   * complement ([[uncommittedFilter]]): on input partitioned by the
   * partition column the committed directories are pruned at the scan,
   * otherwise the one scan filters their rows out. [[pending]] (an
   * anti-join of the input's distinct partition values, one extra scan)
-  * stays for callers that need the pending list before processing. A
-  * re-run of a crashed partition overwrites only that partition's
-  * violation files (dynamic partition overwrite), keeping publishes
-  * idempotent.
+  * stays for callers that need the pending list before processing.
+  *
+  * Violation files are never overwritten. Each run appends its own
+  * `run_id=<id>` directory, and the manifest decides which runs are
+  * live: [[violations]] reads only the rows of runs some manifest row
+  * names. A crashed run's directory is named by no manifest row, so it
+  * is invisible there, and the next run removes it after its own commit
+  * ([[removeOrphans]]), as Iceberg removes orphan files. A raw
+  * `spark.read.parquet` of `outDir/violations` sees such a directory
+  * until then. One run at a time per `outDir`: a concurrent run's
+  * uncommitted directory would look orphaned.
   */
 object Checkpoint {
 
@@ -65,13 +75,46 @@ object Checkpoint {
     if (hasManifest(spark, outDir)) spark.read.schema(manifestSchema).parquet(manifestPath(outDir))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(manifestSchema))
 
-  /** The `partition` value of every manifest row, collected on the
+  /** The `(partition, run_id)` of every manifest row, collected on the
     * driver (one entry per committed row). Without a manifest this is
     * `Nil` and reads nothing: a fresh run starts no job for it.
     */
-  def committed(spark: SparkSession, outDir: String): Seq[String] =
+  def committed(spark: SparkSession, outDir: String): Seq[(String, String)] =
     if (!hasManifest(spark, outDir)) Nil
-    else processed(spark, outDir).select(col("partition")).collect().map(_.getString(0)).toSeq
+    else processed(spark, outDir).select("partition", "run_id").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+
+  def violationsPath(outDir: String): String = s"$outDir/violations"
+
+  private val RunDirPrefix = "run_id="
+
+  /** The live violations: the rows of `outDir/violations` whose run some
+    * manifest row names, by a left-semi join with the manifest's
+    * O(partitions) rows, broadcast. A crashed run's rows never show
+    * here. Each committed partition has one manifest row, so the run id
+    * alone is the key; a manifest that keeps superseded rows would key
+    * the join on `(partition, run_id)` too. Like `spark.read.parquet`,
+    * this fails while no run has written a violation file.
+    */
+  def violations(spark: SparkSession, outDir: String): DataFrame = {
+    val liveKey = Seq("run_id")
+    val live = processed(spark, outDir).select(liveKey.map(col): _*).distinct()
+    spark.read.parquet(violationsPath(outDir)).join(broadcast(live), liveKey, "left_semi")
+  }
+
+  /** Deletes every `outDir/violations/run_id=<id>` directory whose id is
+    * not in `live` (the output of a crashed run), with file-system
+    * listing and deletes only: no Spark job. Run ids are UUIDs, which
+    * Spark writes into directory names unescaped.
+    */
+  def removeOrphans(spark: SparkSession, outDir: String, live: Set[String]): Unit = {
+    val dir = new Path(violationsPath(outDir))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath).filter { p =>
+        p.getName.startsWith(RunDirPrefix) && !live(p.getName.stripPrefix(RunDirPrefix))
+      }.foreach(fs.delete(_, true))
+  }
 
   /** Partition values present in the input but not yet committed —
     * left_anti against the (tiny, broadcast) manifest.

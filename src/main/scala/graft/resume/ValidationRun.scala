@@ -26,6 +26,12 @@ import scala.jdk.CollectionConverters._
   * batch (validate-all-then-commit, cf. reference import flow
   * app/.../HomeViewModel.kt:168-175). A run into an `outDir` with a
   * manifest reads it first: one more job.
+  *
+  * The violations land in `violations/run_id=<runId>/`, one file per
+  * scan task with violations, whatever the number of partition values.
+  * Every run, committing or not, ends by deleting the run directories
+  * that no manifest row names ([[Checkpoint.removeOrphans]]): a file-
+  * system listing, no job.
   */
 object ValidationRun {
 
@@ -50,11 +56,12 @@ object ValidationRun {
     val committed = Checkpoint.committed(spark, outDir)
     val slice =
       if (committed.isEmpty) df
-      else df.where(Checkpoint.uncommittedFilter(partitionCol, committed))
+      else df.where(Checkpoint.uncommittedFilter(partitionCol, committed.map(_._1)))
 
-    // Data writes first (per-partition dirs, dynamic overwrite keeps a
-    // crashed-run retry idempotent), with the verdict counts observed
-    // in the same pass …
+    // Data writes first, appended as this run's own directory: no manifest
+    // row names it until the commit below, so a crashed run's rows stay
+    // invisible to the reader. The verdict counts are observed in the
+    // same pass …
     val observation = Observation()
     // The partition column may be a key column too (per-repo resume).
     val keys = (keyCols :+ partitionCol).distinct
@@ -66,16 +73,18 @@ object ValidationRun {
         keys)
       .withColumn("run_id", lit(runId))
       .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(s"$outDir/violations")
+      .mode(SaveMode.Append)
+      .partitionBy("run_id")
+      .parquet(Checkpoint.violationsPath(outDir))
     val counts = Verdict.observedCounts(observation)
     val field = df.schema(partitionCol)
     val verdictSchema = Verdict.verdictSchema(field)
-    if (counts.isEmpty)
+    val committedRuns = committed.map(_._2).toSet
+    if (counts.isEmpty) {
+      Checkpoint.removeOrphans(spark, outDir, committedRuns)
       return Report(runId, Nil, committed.size,
         spark.createDataFrame(java.util.List.of[Row](), verdictSchema))
+    }
 
     val verdicts = Verdict.verdictRows(runId,
       counts.map { case (k, c) => Checkpoint.partitionValue(k, field.dataType) -> c })
@@ -87,6 +96,9 @@ object ValidationRun {
     Checkpoint.commit(spark, outDir, counts.map { case (k, c) =>
       Row(k, runId, c.nRows, c.nBadRows, c.nViolations, c.pass, wallMs, completedAt)
     })
+    // Last, remove what a crashed run left: every run directory that no
+    // manifest row names.
+    Checkpoint.removeOrphans(spark, outDir, committedRuns + runId)
 
     Report(runId, counts.map(_._1), committed.size,
       spark.createDataFrame(verdicts.asJava, verdictSchema))

@@ -1,8 +1,10 @@
 package graft
 
+import graft.data.SynthGen
 import graft.index.IndexStore
-import graft.resume.Checkpoint
+import graft.resume.{Checkpoint, ValidationRun}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.io.File
@@ -138,10 +140,42 @@ class CrashSpec extends SparkSpec {
       setup = dir => Checkpoint.commit(spark, dir, entries(prior)),
       // resume commits only what the manifest does not hold yet
       stages = Seq { dir =>
-        val rest = added.filterNot(Checkpoint.committed(spark, dir).toSet)
+        val rest = added.filterNot(Checkpoint.committed(spark, dir).map(_._1).toSet)
         if (rest.nonEmpty) Checkpoint.commit(spark, dir, entries(rest))
       },
-      view = dir => Checkpoint.committed(spark, dir).sorted)
+      view = dir => Checkpoint.committed(spark, dir).map(_._1).sorted)
     info(s"K: ${ks.mkString}")
+  }
+
+  test("ValidationRun.run, then a resumed run: a crash leaves a stage boundary; a retry reaches the clean run") {
+    val in = s"${Files.createTempDirectory("graft-crash-input")}/in"
+    SynthGen.codeFiles(spark, SynthGen.Config(rows = 300L, partitions = 1, badCommitPerMille = 100))
+      .write.parquet(in)
+    val input = spark.read.parquet(in)
+    def run(df: DataFrame)(dir: String): Unit =
+      ValidationRun.run(df, CodeFiles.schema, "lang", CodeFiles.keyCols, dir)
+    // A crashed run's output, for each fresh directory to start with:
+    // another run's violation files under an id no manifest row names.
+    val donor = Files.createTempDirectory("graft-crash-donor").toString
+    run(input.where($"lang" === "rust"))(donor)
+    val donorDir = new File(Checkpoint.violationsPath(donor)).listFiles()
+      .filter(_.getName.startsWith("run_id=")).head
+    def runDirs(dir: String): Set[String] =
+      Option(new File(local(dir), "violations").list()).toSet.flatten.filter(_.startsWith("run_id="))
+    def liveRuns(dir: String): Seq[String] = Checkpoint.committed(spark, dir).map(_._2).distinct
+    def sorted(df: DataFrame): Seq[String] = df.drop("run_id").collect().map(_.toString).toSeq.sorted
+    val ks = crashProof[(Seq[String], Seq[String], Seq[String])]("run")(
+      setup = dir => org.apache.commons.io.FileUtils.copyDirectory(donorDir,
+        new File(local(dir), "violations/run_id=crashed")),
+      stages = Seq(run(input.where($"lang".isin("scala", "java"))), run(input)),
+      view = { dir =>
+        val (parts, runs) = Checkpoint.committed(spark, dir).unzip
+        if (runs.isEmpty) (Nil, Nil, Nil)
+        else (parts.sorted, sorted(Checkpoint.violations(spark, dir)),
+          sorted(spark.read.parquet(s"$dir/verdicts").where($"run_id".isin(runs.distinct: _*))))
+      },
+      after = dir => assert(runDirs(dir).subsetOf(liveRuns(dir).map("run_id=" + _).toSet),
+        s"orphan run directories under $dir: ${runDirs(dir)}"))
+    info(s"K for a run over two langs, then the resumed run: ${ks.mkString(", ")}")
   }
 }

@@ -121,7 +121,7 @@ class ResumeSpec extends SparkSpec {
     val keys = files.select(Checkpoint.partitionKey("lang")).distinct().collect()
       .map(_.getString(0)).toSet
     assert(r1.pending.toSet === keys)
-    assert(Checkpoint.committed(spark, out).toSet === keys)
+    assert(Checkpoint.committed(spark, out).map(_._1).toSet === keys)
     val r2 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
     assert(r2.pending.isEmpty && r2.skipped === keys.size.toLong)
   }
@@ -152,9 +152,9 @@ class ResumeSpec extends SparkSpec {
     assert(r2.pending.nonEmpty)
 
     // Violations identical between one-shot and resumed runs.
-    val a = spark.read.parquet(s"$single/violations")
+    val a = Checkpoint.violations(spark, single)
       .select("repo", "path", "commit", "lang", "field", "rule", "value")
-    val b = spark.read.parquet(s"$resumed/violations")
+    val b = Checkpoint.violations(spark, resumed)
       .select("repo", "path", "commit", "lang", "field", "rule", "value")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
 
@@ -167,11 +167,50 @@ class ResumeSpec extends SparkSpec {
   test("violations output equals direct Validator on the same input") {
     val out = tmp()
     ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
-    val written = spark.read.parquet(s"$out/violations")
+    val written = Checkpoint.violations(spark, out)
       .select("repo", "path", "commit", "field", "rule", "value", "severity")
     val direct = Validator.violations(files, CodeFiles.schema, CodeFiles.keyCols)
       .select("repo", "path", "commit", "field", "rule", "value", "severity")
     assert(written.exceptAll(direct).isEmpty && direct.exceptAll(written).isEmpty)
+  }
+
+  test("a run's violations land in its own directory, at most one file per scan task") {
+    val out = tmp()
+    val r = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    val tasks = files.rdd.getNumPartitions
+    assert(files.select("lang").distinct().count() > tasks)
+    val written = listing(Checkpoint.violationsPath(out)).keys.map(Paths.get(_))
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(written.nonEmpty && written.size <= tasks, written)
+    assert(written.map(_.getParent).toSet ===
+      Set(Paths.get(s"${Checkpoint.violationsPath(out)}/run_id=${r.runId}")))
+    // the partition column stays a column of the rows
+    assert(Checkpoint.violations(spark, out).columns.contains("lang"))
+  }
+
+  test("a run directory no manifest row names is invisible to the reader and gone after the next commit") {
+    val out = tmp()
+    val runDir = (id: String) => new java.io.File(s"${Checkpoint.violationsPath(out)}/run_id=$id")
+    val r1 = ValidationRun.run(files.where(col("lang").isin("scala", "java")),
+      CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    val first = Checkpoint.violations(spark, out).count()
+    assert(first > 0)
+    // a crashed run's output: a copy of r1's files under an id no manifest row names
+    val orphan = java.util.UUID.randomUUID().toString
+    org.apache.commons.io.FileUtils.copyDirectory(runDir(r1.runId), runDir(orphan))
+    val raw = spark.read.parquet(Checkpoint.violationsPath(out))
+    assert(raw.where(col("run_id") === orphan).count() === first)
+    val live = Checkpoint.violations(spark, out)
+    assert(live.count() === first && live.where(col("run_id") =!= r1.runId).isEmpty)
+
+    val r2 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    assert(r2.pending.nonEmpty)
+    assert(!runDir(orphan).exists() && runDir(r1.runId).isDirectory && runDir(r2.runId).isDirectory)
+    val cols = Seq("repo", "path", "commit", "lang", "field", "rule", "value", "severity")
+    val resumed = Checkpoint.violations(spark, out).select(cols.map(col): _*)
+    val direct = Validator.violations(files, CodeFiles.schema, CodeFiles.keyCols :+ "lang")
+      .select(cols.map(col): _*)
+    assert(resumed.exceptAll(direct).isEmpty && direct.exceptAll(resumed).isEmpty)
   }
 
   test("null partition values are tracked via sentinel and resumed correctly") {
@@ -270,7 +309,7 @@ class ResumeSpec extends SparkSpec {
     var r: ValidationRun.Report = null
     assert(jobsOf { r = ValidationRun.run(df, CodeFiles.schema, "lang", CodeFiles.keyCols, out) } === 1)
     assert(r.pending.nonEmpty)
-    assert(Checkpoint.committed(spark, out).toSet === r.pending.toSet)
+    assert(Checkpoint.committed(spark, out).map(_._1).toSet === r.pending.toSet)
     assertVerdictParity(df, CodeFiles.schema, "lang", out, r)
     // the commit is one file, published by one rename: no committer leftovers
     Seq("verdicts", "manifest").foreach { d =>
