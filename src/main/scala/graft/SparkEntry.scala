@@ -242,278 +242,11 @@ object SparkEntry {
     }
     .mkString(" UNION ALL ")
 
-  /** Oracle for `q_suggested_expectations_documents`: the induction
-    * formulas (Expectations.suggest scaladoc) as base-slice stats, the
-    * evaluation as current-slice stats, both single-row CTEs; the
-    * conditional rules' presence guards are WHERE clauses over the
-    * base stats. Tolerance constants are CAST to DOUBLE so DuckDB's
-    * decimal literals don't change the arithmetic.
-    */
-  private val suggestedExpectationsSql: String = {
-    val numCols = Seq("doc_id", "n_chars")
-    val cols = Seq("doc_id", "lang", "source", "n_chars")
-    def stats(src: String): String = {
-      val per = cols.flatMap { f =>
-        Seq(
-          s"avg(CASE WHEN $f IS NULL THEN 1.0 ELSE 0.0 END) AS nf_$f",
-          s"CAST(count(DISTINCT $f) AS DOUBLE) AS d_$f") ++
-          (if (numCols.contains(f)) Seq(
-            s"avg(CAST($f AS DOUBLE)) AS mean_$f",
-            s"min(CAST($f AS DOUBLE)) AS mn_$f",
-            s"max(CAST($f AS DOUBLE)) AS mx_$f")
-           else Nil)
-      }
-      s"SELECT CAST(count(*) AS DOUBLE) AS n, ${per.mkString(", ")} FROM $src"
-    }
-    def arm(check: String, column: String, obs: String, lo: String,
-        hi: String, guard: String = "TRUE"): String =
-      s"""SELECT '$check' AS "check", '$column' AS "column",
-         | CAST(NULL AS DOUBLE) AS q, $obs AS observed, $lo AS lo,
-         | $hi AS hi FROM b, c WHERE $guard""".stripMargin
-    val inf = "CAST('inf' AS DOUBLE)"
-    val ninf = "CAST('-inf' AS DOUBLE)"
-    val t = "CAST(0.25 AS DOUBLE)"
-    val arms =
-      Seq(arm("row_count", "", "c.n",
-        "b.n * CAST(0.75 AS DOUBLE)", "b.n * CAST(1.25 AS DOUBLE)")) ++
-        cols.flatMap { f =>
-          Seq(
-            arm("null_frac", f, s"c.nf_$f", "0.0",
-              s"least(CAST(1 AS DOUBLE), b.nf_$f + $t)"),
-            arm("unique_frac", f, s"c.d_$f / c.n", "1.0", inf,
-              guard = s"b.d_$f = b.n AND b.nf_$f = 0"),
-            arm("distinct", f, s"c.d_$f", ninf, s"b.d_$f",
-              guard = s"b.d_$f >= 1 AND b.d_$f <= 20")) ++
-            (if (numCols.contains(f)) Seq(
-              arm("mean", f, s"c.mean_$f",
-                s"b.mean_$f - $t * (b.mx_$f - b.mn_$f)",
-                s"b.mean_$f + $t * (b.mx_$f - b.mn_$f)",
-                guard = s"b.mean_$f IS NOT NULL"),
-              arm("min", f, s"c.mn_$f",
-                s"b.mn_$f - $t * (b.mx_$f - b.mn_$f)", inf,
-                guard = s"b.mean_$f IS NOT NULL"),
-              arm("max", f, s"c.mx_$f", ninf,
-                s"b.mx_$f + $t * (b.mx_$f - b.mn_$f)",
-                guard = s"b.mean_$f IS NOT NULL"))
-             else Nil)
-        }
-    s"""WITH base AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-       | cur AS (SELECT doc_id, text, lang, source, n_chars + 200 AS n_chars
-       |   FROM documents WHERE doc_id % 2 <> 0),
-       | b AS (${stats("base")}),
-       | c AS (${stats("cur")})
-       |SELECT "check", "column", q, observed, lo, hi,
-       | coalesce(observed >= lo AND observed <= hi, FALSE) AS pass
-       |FROM (${arms.mkString(" UNION ALL ")})""".stripMargin
-  }
-
   private val docViolationsSql: String = docRuleSql
     .map { case (f, r, pred, v, sev) =>
       s"SELECT doc_id, '$f' AS field, '$r' AS rule, $v AS value, '$sev' AS severity FROM $docsXSql WHERE $pred"
     }
     .mkString(" UNION ALL ")
-
-  /** Oracle for `q_induced_validate_documents`: replay the INDUCTION
-    * (every bound a scalar subquery over the base slice, every
-    * conditional rule guarded by the same condition `suggestSchema`
-    * uses — required iff the base has no nulls, `allowed` iff exact
-    * cardinality ≤ 20 and the base is non-empty) and then the
-    * validation of the odd half, rule for rule.
-    */
-  private val inducedValidateSql: String = {
-    def row(f: String, r: String, v: String, pred: String) =
-      s"SELECT doc_id, '$f' AS field, '$r' AS rule, $v AS value, 'error' AS severity FROM cur WHERE $pred"
-    def required(f: String) = row(f, "required", "CAST(NULL AS VARCHAR)",
-      s"$f IS NULL AND (SELECT count(*) - count($f) FROM base) = 0")
-    def numeric(f: String) = Seq(
-      required(f),
-      row(f, "min", s"CAST($f AS VARCHAR)",
-        s"$f IS NOT NULL AND $f < (SELECT min($f) FROM base)"),
-      row(f, "max", s"CAST($f AS VARCHAR)",
-        s"$f IS NOT NULL AND $f > (SELECT max($f) FROM base)"))
-    def stringy(f: String) = Seq(
-      required(f),
-      row(f, "allowed", f,
-        s"$f IS NOT NULL AND (SELECT count($f) FROM base) > 0" +
-          s" AND (SELECT count(DISTINCT $f) FROM base) <= 20" +
-          s" AND $f NOT IN (SELECT $f FROM base WHERE $f IS NOT NULL)"),
-      row(f, "minlength", f,
-        s"$f IS NOT NULL AND length($f) < (SELECT min(length($f)) FROM base)"),
-      row(f, "maxlength", f,
-        s"$f IS NOT NULL AND length($f) > (SELECT max(length($f)) FROM base)"))
-    "WITH base AS (SELECT * FROM documents WHERE doc_id % 3 = 0),\n" +
-      "cur AS (SELECT * FROM documents WHERE doc_id % 3 <> 0)\n" +
-      (numeric("doc_id") ++ numeric("n_chars") ++
-        stringy("text") ++ stringy("lang") ++ stringy("source"))
-        .mkString("\nUNION ALL\n")
-  }
-
-  /** Oracle for `q_repairs_documents`: every (rule × candidate) cell's
-    * before/after predicates replayed — baseline fails, fails-after-
-    * candidate, and the repaired/broken deltas, summed over the same
-    * noisy derived column.
-    */
-  private def repairsSqlFor(grouped: Boolean): String = {
-    val allowed = "('de','en','es','fr')"
-    def f0(rule: String, v: String) = rule match {
-      case "regex" => s"($v IS NOT NULL AND NOT regexp_full_match($v, '[a-z]{2}'))"
-      case "allowed" => s"($v IS NOT NULL AND $v NOT IN $allowed)"
-    }
-    val cands = Seq(
-      "lower" -> "lower(v)",
-      "trim" -> "trim(v)",
-      "trim_lower" -> "lower(trim(v))",
-      "trim_upper" -> "upper(trim(v))",
-      "upper" -> "upper(v)")
-    val (groupSel, groupBy) =
-      if (grouped) ("lang, ", " GROUP BY lang") else ("", "")
-    val cells = for {
-      rule <- Seq("regex", "allowed")
-      (name, expr) <- cands
-    } yield {
-      val before = f0(rule, "v")
-      val after = f0(rule, expr)
-      s"""SELECT $groupSel'lang2' AS field, '$rule' AS rule, '$name' AS normalizer,
-         | CAST(sum(CASE WHEN $before THEN 1 ELSE 0 END) AS BIGINT) AS n_violations,
-         | CAST(sum(CASE WHEN $before AND NOT $after THEN 1 ELSE 0 END) AS BIGINT) AS n_repaired,
-         | CAST(sum(CASE WHEN NOT $before AND $after THEN 1 ELSE 0 END) AS BIGINT) AS n_broken
-         |FROM d$groupBy""".stripMargin
-    }
-    """WITH d AS (SELECT lang, CASE WHEN doc_id % 3 = 0 THEN upper(lang)
-      |                       WHEN doc_id % 3 = 1 THEN ' ' || lang
-      |                       ELSE lang END AS v
-      |           FROM documents)
-      |""".stripMargin + cells.mkString("\nUNION ALL\n")
-  }
-
-  private val repairsSql: String = repairsSqlFor(grouped = false)
-
-  /** Oracle for `q_schema_merge_documents`: both inductions AND the
-    * widening replayed — every merged bound is least/greatest of the
-    * two slices' scalar subqueries, merged `required` demands zero
-    * nulls in BOTH slices, and the merged `allowed` set is the UNION
-    * of the slices' values under both cardinality caps.
-    */
-  private val schemaMergeSql: String = {
-    def row(f: String, r: String, v: String, pred: String) =
-      s"SELECT doc_id, '$f' AS field, '$r' AS rule, $v AS value, 'error' AS severity FROM cur WHERE $pred"
-    def present(f: String) =
-      s"(SELECT count($f) FROM a) > 0 AND (SELECT count($f) FROM b) > 0"
-    def required(f: String) = row(f, "required", "CAST(NULL AS VARCHAR)",
-      s"$f IS NULL AND (SELECT count(*) - count($f) FROM a) = 0" +
-        s" AND (SELECT count(*) - count($f) FROM b) = 0")
-    def numeric(f: String) = Seq(
-      required(f),
-      row(f, "min", s"CAST($f AS VARCHAR)",
-        s"$f IS NOT NULL AND ${present(f)} AND " +
-          s"$f < least((SELECT min($f) FROM a), (SELECT min($f) FROM b))"),
-      row(f, "max", s"CAST($f AS VARCHAR)",
-        s"$f IS NOT NULL AND ${present(f)} AND " +
-          s"$f > greatest((SELECT max($f) FROM a), (SELECT max($f) FROM b))"))
-    def stringy(f: String) = Seq(
-      required(f),
-      row(f, "allowed", f,
-        s"$f IS NOT NULL AND ${present(f)}" +
-          s" AND (SELECT count(DISTINCT $f) FROM a) <= 20" +
-          s" AND (SELECT count(DISTINCT $f) FROM b) <= 20" +
-          // the merged UNION must also stay under the induction cap —
-          // merge drops an over-cap union exactly as suggestSchema
-          // would on the combined corpus
-          s" AND (SELECT count(*) FROM (SELECT $f FROM a WHERE $f IS NOT NULL" +
-          s"   UNION SELECT $f FROM b WHERE $f IS NOT NULL)) <= 20" +
-          s" AND $f NOT IN (SELECT $f FROM a WHERE $f IS NOT NULL" +
-          s" UNION SELECT $f FROM b WHERE $f IS NOT NULL)"),
-      row(f, "minlength", f,
-        s"$f IS NOT NULL AND ${present(f)} AND length($f) < " +
-          s"least((SELECT min(length($f)) FROM a), (SELECT min(length($f)) FROM b))"),
-      row(f, "maxlength", f,
-        s"$f IS NOT NULL AND ${present(f)} AND length($f) > " +
-          s"greatest((SELECT max(length($f)) FROM a), (SELECT max(length($f)) FROM b))"))
-    "WITH a AS (SELECT * FROM documents WHERE doc_id % 3 = 0),\n" +
-      "b AS (SELECT * FROM documents WHERE doc_id % 3 = 1),\n" +
-      "cur AS (SELECT * FROM documents WHERE doc_id % 3 = 2)\n" +
-      (numeric("doc_id") ++ numeric("n_chars") ++
-        stringy("text") ++ stringy("lang") ++ stringy("source"))
-        .mkString("\nUNION ALL\n")
-  }
-
-  /** Oracle for `q_schema_diff_documents`: re-derive every aspect of
-    * BOTH induced schemas (bounds, length bounds, required flags,
-    * allowed sets under the ≤20-cardinality presence guard) from the
-    * two slices and emit exactly the rows where they differ, with the
-    * engine's change classification (subset ⇒ tightened/loosened,
-    * incomparable ⇒ changed) and canonical renderings (integral bounds
-    * without `.0`, sets sorted comma-joined).
-    */
-  private val schemaDiffSql: String = {
-    val numFields = Seq("doc_id", "n_chars")
-    val strFields = Seq("text", "lang", "source")
-    def scal(agg: String, from: String) = s"(SELECT $agg FROM $from)"
-    // required/nullable: induced from "slice has zero nulls" per side.
-    def reqArms(f: String) = {
-      val b = s"(${scal(s"count(*) - count($f)", "documents")} = 0)"
-      val a = s"(${scal(s"count(*) - count($f)", "flt")} = 0)"
-      Seq(
-        s"""SELECT '$f' AS field, 'required' AS aspect,
-           | CAST($b AS VARCHAR) AS before, CAST($a AS VARCHAR) AS after,
-           | CASE WHEN $a THEN 'tightened' ELSE 'loosened' END AS change
-           |WHERE $b <> $a""".stripMargin,
-        s"""SELECT '$f', 'nullable', CAST(NOT $b AS VARCHAR),
-           | CAST(NOT $a AS VARCHAR),
-           | CASE WHEN $a THEN 'tightened' ELSE 'loosened' END
-           |WHERE $b <> $a""".stripMargin)
-    }
-    // numeric min/max: integral rendering (engine fmtNum strips .0).
-    def numArm(f: String, aspect: String, fn: String, tightDir: String) = {
-      val b = s"CAST(CAST(${scal(s"$fn($f)", "documents")} AS BIGINT) AS VARCHAR)"
-      val a = s"CAST(CAST(${scal(s"$fn($f)", "flt")} AS BIGINT) AS VARCHAR)"
-      val bd = scal(s"$fn($f)", "documents")
-      val ad = scal(s"$fn($f)", "flt")
-      s"""SELECT '$f', '$aspect', $b, $a,
-         | CASE WHEN $ad $tightDir $bd THEN 'tightened' ELSE 'loosened' END
-         |WHERE $bd <> $ad""".stripMargin
-    }
-    def lenArm(f: String, aspect: String, fn: String, tightDir: String) = {
-      val bd = scal(s"$fn(length(CAST($f AS VARCHAR)))", "documents")
-      val ad = scal(s"$fn(length(CAST($f AS VARCHAR)))", "flt")
-      s"""SELECT '$f', '$aspect', CAST($bd AS VARCHAR), CAST($ad AS VARCHAR),
-         | CASE WHEN $ad $tightDir $bd THEN 'tightened' ELSE 'loosened' END
-         |WHERE $bd <> $ad""".stripMargin
-    }
-    // allowed: present iff exact cardinality ≤ 20 and the slice has
-    // non-null values; subset direction classifies. Lists live in a
-    // per-field CTE (list_has_all rejects scalar-subquery arguments).
-    def setsCte(f: String) = {
-      def has(from: String) =
-        s"(${scal(s"count(DISTINCT $f)", from)} <= 20 AND ${scal(s"count($f)", from)} > 0)"
-      def lst(from: String) =
-        scal(s"list_sort(list(DISTINCT $f))", s"$from WHERE $f IS NOT NULL")
-      s"""sets_$f AS (SELECT ${has("documents")} AS bh, ${has("flt")} AS ah,
-         | ${lst("documents")} AS bl, ${lst("flt")} AS al)""".stripMargin
-    }
-    def allowedArm(f: String) =
-      s"""SELECT '$f', 'allowed',
-         | CASE WHEN bh THEN array_to_string(bl, ',') END,
-         | CASE WHEN ah THEN array_to_string(al, ',') END,
-         | CASE WHEN bh AND NOT ah THEN 'loosened'
-         |      WHEN ah AND NOT bh THEN 'tightened'
-         |      WHEN list_has_all(bl, al) THEN 'tightened'
-         |      WHEN list_has_all(al, bl) THEN 'loosened'
-         |      ELSE 'changed' END
-         |FROM sets_$f
-         |WHERE (bh OR ah)
-         |  AND (bh <> ah OR coalesce(array_to_string(bl, ','), '') <>
-         |                   coalesce(array_to_string(al, ','), ''))""".stripMargin
-    val arms =
-      numFields.flatMap(f => reqArms(f) ++ Seq(
-        numArm(f, "min", "min", ">"), numArm(f, "max", "max", "<"))) ++
-      strFields.flatMap(f => reqArms(f) ++ Seq(
-        lenArm(f, "minlength", "min", ">"), lenArm(f, "maxlength", "max", "<"),
-        allowedArm(f)))
-    ("WITH flt AS (SELECT * FROM documents WHERE lang <> 'fr' AND n_chars <= 500),\n" +
-      strFields.map(setsCte).mkString(",\n") + "\n") +
-      arms.mkString("\nUNION ALL\n")
-  }
 
   private def docViolationCountSql(severities: Set[String]): String = docRuleSql
     .collect { case (_, _, pred, _, sev) if severities(sev) =>
@@ -733,15 +466,6 @@ object SparkEntry {
         "value", Seq("event_type"), nBins = 4, exact = true)
     }),
 
-    "q_profile_documents" -> ((s, dir) =>
-      // Schema inference step 1: one-pass per-field corpus profile
-      // (null rate, cardinality, numeric parse rate, value/length
-      // bounds) — the stats rule induction derives the strictest
-      // consistent schema from. exact=true for oracle parity; the
-      // 100 TB default is the HLL sketch (no Expand).
-      graft.schema.Induction.profile(docs(s, dir),
-        Seq("doc_id", "text", "lang", "source", "n_chars"), exact = true)),
-
     "q_expectations_documents" -> ((s, dir) =>
       // Table-level expectation suite (dbt-test / Great-Expectations
       // layer): aggregate invariants per lang slice, ALL evaluated in
@@ -763,30 +487,6 @@ object SparkEntry {
         graft.verdict.Expectations.Expect("quantile", "n_chars",
           lo = 100, hi = 400, q = 0.5)),
         groupCols = Seq("lang"))),
-
-    "q_suggested_expectations_documents" -> ((s, dir) => {
-      // Expectation INDUCTION (round 5, the table-level mirror of V19):
-      // suggest() profiles the even-doc_id half into a suite —
-      // row_count band, per-column null_frac ceilings, induced
-      // uniqueness (doc_id only), distinct caps (low-cardinality lang/
-      // source only), spread-scaled numeric bands — then evaluate()
-      // gates the odd half with it. The oracle re-derives every bound
-      // from the base slice and every observation from the current one.
-      // tolerance 0.25 is exactly representable in binary — bound
-      // arithmetic is bit-identical in Spark and DuckDB doubles. The
-      // current slice carries an injected +200 n_chars shift (the two
-      // parity halves are statistically identical, so without it every
-      // gate passes vacuously): the shift breaks the induced mean and
-      // max bands while row_count / null_frac / uniqueness / distinct
-      // caps keep passing — both verdict outcomes exercised.
-      val all = s.read.parquet(s"$dir/documents.parquet")
-      val base = all.where(col("doc_id") % 2 === 0)
-      val cur = all.where(col("doc_id") % 2 =!= 0)
-        .withColumn("n_chars", col("n_chars") + 200)
-      graft.verdict.Expectations.evaluate(cur,
-        graft.verdict.Expectations.suggest(base,
-          Seq("doc_id", "lang", "source", "n_chars"), tolerance = 0.25))
-    }),
 
     "q_expectations_rel_documents" -> ((s, dir) => {
       // Baseline-RELATIVE expectation gates (round 5): each *_rel check
@@ -821,91 +521,6 @@ object SparkEntry {
       // how often, over how many distinct values, with the value range
       // as examples — O(rules) output rows at any corpus size.
       graft.verdict.Verdict.ruleBreakdown(docs(s, dir), docSchema)),
-
-    "q_induced_validate_documents" -> ((s, dir) => {
-      // Schema inference end-to-end: induce the strictest schema from
-      // the doc_id-multiple-of-3 slice (the "known-good baseline" snapshot) and
-      // validate the remaining two thirds against it — the violations ARE the
-      // distribution delta between the halves. The oracle re-derives
-      // every induced bound (required guards, numeric min/max, allowed
-      // sets under the cardinality cap, length bounds) as scalar
-      // subqueries over the same base half and replays every rule.
-      val d = docs(s, dir)
-      val schema = graft.schema.Induction.suggestSchema(
-        d.where(col("doc_id") % 3 === 0),
-        Seq("doc_id", "text", "lang", "source", "n_chars"))
-      Validator.violations(d.where(col("doc_id") % 3 =!= 0), schema, Seq("doc_id"))
-    }),
-
-    "q_repairs_documents" -> ((s, dir) => {
-      // REPAIR induction (round 5): a shape-noisy column (uppercased /
-      // space-prefixed variants injected by doc_id residue) against a
-      // lowercase regex + allowed-list; every (rule × builtin
-      // normalizer) cell measures repaired AND broken counts in one
-      // aggregation — trim_lower repairs every violation with zero
-      // breakage, upper repairs nothing and breaks every passing row.
-      // The oracle replays each cell's before/after predicates.
-      val noisy = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("lang2",
-          when(col("doc_id") % 3 === 0, upper(col("lang")))
-            .when(col("doc_id") % 3 === 1, concat(lit(" "), col("lang")))
-            .otherwise(col("lang")))
-      graft.repair.Repair.suggestRepairs(noisy, Schema.of(
-        "lang2" -> FieldSpec(
-          regex = Some("[a-z]{2}"),
-          allowed = Some(Seq("de", "en", "es", "fr")))))
-    }),
-
-    "q_repairs_grouped_documents" -> ((s, dir) => {
-      // Per-group repair induction: the same cells keyed by the
-      // ORIGINAL lang — which normalizer fixes which slice (the noise
-      // is doc_id-residue-injected, so every lang group carries all
-      // three shape classes). Same single aggregation, grouped.
-      val noisy = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("lang2",
-          when(col("doc_id") % 3 === 0, upper(col("lang")))
-            .when(col("doc_id") % 3 === 1, concat(lit(" "), col("lang")))
-            .otherwise(col("lang")))
-      graft.repair.Repair.suggestRepairs(noisy, Schema.of(
-        "lang2" -> FieldSpec(
-          regex = Some("[a-z]{2}"),
-          allowed = Some(Seq("de", "en", "es", "fr")))),
-        groupCols = Seq("lang"))
-    }),
-
-    "q_schema_merge_documents" -> ((s, dir) => {
-      // INCREMENTAL induction (round 5): induce per slice, widen with
-      // Induction.merge (required = both, bounds = envelope, allowed =
-      // union under both caps), validate a third slice against the
-      // merged schema — violations fire only OUTSIDE the widened
-      // two-slice distribution. The oracle re-derives every merged
-      // bound as least/greatest of the two slices' scalar subqueries
-      // and the allowed union as a UNION subquery.
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val flds = Seq("doc_id", "text", "lang", "source", "n_chars")
-      val merged = graft.schema.Induction.merge(
-        graft.schema.Induction.suggestSchema(
-          d.where(col("doc_id") % 3 === 0), flds),
-        graft.schema.Induction.suggestSchema(
-          d.where(col("doc_id") % 3 === 1), flds))
-      Validator.violations(d.where(col("doc_id") % 3 === 2), merged,
-        Seq("doc_id"))
-    }),
-
-    "q_schema_diff_documents" -> ((s, dir) => {
-      // Rule-level schema drift (round 5): induce the strictest schema
-      // from the full table and from a filtered "cleaned" snapshot
-      // (no fr, no oversized docs), then diff — the tightened rows
-      // forecast which violations the new snapshot's rules would raise
-      // on the old corpus. The oracle re-derives every aspect of both
-      // induced schemas from the two slices and replays the diff.
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val flds = Seq("doc_id", "text", "lang", "source", "n_chars")
-      val before = graft.schema.Induction.suggestSchema(d, flds)
-      val after = graft.schema.Induction.suggestSchema(
-        d.where(col("lang") =!= "fr" && col("n_chars") <= 500), flds)
-      graft.schema.Induction.diff(s, before, after)
-    }),
 
     "q_normalize_documents" -> ((s, dir) =>
       // Cerberus's NORMALIZATION half end-to-end: rename (source →
@@ -1334,18 +949,6 @@ object SparkEntry {
         | AND size_tag IS NOT NULL
         | AND TRY_CAST(size_tag AS BIGINT) IS NULL""".stripMargin,
 
-    "q_induced_validate_documents" -> inducedValidateSql,
-    "q_schema_merge_documents" -> schemaMergeSql,
-    "q_repairs_documents" -> repairsSql,
-    "q_repairs_grouped_documents" -> repairsSqlFor(grouped = true),
-    "q_schema_diff_documents" -> schemaDiffSql,
-
-    // Every suggest() formula replayed: single-row stat CTEs over the
-    // two halves; conditional rows (induced uniqueness, distinct caps)
-    // carry their base-slice guards as WHERE clauses; pass re-derived
-    // from the re-derived bounds.
-    "q_suggested_expectations_documents" -> suggestedExpectationsSql,
-
     "q_expectations_documents" ->
       """WITH g AS (
         | SELECT lang, CAST(count(*) AS DOUBLE) AS n,
@@ -1429,23 +1032,7 @@ object SparkEntry {
         | min(TRY_CAST(value AS DOUBLE)) AS example_min_num,
         | max(TRY_CAST(value AS DOUBLE)) AS example_max_num
         |FROM ($docViolationsSql)
-        |GROUP BY field, rule, severity""".stripMargin,
-
-    "q_profile_documents" -> Seq("doc_id", "text", "lang", "source", "n_chars")
-      .map { f =>
-        s"""SELECT '$f' AS field,
-           | count(*) AS n_rows,
-           | CAST(count(*) - count($f) AS BIGINT) AS n_null,
-           | (count(*) - count($f)) / CAST(count(*) AS DOUBLE) AS null_frac,
-           | count(DISTINCT $f) AS n_distinct,
-           | CASE WHEN count($f) > 0
-           |  THEN count(TRY_CAST($f AS DOUBLE)) / CAST(count($f) AS DOUBLE)
-           | END AS numeric_frac,
-           | min(TRY_CAST($f AS DOUBLE)) AS min_num,
-           | max(TRY_CAST($f AS DOUBLE)) AS max_num,
-           | CAST(min(length(CAST($f AS VARCHAR))) AS BIGINT) AS min_len,
-           | CAST(max(length(CAST($f AS VARCHAR))) AS BIGINT) AS max_len
-           |FROM documents""".stripMargin
-      }.mkString("\nUNION ALL\n")
+        |GROUP BY field, rule, severity""".stripMargin
   )
 }
+

@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.Try
 
 /** Persistent build-once / query-many key-membership, drift and
@@ -18,18 +17,19 @@ import scala.util.Try
   * instead of silently returning garbage.
   *
   * Layout per index directory:
-  *   - `data/…` — the index table (parquet); for the Bloom filter,
-  *     numbered versions `data/v-<n>`, each one row of the filter with
+  *   - `data/…` — the index table (parquet); for the Bloom filter and
+  *     the drift baseline, numbered versions `data/v-<n>`, each holding
   *     its own build parameters (see below);
   *   - `meta/…` — one JSON row of build parameters (kind-tagged); the
-  *     Bloom store's holds only its kind, written once.
+  *     Bloom and drift stores' hold only their kind, written once.
   *
-  * The two artifacts this store REPLACES rather than appends to — the
-  * Bloom filter and [[saveText]] documents — are immutable numbered
-  * versions `v-<n>`: a new one is written to a fresh temp entry and
+  * The two artifacts this store REBUILDS rather than only appends to —
+  * the Bloom filter and the drift baseline — are immutable numbered
+  * versions `v-<n>`: a build is written to a fresh temp entry and
   * committed by ONE rename, and readers take the highest committed
   * version. A crash at any step leaves the previous version readable,
-  * and a filter is never read with another build's parameters.
+  * and a filter or a sketch is never read with another build's
+  * parameters.
   *
   * CONCURRENCY: every `append…` path is SINGLE-WRITER. The slice
   * appends (drift baseline, expectation snapshots) are idempotent for
@@ -39,12 +39,10 @@ import scala.util.Try
   * publishes can claim the same version number. Serialize writers per
   * index path (the [[graft.resume.Checkpoint]] manifest, a scheduler
   * lock, or one owning streaming query). Concurrent READERS are safe
-  * against appends and Bloom publishes: a slice append replaces only its
-  * own partition, and a published version is never rewritten — only
-  * pruned once two newer ones exist, which a reader survives by
-  * resolving again. A drift baseline REBUILD is not: it overwrites
-  * `data/` and then `meta/` in place, so a reader in between can fail
-  * or see the new bins with the old edges; quiesce readers first.
+  * against appends and versioned publishes: a slice append replaces
+  * only its own partition, and a published version is never replaced —
+  * only pruned once two newer ones exist, which a reader survives by
+  * resolving again.
   */
 object IndexStore {
 
@@ -64,18 +62,33 @@ object IndexStore {
     spark.createDataset(Seq(meta))
       .coalesce(1).write.mode(SaveMode.Overwrite).json(s"$path/meta")
 
-  private def readMeta[T <: Product](spark: SparkSession, path: String, kind: String)(
-      implicit enc: Encoder[T]): T = {
-    // Kind check BEFORE the typed decode: a wrong-kind sidecar has
-    // different fields, and decoding those to nulls would throw an
-    // opaque codec error instead of naming the actual mismatch.
+  private def requireKind(spark: SparkSession, path: String, kind: String): Unit = {
     val kinds = spark.read.json(s"$path/meta").select(col("kind")).collect()
     require(kinds.length == 1, s"index at $path has no readable meta sidecar")
     val actual = kinds.head.getString(0)
     require(actual == kind,
       s"index at $path is a '$actual' index, not '$kind'")
+  }
+
+  private def readMeta[T <: Product](spark: SparkSession, path: String, kind: String)(
+      implicit enc: Encoder[T]): T = {
+    // Kind check BEFORE the typed decode: a wrong-kind sidecar has
+    // different fields, and decoding those to nulls would throw an
+    // opaque codec error instead of naming the actual mismatch.
+    requireKind(spark, path, kind)
     spark.read.schema(enc.schema).json(s"$path/meta").as[T](enc).head()
   }
+
+  /** The kind-only sidecar of a versioned store: checked when readable,
+    * written otherwise (unreadable covers a crash inside the first
+    * write). Never rewritten by a rebuild.
+    */
+  private def claimKind(spark: SparkSession, path: String, kind: String): Unit =
+    Try(spark.read.json(s"$path/meta").select(col("kind")).as[String](Encoders.STRING).head())
+      .toOption match {
+      case Some(k) => require(k == kind, s"index at $path is a '$k' index, not '$kind'")
+      case None => writeMeta(spark, path, KindMeta(kind))(Encoders.product[KindMeta])
+    }
 
   // -------------------------------------------------------------------
   // Bloom key-membership index (referential integrity at scale)
@@ -97,12 +110,7 @@ object IndexStore {
       fpp: Double = 0.01): Unit = {
     val spark = dim.sparkSession
     val bytes = RefIntegrity.buildKeyBloom(dim, keys, expectedItems, fpp)
-    // Unreadable covers a crash inside the first sidecar write.
-    Try(spark.read.json(s"$path/meta").select(col("kind")).as[String](Encoders.STRING).head())
-      .toOption match {
-      case Some(kind) => require(kind == "bloom", s"index at $path is a '$kind' index, not 'bloom'")
-      case None => writeMeta(spark, path, KindMeta("bloom"))(Encoders.product[KindMeta])
-    }
+    claimKind(spark, path, "bloom")
     publishBloom(spark, path,
       BloomVersion(bytes, BloomMeta("bloom", keys.mkString(","), expectedItems, fpp)))
   }
@@ -183,8 +191,9 @@ object IndexStore {
     * once, and persist sketch + edges. Every later snapshot scores
     * against O(groups × bins) stored rows — the baseline corpus is
     * never rescanned (at 100 TB the baseline scan IS the cost). The
-    * built bins are the `slice_id=build` partition of `data/`; a
-    * rebuild replaces every slice.
+    * bins (the `slice_id=build` partition of `bins/`) and their
+    * [[DriftMeta]] (`meta/`) are committed together as one version; a
+    * rebuild publishes a new version, so it replaces every slice.
     */
   def buildDriftBaseline(
       base: DataFrame,
@@ -194,31 +203,48 @@ object IndexStore {
       nBins: Int = 10,
       exact: Boolean = false): Unit = {
     require(!groupCols.contains(SliceCol), s"'$SliceCol' names the baseline's slices, not a group column")
+    val spark = base.sparkSession
     val edges = graft.drift.Drift.quantileEdges(base, valueCol, nBins, exact)
-    graft.drift.Drift.binsByEdges(base, valueCol, groupCols, edges)
-      .withColumn(SliceCol, lit(BuildSlice))
-      .write.mode(SaveMode.Overwrite).partitionBy(SliceCol).parquet(s"$path/data")
-    writeMeta(base.sparkSession, path,
-      DriftMeta("drift", valueCol, groupCols.mkString(","), edges.toSeq))(
-      Encoders.product[DriftMeta])
+    claimKind(spark, path, "drift")
+    publish(spark, new Path(s"$path/data")) { tmp =>
+      graft.drift.Drift.binsByEdges(base, valueCol, groupCols, edges)
+        .withColumn(SliceCol, lit(BuildSlice))
+        .write.partitionBy(SliceCol).parquet(s"$tmp/bins")
+      spark.createDataset(Seq(DriftMeta("drift", valueCol, groupCols.mkString(","), edges.toSeq)))(
+        Encoders.product[DriftMeta]).coalesce(1).write.json(s"$tmp/meta")
+    }
   }
 
   private val SliceCol = "slice_id"
   private val BuildSlice = "build"
 
-  /** Stored sketch frame + build parameters (incl. the exact edges).
-    * Counts are re-summed per (group, bin) over the slices on load
-    * (see [[appendDriftBaseline]]); the aggregation is O(stored rows) —
-    * bins × groups × slices, tiny.
+  /** `read` of the latest committed drift version's directory and meta.
+    * A baseline written before versions existed (bins at the root of
+    * `data/`) has none and fails here.
     */
-  def loadDriftBaseline(spark: SparkSession, path: String): (DataFrame, DriftMeta) = {
-    val meta = readMeta[DriftMeta](spark, path, "drift")(Encoders.product[DriftMeta])
-    val groupCols = meta.groupCols.split(",").toSeq.filter(_.nonEmpty)
-    val sketchDf = spark.read.parquet(s"$path/data")
-      .groupBy((groupCols :+ "bin").map(col): _*)
-      .agg(sum(col("n")).as("n"))
-    (sketchDf, meta)
+  private def latestDrift[T](spark: SparkSession, path: String)(read: (Path, DriftMeta) => T): T = {
+    requireKind(spark, path, "drift")
+    latest(spark, new Path(s"$path/data")) { v =>
+      read(v, spark.read.schema(Encoders.product[DriftMeta].schema).json(s"$v/meta")
+        .as[DriftMeta](Encoders.product[DriftMeta]).head())
+    }.getOrElse(throw new IllegalArgumentException(
+      s"drift baseline at $path has no committed version; a baseline written before " +
+        "versions existed keeps its bins at the root of data/: rebuild it with buildDriftBaseline"))
   }
+
+  /** Stored sketch frame + build parameters (incl. the exact edges),
+    * both from the latest committed version. Counts are re-summed per
+    * (group, bin) over the slices on load (see [[appendDriftBaseline]]);
+    * the aggregation is O(stored rows) — bins × groups × slices, tiny.
+    */
+  def loadDriftBaseline(spark: SparkSession, path: String): (DataFrame, DriftMeta) =
+    latestDrift(spark, path) { (v, meta) =>
+      val groupCols = meta.groupCols.split(",").toSeq.filter(_.nonEmpty)
+      val sketchDf = spark.read.parquet(s"$v/bins")
+        .groupBy((groupCols :+ "bin").map(col): _*)
+        .agg(sum(col("n")).as("n"))
+      (sketchDf, meta)
+    }
 
   /** PSI/KS of `cur` against the STORED baseline: bins `cur` by the
     * persisted edges and joins the O(groups × bins) sketch — one scan
@@ -237,51 +263,25 @@ object IndexStore {
   /** Fold a new baseline slice into the stored sketch: bin by the
     * STORED edges (binning never changes after build — comparability
     * beats re-quantiling) and write the slice's bin rows as the
-    * `slice_id=<sliceId>` partition; the load path re-sums per
-    * (group, bin). Idempotent per `sliceId`: a retry (after a crash
-    * that followed a completed append, or a replay) replaces that
-    * slice's rows instead of counting them again. Returns rows written.
-    * A baseline written before slices existed has its bins at the root
-    * of `data/`; rebuild it before appending.
+    * `slice_id=<sliceId>` partition of the latest version's `bins/`;
+    * the load path re-sums per (group, bin). Idempotent per `sliceId`:
+    * a retry (after a crash that followed a completed append, or a
+    * replay) replaces that slice's rows instead of counting them again.
+    * Returns rows written.
     */
   def appendDriftBaseline(slice: DataFrame, path: String, sliceId: String): Long = {
     requireSliceId(sliceId, "sliceId")
     require(sliceId != BuildSlice, s"sliceId '$BuildSlice' names the built baseline")
-    val meta = readMeta[DriftMeta](slice.sparkSession, path, "drift")(
-      Encoders.product[DriftMeta])
+    val (v, meta) = latestDrift(slice.sparkSession, path)((_, _))
     val groupCols = meta.groupCols.split(",").toSeq.filter(_.nonEmpty)
     appendCounted(
       graft.drift.Drift.binsByEdges(slice, meta.valueCol, groupCols, meta.edges.toArray)
         .withColumn(SliceCol, lit(sliceId)),
-      s"$path/data", SliceCol)
+      s"$v/bins", SliceCol)
   }
 
   // -------------------------------------------------------------------
-  // Text artifacts (SchemaJson documents, ExpectJson suites)
-  // -------------------------------------------------------------------
-
-  /** Replace a SMALL text artifact (a SchemaJson document, an
-    * ExpectJson suite) at `path`: the text is published as the next
-    * version under `path/` ([[publish]]). Single-writer, like every
-    * other mutation in this store.
-    */
-  def saveText(spark: SparkSession, path: String, text: String): Unit =
-    publish(spark, new Path(path)) { tmp =>
-      val out = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(tmp)
-      try out.write(text.getBytes(UTF_8)) finally out.close()
-    }
-
-  /** The latest [[saveText]] version at `path`; None when never written.
-    * Fails if `path` is a file: that is not an artifact this store wrote.
-    */
-  def loadText(spark: SparkSession, path: String): Option[String] =
-    latest(spark, new Path(path)) { v =>
-      val in = v.getFileSystem(spark.sparkContext.hadoopConfiguration).open(v)
-      try new String(in.readAllBytes(), UTF_8) finally in.close()
-    }
-
-  // -------------------------------------------------------------------
-  // Versioned publish: the Bloom filter and text artifacts are
+  // Versioned publish: the Bloom filter and the drift baseline are
   // immutable `v-<n>` entries under an artifact root
   // -------------------------------------------------------------------
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.StructType
   *   outDir/violations/run_id=<id>/part-….parquet  (one directory per run;
   *                                                 one file per scan task
   *                                                 with violations)
-  *   outDir/verdicts/part-….parquet               (one file per run)
+  *   outDir/verdicts/part-00000-<id>-c000.….parquet (one file per run)
   *   outDir/manifest/part-….parquet               (one file per commit; one
   *                                                 row per committed partition)
   * }}}
@@ -52,10 +52,11 @@ import org.apache.spark.sql.types.StructType
   * live: [[violations]] reads only the rows of runs some manifest row
   * names. A crashed run's directory is named by no manifest row, so it
   * is invisible there, and the next run removes it after its own commit
-  * ([[removeOrphans]]), as Iceberg removes orphan files. A raw
-  * `spark.read.parquet` of `outDir/violations` sees such a directory
-  * until then. One run at a time per `outDir`: a concurrent run's
-  * uncommitted directory would look orphaned.
+  * ([[removeOrphans]]), as Iceberg removes orphan files; so does the
+  * crashed run's verdicts file, which is named after its run. A raw
+  * `spark.read.parquet` of `outDir/violations` or `outDir/verdicts`
+  * sees such output until then. One run at a time per `outDir`: a
+  * concurrent run's uncommitted output would look orphaned.
   */
 object Checkpoint {
 
@@ -86,7 +87,28 @@ object Checkpoint {
 
   def violationsPath(outDir: String): String = s"$outDir/violations"
 
+  def verdictsPath(outDir: String): String = s"$outDir/verdicts"
+
+  /** A new run id: a name-based (version 3) UUID of random bytes. A
+    * run's verdicts file carries its id ([[verdictsFileStem]]); the
+    * version tells such a file from one written before verdicts files
+    * were named after their run, whose name carries a random
+    * (version 4) UUID that is no run's id.
+    */
+  def newRunId(): String =
+    java.util.UUID.nameUUIDFromBytes(java.util.UUID.randomUUID().toString.getBytes("UTF-8")).toString
+
+  /** The stem of a run's verdicts file: Spark's own file naming, with
+    * the run id in place of the write's random UUID.
+    */
+  def verdictsFileStem(runId: String): String = s"part-00000-$runId-c000"
+
   private val RunDirPrefix = "run_id="
+  /** A verdicts file named after its run (the `3` is the UUID version),
+    * or the hidden temp a crash left of it.
+    */
+  private val VerdictsFile =
+    """\.?part-00000-([0-9a-f]{8}-[0-9a-f]{4}-3[0-9a-f]{3}-[0-9a-f]{4}-[0-9a-f]{12})-c000\..*""".r
 
   /** The live violations: the rows of `outDir/violations` whose run some
     * manifest row names, by a left-semi join with the manifest's
@@ -102,18 +124,27 @@ object Checkpoint {
     spark.read.parquet(violationsPath(outDir)).join(broadcast(live), liveKey, "left_semi")
   }
 
-  /** Deletes every `outDir/violations/run_id=<id>` directory whose id is
+  /** Deletes every `outDir/violations/run_id=<id>` directory and every
+    * verdicts file named after a run ([[verdictsFileStem]]) whose id is
     * not in `live` (the output of a crashed run), with file-system
-    * listing and deletes only: no Spark job. Run ids are UUIDs, which
-    * Spark writes into directory names unescaped.
+    * listings and deletes only: no Spark job. Run ids are UUIDs, which
+    * Spark writes into directory names unescaped. A file whose name
+    * carries no run id (a verdicts file written before files were named
+    * after their run) is never deleted.
     */
   def removeOrphans(spark: SparkSession, outDir: String, live: Set[String]): Unit = {
-    val dir = new Path(violationsPath(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir))
-      fs.listStatus(dir).map(_.getPath).filter { p =>
-        p.getName.startsWith(RunDirPrefix) && !live(p.getName.stripPrefix(RunDirPrefix))
-      }.foreach(fs.delete(_, true))
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def remove(dir: String)(runOf: String => Option[String]): Unit = {
+      val d = new Path(dir)
+      if (fs.exists(d))
+        fs.listStatus(d).map(_.getPath).filter(p => runOf(p.getName).exists(!live(_)))
+          .foreach(fs.delete(_, true))
+    }
+    remove(violationsPath(outDir))(n => Option.when(n.startsWith(RunDirPrefix))(n.stripPrefix(RunDirPrefix)))
+    remove(verdictsPath(outDir)) {
+      case VerdictsFile(id) => Some(id)
+      case _ => None
+    }
   }
 
   /** Partition values present in the input but not yet committed —
@@ -182,11 +213,13 @@ object Checkpoint {
   /** Add `rows` (of `schema`) to the Parquet table at `dir` as ONE new
     * file, written on the driver by Spark's own Parquet writer — the
     * codec, footer metadata and type mapping of `df.write.parquet` —
-    * with no Spark job. The file is written under a hidden temp name,
-    * which readers skip, and published by one rename; a crash before
-    * the rename leaves only that hidden file behind.
+    * with no Spark job. The file is named `stem` plus the writer's
+    * extension. It is written under a hidden temp name, which readers
+    * skip, and published by one rename; a crash before the rename
+    * leaves only that hidden file behind.
     */
-  def writeRows(spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row]): Unit = {
+  def writeRows(spark: SparkSession, dir: String, schema: StructType, rows: Seq[Row],
+      stem: String = s"part-00000-${java.util.UUID.randomUUID()}-c000"): Unit = {
     val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
     val job = Job.getInstance(conf)
     job.setOutputKeyClass(classOf[Void])
@@ -194,7 +227,7 @@ object Checkpoint {
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val task = new TaskAttemptContextImpl(job.getConfiguration,
       new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
-    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}"
+    val name = stem + factory.getFileExtension(task)
     val (tmp, target) = (new Path(dir, s".$name"), new Path(dir, name))
     val writer = factory.newInstance(tmp.toString, schema, task)
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)

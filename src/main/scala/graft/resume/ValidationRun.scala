@@ -30,8 +30,8 @@ import scala.jdk.CollectionConverters._
   * The violations land in `violations/run_id=<runId>/`, one file per
   * scan task with violations, whatever the number of partition values.
   * Every run, committing or not, ends by deleting the run directories
-  * that no manifest row names ([[Checkpoint.removeOrphans]]): a file-
-  * system listing, no job.
+  * and verdicts files that no manifest row names
+  * ([[Checkpoint.removeOrphans]]): file-system listings, no job.
   */
 object ValidationRun {
 
@@ -50,7 +50,7 @@ object ValidationRun {
       outDir: String
   ): Report = {
     val spark = df.sparkSession
-    val runId = java.util.UUID.randomUUID().toString
+    val runId = Checkpoint.newRunId()
     val t0 = System.currentTimeMillis()
 
     val committed = Checkpoint.committed(spark, outDir)
@@ -88,7 +88,8 @@ object ValidationRun {
 
     val verdicts = Verdict.verdictRows(runId,
       counts.map { case (k, c) => Checkpoint.partitionValue(k, field.dataType) -> c })
-    Checkpoint.writeRows(spark, s"$outDir/verdicts", verdictSchema, verdicts)
+    Checkpoint.writeRows(spark, Checkpoint.verdictsPath(outDir), verdictSchema, verdicts,
+      Checkpoint.verdictsFileStem(runId))
 
     // … then the manifest file is the commit point.
     val wallMs = System.currentTimeMillis() - t0
@@ -96,8 +97,8 @@ object ValidationRun {
     Checkpoint.commit(spark, outDir, counts.map { case (k, c) =>
       Row(k, runId, c.nRows, c.nBadRows, c.nViolations, c.pass, wallMs, completedAt)
     })
-    // Last, remove what a crashed run left: every run directory that no
-    // manifest row names.
+    // Last, remove what a crashed run left: every run directory and
+    // verdicts file that no manifest row names.
     Checkpoint.removeOrphans(spark, outDir, committedRuns + runId)
 
     Report(runId, counts.map(_._1), committed.size,

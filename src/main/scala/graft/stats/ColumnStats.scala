@@ -19,33 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object ColumnStats {
 
-  /** Shared wide→long profiling scaffold: ONE aggregation computing
-    * `aggsFor(field)` columns per field (aliases must be unique across
-    * fields — prefix them `__<field>__`), then one struct per field via
-    * `rowFor(field)`, exploded over the already-aggregated tiny frame.
-    * The single implementation of the single-pass multi-field layout —
-    * used by [[compute]] and by `graft.schema.Induction.profile`.
-    */
-  private[graft] def longFormat(
-      df: DataFrame,
-      fields: Seq[String],
-      groupCols: Seq[String],
-      aggsFor: String => Seq[Column],
-      rowFor: String => Column): DataFrame = {
-    val aggs = fields.flatMap(aggsFor)
-    val wide =
-      if (groupCols.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-      else df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val g = groupCols.map(col)
-    wide
-      .select(g :+ explode(array(fields.map(rowFor): _*)).as("s"): _*)
-      .select(g :+ col("s.*"): _*)
-  }
-
   /** Long-format stats: one output row per (group, column) with
     * `(…groupCols, column, n_rows, n_null, null_rate, n_distinct,
     * min, max, avg_len)`. min/max are stringified so heterogeneous
-    * column types share one output schema.
+    * column types share one output schema. ONE aggregation computes
+    * every column's stats side by side (aliased `__<column>__<stat>`);
+    * then one struct per column is exploded over that tiny frame.
     */
   def compute(
       df: DataFrame,
@@ -57,29 +36,35 @@ object ColumnStats {
     def distinctAgg(c: Column): Column =
       if (exact) countDistinct(c) else approx_count_distinct(c, rsd)
 
-    longFormat(df, cols, groupCols,
-      aggsFor = { name =>
-        val c = col(name)
-        Seq(
-          count(lit(1)).as(s"__${name}__n_rows"),
-          sum(when(c.isNull, 1L).otherwise(0L)).as(s"__${name}__n_null"),
-          distinctAgg(c).as(s"__${name}__n_distinct"),
-          min(c).cast("string").as(s"__${name}__min"),
-          max(c).cast("string").as(s"__${name}__max"),
-          avg(length(c.cast("string"))).as(s"__${name}__avg_len"))
-      },
-      rowFor = { name =>
-        struct(
-          lit(name).as("column"),
-          col(s"__${name}__n_rows").as("n_rows"),
-          col(s"__${name}__n_null").as("n_null"),
-          (col(s"__${name}__n_null") / col(s"__${name}__n_rows"))
-            .as("null_rate"),
-          col(s"__${name}__n_distinct").as("n_distinct"),
-          col(s"__${name}__min").as("min"),
-          col(s"__${name}__max").as("max"),
-          col(s"__${name}__avg_len").as("avg_len"))
-      })
+    val aggs = cols.flatMap { name =>
+      val c = col(name)
+      Seq(
+        count(lit(1)).as(s"__${name}__n_rows"),
+        sum(when(c.isNull, 1L).otherwise(0L)).as(s"__${name}__n_null"),
+        distinctAgg(c).as(s"__${name}__n_distinct"),
+        min(c).cast("string").as(s"__${name}__min"),
+        max(c).cast("string").as(s"__${name}__max"),
+        avg(length(c.cast("string"))).as(s"__${name}__avg_len"))
+    }
+    val wide =
+      if (groupCols.isEmpty) df.agg(aggs.head, aggs.tail: _*)
+      else df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val rows = cols.map { name =>
+      struct(
+        lit(name).as("column"),
+        col(s"__${name}__n_rows").as("n_rows"),
+        col(s"__${name}__n_null").as("n_null"),
+        (col(s"__${name}__n_null") / col(s"__${name}__n_rows"))
+          .as("null_rate"),
+        col(s"__${name}__n_distinct").as("n_distinct"),
+        col(s"__${name}__min").as("min"),
+        col(s"__${name}__max").as("max"),
+        col(s"__${name}__avg_len").as("avg_len"))
+    }
+    val g = groupCols.map(col)
+    wide
+      .select(g :+ explode(array(rows: _*)).as("s"): _*)
+      .select(g :+ col("s.*"): _*)
   }
 
   /** Quantiles of a numeric column per group, long format:

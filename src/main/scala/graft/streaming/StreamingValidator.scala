@@ -377,80 +377,4 @@ object StreamingValidator {
       }
       .start()
   }
-
-  /** ST12 — streaming INCREMENTAL INDUCTION: the live composition of
-    * V19 × V24 × V22. Each micro-batch is profiled into its own
-    * strictest schema (`Induction.suggestSchema`), widened into the
-    * stored schema-so-far (`Induction.merge` — the fold that makes
-    * induction incremental), and the widening itself is the batch's
-    * DRIFT report (`Induction.diff` of stored vs merged: every rule the
-    * new data forced looser, every field it added). The schema-so-far
-    * persists as a SchemaJson document (`IndexStore.saveText`: each
-    * save is a new version, committed by one rename), so any later job
-    * — batch validation, another stream — can load and enforce it.
-    *
-    * Replay semantics (foreachBatch is at-least-once): drift lands
-    * BEFORE the schema save. A crash between them replays to the
-    * IDENTICAL diff (stored unchanged) and dynamic-overwrites the same
-    * `batch_id` partition; a replay after both is a row-level no-op —
-    * merge is idempotent, so the re-merge equals the stored schema, the
-    * diff is empty, and an empty dynamic overwrite touches no
-    * partition, leaving the original (true) drift rows in place.
-    *
-    * Empty batches induce nothing: zero rows would induce `required`
-    * on every field (vacuously null-free) and poison the fold with
-    * constraints no data evidenced.
-    *
-    * The schema artifact is single-writer (this query); per-batch
-    * profiling uses exact cardinality over the BATCH (bounded by the
-    * trigger, not the corpus — the suggestSchema Expand cost note).
-    */
-  def inductionSink(
-      stream: DataFrame,
-      fields: Seq[String],
-      schemaPath: String,
-      driftPath: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("500 milliseconds"),
-      maxAllowed: Int = 20
-  ): StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val batchSchema =
-            graft.schema.Induction.suggestSchema(batch, fields, maxAllowed)
-          // A stored artifact induced under a LARGER cap (maxAllowed
-          // lowered between runs) may carry over-cap allowed sets that
-          // merge rejects loudly — for the fold that would poison every
-          // batch. Re-capping is the SINK's decision (widening away an
-          // induced allowed set is exactly induced semantics under the
-          // new cap); merge keeps its loud guard for direct callers.
-          val stored = graft.index.IndexStore.loadText(spark, schemaPath)
-            .map(graft.schema.SchemaJson.fromJson(_))
-            .map(s => graft.schema.Schema(s.fields.map { case (f, sp) =>
-              f -> (if (sp.allowed.exists(_.size > maxAllowed))
-                sp.copy(allowed = None) else sp)
-            }))
-          val merged = stored
-            .map(graft.schema.Induction.merge(_, batchSchema, maxAllowed))
-            .getOrElse(batchSchema)
-          graft.schema.Induction
-            .diff(spark, stored.getOrElse(Schema(Nil)), merged)
-            .withColumn("batch_id", lit(batchId))
-            .write
-            .mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(driftPath)
-          graft.index.IndexStore.saveText(spark, schemaPath,
-            graft.schema.SchemaJson.toJson(merged))
-        }
-        ()
-      }
-      .start()
-  }
 }

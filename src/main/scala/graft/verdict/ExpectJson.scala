@@ -6,10 +6,8 @@ import org.json4s.jackson.JsonMethods
 
 /** Expectation suites as DATA — the [[graft.schema.SchemaJson]]
   * counterpart for the table-level half. A suite is a JSON array of
-  * check objects; with [[Expectations.suggest]] this closes the
-  * profile-once-gate-forever loop as pure data motion: profile a
-  * known-good snapshot → serialize the suite → version/ship it →
-  * parse → gate every later snapshot.
+  * check objects, so a declared suite ships as pure data: serialize it
+  * → version/ship it → parse → gate every snapshot.
   *
   * Format: `[{"check": "row_count", "lo": 100, "hi": 200}, {"check":
   * "null_frac", "column": "text", "hi": 0.1}, …]`. Canonical form

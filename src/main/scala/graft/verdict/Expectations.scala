@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * (partial + final, map-side combine; one shuffle when grouped, none
   * global). `distinct` uses the exact count by default for verdict
   * stability — swap `approxDistinct = true` at 100 TB for the HLL
-  * sketch (no Expand, same trade as `Induction.profile`). Output is one
-  * row per (group ×) check: `(check, column, observed, lo, hi, pass)` —
-  * verdicts are DATA, never exceptions (E4).
+  * sketch (no Expand). Output is one row per (group ×) check:
+  * `(check, column, observed, lo, hi, pass)` — verdicts are DATA, never
+  * exceptions (E4).
   */
 object Expectations {
 
@@ -171,119 +171,6 @@ object Expectations {
     agged.select(
       groupCols.map(col) :+ explode(array(rows: _*)).as("e"): _*)
       .select(groupCols.map(col) :+ col("e.*"): _*)
-  }
-
-  /** INDUCE an expectation suite from an observed slice — the
-    * table-level mirror of `graft.schema.Induction.suggestSchema` (V19
-    * induces row rules from data; this induces aggregate gates). Run it
-    * on a known-good snapshot, then [[evaluate]] the suite against every
-    * later one: profile-once, gate-forever — the Great-Expectations
-    * profiler workflow.
-    *
-    * Deterministic formulas (each a pure function of one aggregation
-    * row, replayed by the q_suggested_expectations oracle):
-    *   - `row_count` in `[n·(1−tol), n·(1+tol)]`;
-    *   - per column, `null_frac ≤ min(1, observed + tol)` (a falling
-    *     null rate is improvement, not drift — the band is one-sided);
-    *   - `unique_frac ≥ 1.0` iff the column was EXACTLY unique and
-    *     null-free in the slice (the uniqueness invariant is induced
-    *     only where it held — same presence-conditional logic as
-    *     suggestSchema's `required`);
-    *   - `distinct ≤ observed` iff observed cardinality ≤ `distinctCap`
-    *     (a low-cardinality column's drift mode is NEW categories; a
-    *     high-cardinality column's distinct count is not a stable gate);
-    *   - numeric columns: `mean` within ±tol·spread of the observed
-    *     mean, `min ≥ observed_min − tol·spread`, `max ≤ observed_max +
-    *     tol·spread`, where spread = observed max − min (bands scale
-    *     with the column's own range, not its magnitude). All-null
-    *     numeric columns induce no numeric bounds (no signal).
-    *
-    * Scale: ONE aggregation over `df`; the driver receives a single
-    * O(columns) row (config-bounded, the same class as
-    * `Induction.profile`). Suites are GLOBAL — per-group bounds are a
-    * rate-table-shaped problem, served by the snapshot store +
-    * [[evaluateRelative]] instead of per-group constants. Exact
-    * count-distinct is the default (same verdict-stability trade as
-    * [[evaluate]]), at the documented cost of an Expand ×columns over
-    * the scan; `approxDistinct = true` profiles with the HLL sketch
-    * instead (no Expand — the 100 TB path), which also DISABLES
-    * uniqueness induction: a sketch cannot certify `distinct == rows`,
-    * and a certificate that might be wrong is worse than none (the
-    * distinct caps it induces are estimates, which a ≤-bound
-    * tolerates; an exact `unique_frac ≥ 1.0` invariant does not).
-    *
-    * An EMPTY slice throws: inducing gates from no signal is the
-    * misconfiguration E1 exists to reject (and the suite it would
-    * produce — `row_count` in [0,0] — would reject every future
-    * snapshot).
-    */
-  def suggest(
-      df: DataFrame,
-      columns: Seq[String],
-      tolerance: Double = 0.1,
-      distinctCap: Int = 20,
-      approxDistinct: Boolean = false): Seq[Expect] = {
-    require(columns.nonEmpty, "suggest needs at least one column")
-    require(tolerance >= 0d, s"tolerance must be >= 0, got $tolerance")
-    require(distinctCap >= 1, s"distinctCap must be >= 1, got $distinctCap")
-    val fieldNames = df.schema.fieldNames.toSet
-    columns.foreach(c => require(fieldNames.contains(c),
-      s"column '$c' is not a top-level column of the frame " +
-        s"(have: ${df.schema.fieldNames.mkString(", ")})"))
-    val isNum = columns.map(c => c -> df.schema(c).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]).toMap
-    val aggs: Seq[Column] =
-      count(lit(1)).cast("double").as("__n") +:
-        columns.flatMap { c =>
-          Seq(
-            coalesce(avg(when(col(c).isNull, 1d).otherwise(0d)), lit(0d))
-              .as(s"__nf:$c"),
-            (if (approxDistinct) approx_count_distinct(col(c))
-             else countDistinct(col(c))).cast("double").as(s"__d:$c")) ++
-            (if (isNum(c)) Seq(
-              avg(col(c).cast("double")).as(s"__mean:$c"),
-              min(col(c).cast("double")).as(s"__min:$c"),
-              max(col(c).cast("double")).as(s"__max:$c"))
-             else Nil)
-        }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    def get(name: String): Option[Double] = {
-      val i = r.fieldIndex(name)
-      if (r.isNullAt(i)) None else Some(r.getDouble(i))
-    }
-    val n = get("__n").get
-    require(n > 0,
-      "cannot suggest expectations from an empty slice — no signal " +
-        "(and the induced row_count gate would reject everything)")
-    Expect("row_count", lo = n * (1 - tolerance), hi = n * (1 + tolerance)) +:
-      columns.flatMap { c =>
-        val nf = get(s"__nf:$c").get
-        val d = get(s"__d:$c").get
-        Seq(Expect("null_frac", c, lo = 0d,
-          hi = math.min(1d, nf + tolerance))) ++
-          (if (!approxDistinct && d == n && nf == 0d)
-            Seq(Expect("unique_frac", c, lo = 1d))
-           else Nil) ++
-          // sketch-profiled caps get tolerance padding — an HLL
-          // estimate gated against an HLL estimate needs slack where
-          // exact-vs-exact does not
-          (if (d >= 1d && d <= distinctCap)
-            Seq(Expect("distinct", c,
-              hi = if (approxDistinct) d * (1 + tolerance) else d))
-           else Nil) ++
-          (if (isNum(c))
-            (get(s"__mean:$c"), get(s"__min:$c"), get(s"__max:$c")) match {
-              case (Some(mean), Some(mn), Some(mx)) =>
-                val spread = mx - mn
-                Seq(
-                  Expect("mean", c, lo = mean - tolerance * spread,
-                    hi = mean + tolerance * spread),
-                  Expect("min", c, lo = mn - tolerance * spread),
-                  Expect("max", c, hi = mx + tolerance * spread))
-              case _ => Nil // all-null numeric column: no signal
-            }
-           else Nil)
-      }
   }
 
   /** True iff every expectation passes — the table-level gate

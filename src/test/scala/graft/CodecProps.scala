@@ -1,6 +1,6 @@
 package graft
 
-import graft.schema.{FieldSpec, Induction, Schema, SchemaJson}
+import graft.schema.{FieldSpec, Schema, SchemaJson}
 import graft.verdict.{ExpectJson, Expectations}
 import graft.verdict.Expectations.Expect
 import org.scalacheck.{Gen, Properties, Test}
@@ -11,13 +11,7 @@ import org.scalacheck.Prop.forAll
   *
   *   - SchemaJson / ExpectJson canonical round-trip (toJson is a
   *     fixpoint under fromJson) over generated data-only schemas and
-  *     generated suites;
-  *   - Induction.merge is commutative (up to field order),
-  *     associative, and idempotent over generated induced-shaped
-  *     schemas — the fold laws the streaming induction sink relies on;
-  *   - merge soundness: a value accepted by EITHER input spec's
-  *     bounds/allowed is accepted by the merged spec (driver-side
-  *     interpreter, no Spark in the loop).
+  *     generated suites.
   *
   * Pure driver-side properties — no Spark jobs, so the default 100
   * cases per property are cheap.
@@ -32,11 +26,10 @@ object CodecProps extends Properties("graft.codecs") {
   private val genName: Gen[String] =
     Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.take(8).mkString)
 
-  /** Induced-shaped specs: the vocabulary suggestSchema emits
-    * (required/nullable, numeric bounds, length bounds, allowed) plus
-    * the merge-legal extras (notEmpty, regex, forbidden, severity).
+  /** Flat specs: required/nullable, numeric bounds, length bounds,
+    * allowed, notEmpty, regex, forbidden and severity.
     */
-  private val genInducedSpec: Gen[FieldSpec] = for {
+  private val genFlatSpec: Gen[FieldSpec] = for {
     required <- Gen.oneOf(true, false)
     nullable <- Gen.oneOf(true, false)
     notEmpty <- Gen.oneOf(true, false)
@@ -63,7 +56,7 @@ object CodecProps extends Properties("graft.codecs") {
 
   private val genSchema: Gen[Schema] = for {
     names <- Gen.nonEmptyListOf(genName).map(_.distinct.take(5))
-    specs <- Gen.listOfN(names.size, genInducedSpec)
+    specs <- Gen.listOfN(names.size, genFlatSpec)
   } yield Schema(names.zip(specs))
 
   /** Value-only sub-spec (what combinators/items/keysrules may carry). */
@@ -82,7 +75,7 @@ object CodecProps extends Properties("graft.codecs") {
     * recursive half of the codec.
     */
   private val genNestedSpec: Gen[FieldSpec] = for {
-    base <- genInducedSpec
+    base <- genFlatSpec
     anyOf <- Gen.listOf(genValueOnly).map(_.take(3))
     oneOf <- Gen.listOf(genValueOnly).map(_.take(2))
     items <- Gen.listOf(genValueOnly).map(_.take(3))
@@ -135,64 +128,5 @@ object CodecProps extends Properties("graft.codecs") {
     forAll(Gen.nonEmptyListOf(genExpect)) { es =>
       val j = ExpectJson.toJson(es)
       ExpectJson.toJson(ExpectJson.fromJson(j)) == j
-    }
-
-  // ---------------- merge fold laws ----------------
-
-  private def canon(s: Schema): Map[String, String] =
-    s.fields.map { case (f, sp) => f -> sp.toString }.toMap
-
-  property("merge: commutative up to field order") =
-    forAll(genSchema, genSchema) { (a, b) =>
-      canon(Induction.merge(a, b)) == canon(Induction.merge(b, a))
-    }
-
-  property("merge: idempotent") = forAll(genSchema) { s =>
-    canon(Induction.merge(s, s)) == canon(s) &&
-      Induction.merge(s, s).fieldNames == s.fieldNames
-  }
-
-  property("merge: associative") =
-    forAll(genSchema, genSchema, genSchema) { (a, b, c) =>
-      canon(Induction.merge(Induction.merge(a, b), c)) ==
-        canon(Induction.merge(a, Induction.merge(b, c)))
-    }
-
-  /** Driver-side interpreter of the merged VALUE bounds: any string
-    * accepted by either input spec must be accepted by the merge.
-    * Numeric bounds apply to values that parse as numbers.
-    */
-  private def accepts(sp: FieldSpec, v: String): Boolean = {
-    val len = v.length
-    sp.allowed.forall(_.contains(v)) &&
-      sp.forbidden.forall(!_.contains(v)) &&
-      sp.minLength.forall(len >= _) &&
-      sp.maxLength.forall(len <= _) &&
-      (!sp.notEmpty || v.trim.nonEmpty) &&
-      sp.regex.forall(v.matches) &&
-      v.toDoubleOption.forall(d => sp.min.forall(d >= _) && sp.max.forall(d <= _))
-  }
-
-  property("merge: accepts everything either side accepts (string rules)") =
-    forAll(genInducedSpec, genInducedSpec,
-      Gen.oneOf("a", "b", "c", "x", "y", "", "  ", "abcdefghij", "42", "-150"),
-      Gen.oneOf(false, true)) {
-      (x0, y0, v, oneSided) =>
-        if (!oneSided) {
-          // regexes differ per side → merged drops them; exclude from the
-          // driver interpreter (regex acceptance isn't a lattice op)
-          val x = x0.copy(regex = None)
-          val y = y0.copy(regex = None)
-          val m = Induction.merge(
-            Schema.of("f" -> x), Schema.of("f" -> y)).fields.head._2
-          !(accepts(x, v) || accepts(y, v)) || accepts(m, v)
-        } else {
-          // `f` on the left only: the right side has no rule on it, so
-          // it accepts every value — and so must the merge, whatever
-          // bounds (regex included) the left side carried.
-          val m = Induction.merge(Schema.of("f" -> x0), Schema.of("g" -> y0))
-            .fields.toMap
-          accepts(m("f"), v) && m("f").severity == x0.severity
-        }
     }
 }

@@ -90,17 +90,6 @@ class CrashSpec extends SparkSpec {
     assert(names.count(_.matches("v-\\d+")) <= 2, s"unpruned versions under $root: $names")
   }
 
-  test("saveText: every crash leaves the previous or the new text; a retry saves it") {
-    val texts = Seq("first", "second", "third")
-    val ks = crashProof[Option[String]]("text")(
-      stages = texts.map(t => (dir: String) => IndexStore.saveText(spark, s"$dir/doc", t)),
-      view = dir => IndexStore.loadText(spark, s"$dir/doc"),
-      after = dir => tidy(new File(local(dir), "doc")))
-    info(s"K per save: ${ks.mkString(", ")}")
-    // the third save is the first to prune a version
-    assert(ks.last > ks.head)
-  }
-
   test("buildBloom then appendBloom: a crash leaves no filter, the built or the merged one") {
     val dim = spark.range(0L, 200L, 1L, 2)
       .select(concat(lit("r"), ($"id" % 7).cast("string")).as("repo"),
@@ -125,6 +114,25 @@ class CrashSpec extends SparkSpec {
           Some((bytes.toSeq, meta))
         },
       after = dir => tidy(new File(local(dir), "bloom/data")))
+    info(s"K for build, append, rebuild: ${ks.mkString(", ")}")
+  }
+
+  test("buildDriftBaseline, append, rebuild: a crash leaves no baseline, or bins with their own edges") {
+    val base = spark.range(0L, 240L, 1L, 2)
+      .select(($"id" % 3).cast("string").as("g"), ($"id" * 7 % 101).cast("double").as("v"))
+    // the rebuild changes the binning: bins read with the other build's
+    // edges show up in the view, and an unreadable baseline shows as None
+    val ks = crashProof[Option[(Seq[String], Seq[Double])]]("drift")(
+      stages = Seq(
+        dir => IndexStore.buildDriftBaseline(base.where($"v" < 50), "v", Seq("g"), s"$dir/drift",
+          nBins = 4, exact = true),
+        dir => IndexStore.appendDriftBaseline(base.where($"v" >= 50), s"$dir/drift", "rest"),
+        dir => IndexStore.buildDriftBaseline(base, "v", Seq("g"), s"$dir/drift",
+          nBins = 8, exact = true)),
+      view = dir => Try(IndexStore.loadDriftBaseline(spark, s"$dir/drift")).toOption.map {
+        case (bins, meta) => (bins.collect().map(_.toString).toSeq.sorted, meta.edges)
+      },
+      after = dir => tidy(new File(local(dir), "drift/data")))
     info(s"K for build, append, rebuild: ${ks.mkString(", ")}")
   }
 
@@ -155,18 +163,27 @@ class CrashSpec extends SparkSpec {
     def run(df: DataFrame)(dir: String): Unit =
       ValidationRun.run(df, CodeFiles.schema, "lang", CodeFiles.keyCols, dir)
     // A crashed run's output, for each fresh directory to start with:
-    // another run's violation files under an id no manifest row names.
+    // another run's violation files under an id no manifest row names,
+    // and that run's verdicts file.
     val donor = Files.createTempDirectory("graft-crash-donor").toString
     run(input.where($"lang" === "rust"))(donor)
     val donorDir = new File(Checkpoint.violationsPath(donor)).listFiles()
       .filter(_.getName.startsWith("run_id=")).head
+    val donorVerdicts = new File(Checkpoint.verdictsPath(donor)).listFiles()
+      .filterNot(_.getName.startsWith(".")).head
     def runDirs(dir: String): Set[String] =
       Option(new File(local(dir), "violations").list()).toSet.flatten.filter(_.startsWith("run_id="))
+    def verdictFiles(dir: String): Set[String] =
+      Option(new File(local(dir), "verdicts").list()).toSet.flatten
     def liveRuns(dir: String): Seq[String] = Checkpoint.committed(spark, dir).map(_._2).distinct
     def sorted(df: DataFrame): Seq[String] = df.drop("run_id").collect().map(_.toString).toSeq.sorted
     val ks = crashProof[(Seq[String], Seq[String], Seq[String])]("run")(
-      setup = dir => org.apache.commons.io.FileUtils.copyDirectory(donorDir,
-        new File(local(dir), "violations/run_id=crashed")),
+      setup = { dir =>
+        org.apache.commons.io.FileUtils.copyDirectory(donorDir,
+          new File(local(dir), "violations/run_id=crashed"))
+        org.apache.commons.io.FileUtils.copyFileToDirectory(donorVerdicts,
+          new File(local(dir), "verdicts"))
+      },
       stages = Seq(run(input.where($"lang".isin("scala", "java"))), run(input)),
       view = { dir =>
         val (parts, runs) = Checkpoint.committed(spark, dir).unzip
@@ -174,8 +191,16 @@ class CrashSpec extends SparkSpec {
         else (parts.sorted, sorted(Checkpoint.violations(spark, dir)),
           sorted(spark.read.parquet(s"$dir/verdicts").where($"run_id".isin(runs.distinct: _*))))
       },
-      after = dir => assert(runDirs(dir).subsetOf(liveRuns(dir).map("run_id=" + _).toSet),
-        s"orphan run directories under $dir: ${runDirs(dir)}"))
+      after = { dir =>
+        val live = liveRuns(dir)
+        assert(runDirs(dir).subsetOf(live.map("run_id=" + _).toSet),
+          s"orphan run directories under $dir: ${runDirs(dir)}")
+        val rawRuns = spark.read.parquet(s"$dir/verdicts").select("run_id").distinct().as[String]
+        assert(rawRuns.collect().toSet.subsetOf(live.toSet), s"orphan verdict rows under $dir")
+        assert(verdictFiles(dir).forall(n =>
+          live.exists(id => n.startsWith(Checkpoint.verdictsFileStem(id) + "."))),
+          s"orphan verdicts files under $dir: ${verdictFiles(dir)}")
+      })
     info(s"K for a run over two langs, then the resumed run: ${ks.mkString(", ")}")
   }
 }

@@ -223,73 +223,6 @@ class ExpectationsSpec extends SparkSpec {
     }
   }
 
-  test("suggest: a slice always passes its own induced suite; drift fails it") {
-    val base = Seq(
-      (1L, "en", Some(10.0)), (2L, "en", Some(20.0)),
-      (3L, "de", Some(30.0)), (4L, "fr", Some(40.0))
-    ).toDF("id", "lang", "score")
-    val suite = Expectations.suggest(base, Seq("id", "lang", "score"),
-      tolerance = 0.25)
-    // profile-once-gate-same: every induced bound contains its own
-    // observation by construction
-    assert(Expectations.holds(base, suite))
-    val kinds = suite.map(e => (e.check, e.column)).toSet
-    assert(kinds.contains(("unique_frac", "id")))     // id was unique
-    assert(kinds.contains(("distinct", "lang")))      // 3 ≤ cap
-    assert(kinds.contains(("mean", "score")))         // numeric band
-    assert(!kinds.exists(_ == ("unique_frac", "lang"))) // lang was not
-    // drift: a new category breaks the induced distinct cap; a fatter
-    // table breaks the row_count band
-    val drifted = base.union(Seq(
-      (5L, "zz", Some(50.0)), (6L, "zz", Some(60.0)),
-      (7L, "zz", Some(70.0)), (8L, "zz", Some(80.0)),
-      (9L, "zz", Some(90.0))).toDF("id", "lang", "score"))
-    val verdict = Expectations.evaluate(drifted, suite)
-      .collect().map(r => (r.getAs[String]("check"), r.getAs[String]("column")) -> r.getAs[Boolean]("pass")).toMap
-    assert(!verdict(("distinct", "lang")))
-    assert(!verdict(("row_count", "")))
-    assert(!verdict(("max", "score")))
-  }
-
-  test("suggest: all-null numeric induces no numeric bounds; uniqueness needs null-free") {
-    val base = Seq(
-      (Some(1L), Option.empty[Double]), (Some(1L), None), (None, None)
-    ).toDF("k", "v")
-    val suite = Expectations.suggest(base, Seq("k", "v"))
-    val kinds = suite.map(e => (e.check, e.column)).toSet
-    // v is all-null numeric: null_frac ceiling only (observes 1.0,
-    // passes); zero distinct values → no distinct cap either
-    assert(kinds.filter(_._2 == "v") === Set(("null_frac", "v")))
-    // k has dups AND a null: never an induced uniqueness invariant
-    assert(!kinds.contains(("unique_frac", "k")))
-    assert(Expectations.holds(base, suite))
-  }
-
-  test("suggest: sketch profiling never certifies uniqueness and pads distinct caps") {
-    val base = Seq((1L, "en"), (2L, "de"), (3L, "fr")).toDF("id", "lang")
-    val suite = Expectations.suggest(base, Seq("id", "lang"),
-      tolerance = 0.25, approxDistinct = true)
-    val kinds = suite.map(e => (e.check, e.column)).toSet
-    assert(!kinds.exists(_._1 == "unique_frac")) // sketch can't certify
-    val cap = suite.find(e => e.check == "distinct" && e.column == "lang").get
-    assert(cap.hi > 3.0 - 1e-9 && cap.hi <= 3.0 * 1.25 + 1e-9) // padded
-    // self-pass still holds when gating with the SAME sketch
-    assert(Expectations.holds(base, suite, approxDistinct = true))
-  }
-
-  test("suggest: empty slice and unknown column are rejected at construction") {
-    val df = Seq((1L, "a")).toDF("id", "lang")
-    assertThrows[IllegalArgumentException] {
-      Expectations.suggest(df.limit(0), Seq("id"))
-    }
-    assertThrows[IllegalArgumentException] {
-      Expectations.suggest(df, Seq("nope"))
-    }
-    assertThrows[IllegalArgumentException] {
-      Expectations.suggest(df, Seq("id"), tolerance = -0.1)
-    }
-  }
-
   test("ExpectJson: suites round-trip as canonical JSON; strict parse") {
     import graft.verdict.ExpectJson
     val suite = Seq(
@@ -322,10 +255,18 @@ class ExpectationsSpec extends SparkSpec {
       ExpectJson.fromJson("""[{"check": "mean", "column": "x", "q": 0.5}]"""))
   }
 
-  test("ExpectJson: suggest → serialize → parse → gate is lossless end-to-end") {
+  test("ExpectJson: a declared suite → serialize → parse → gate is lossless end-to-end") {
     import graft.verdict.ExpectJson
     val base = Seq((1L, "en", 10.0), (2L, "de", 20.0)).toDF("id", "lang", "v")
-    val suite = Expectations.suggest(base, Seq("id", "lang", "v"))
+    val suite = Seq(
+      Expect("row_count", lo = 1.8, hi = 2.2),
+      Expect("null_frac", "lang", lo = 0, hi = 0.1),
+      Expect("unique_frac", "id", lo = 1.0),
+      Expect("distinct", "lang", hi = 2),
+      Expect("mean", "v", lo = 14, hi = 16),
+      Expect("min", "v", lo = 7.5),
+      Expect("max", "v", hi = 22.5),
+      Expect("quantile", "v", lo = 10, hi = 20, q = 0.5))
     val shipped = ExpectJson.fromJson(ExpectJson.toJson(suite))
     assert(shipped.map(_.toString) === suite.map(_.toString))
     assert(Expectations.holds(base, shipped))

@@ -104,42 +104,61 @@ class IndexStoreSpec extends SparkSpec {
     assert(stored() === 500L)
   }
 
-  test("saveText/loadText: numerically latest version wins; a stranded temp is cleared") {
-    val p = s"${tmpDir("text")}/artifact.json"
-    val root = new java.io.File(p)
+  test("drift baseline in the pre-versioned layout fails loudly and says to rebuild") {
+    val path = tmpDir("drift-old")
+    val base = docs.where(col("doc_id") % 2 === 0)
+    val edges = graft.drift.Drift.quantileEdges(base, "n_chars", 4, exact = true)
+    // the layout before versions: bins at the root of data/, the edges in meta/
+    graft.drift.Drift.binsByEdges(base, "n_chars", Seq("lang"), edges)
+      .withColumn("slice_id", lit("build")).write.partitionBy("slice_id").parquet(s"$path/data")
+    Seq(IndexStore.DriftMeta("drift", "n_chars", "lang", edges.toSeq)).toDS()
+      .coalesce(1).write.json(s"$path/meta")
+    val e = intercept[IllegalArgumentException](IndexStore.loadDriftBaseline(spark, path))
+    assert(e.getMessage.contains(path) && e.getMessage.contains("rebuild"))
+    intercept[IllegalArgumentException](IndexStore.appendDriftBaseline(base, path, "more"))
+    // a rebuild over it is readable
+    IndexStore.buildDriftBaseline(base, "n_chars", Seq("lang"), path, nBins = 8, exact = true)
+    val (bins, meta) = IndexStore.loadDriftBaseline(spark, path)
+    assert(meta.edges.length === 7 && bins.agg(sum(col("n"))).head().getLong(0) === 250L)
+  }
+
+  test("bloom publish: numerically latest version wins; a stranded temp is cleared") {
+    val path = tmpDir("bloom-versions")
+    val root = new java.io.File(s"$path/data")
     def entries = root.list().filterNot(_.startsWith(".")).toSet // not the .crc sidecars
-    assert(IndexStore.loadText(spark, p) === None)
-    // v-10 must beat v-9: the order is numeric, not lexical
-    (1 to 11).foreach { i =>
-      IndexStore.saveText(spark, p, s"text $i")
-      assert(IndexStore.loadText(spark, p) === Some(s"text $i"))
+    val dim = Seq(("r", "c")).toDF("repo", "commit")
+    val keys = Seq("repo", "commit")
+    // each build publishes a version whose sizing names it; v-10 must
+    // beat v-9: the order is numeric, not lexical
+    (1 to 10).foreach { i =>
+      IndexStore.buildBloom(dim, keys, path, expectedItems = 100L + i)
+      assert(IndexStore.loadBloom(spark, path)._2.expectedItems === 100L + i)
     }
+    IndexStore.appendBloom(Seq(("r2", "c")).toDF("repo", "commit"), path)
+    val (merged, meta) = IndexStore.loadBloom(spark, path)
+    assert(meta.expectedItems === 110L)
     assert(entries === Set("v-10", "v-11")) // the predecessor stays, older ones go
     // a temp stranded by a dead writer never shadows the latest version
-    // and is cleared by the next save
+    // and is cleared by the next publish
     java.nio.file.Files.writeString(new java.io.File(root, "_tmp-dead").toPath, "garbage")
-    assert(IndexStore.loadText(spark, p) === Some("text 11"))
-    IndexStore.saveText(spark, p, "text 12")
-    assert(IndexStore.loadText(spark, p) === Some("text 12"))
+    assert(IndexStore.loadBloom(spark, path)._1.toSeq === merged.toSeq)
+    IndexStore.buildBloom(dim, keys, path, expectedItems = 200L)
+    assert(IndexStore.loadBloom(spark, path)._2.expectedItems === 200L)
     assert(entries === Set("v-11", "v-12"))
   }
 
   test("a file at an artifact path fails loudly; an empty dir reads as never written") {
-    val dir = tmpDir("unversioned")
-    val text = s"$dir/artifact.json"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(text), "{}")
-    val e = intercept[IllegalArgumentException](IndexStore.loadText(spark, text))
-    assert(e.getMessage.contains(text))
-
-    val bloom = s"$dir/bloom"
+    val bloom = s"${tmpDir("unversioned")}/bloom"
     IndexStore.buildBloom(Seq(("r", "c")).toDF("repo", "commit"), Seq("repo", "commit"),
       bloom, expectedItems = 10L)
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$bloom/data"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$bloom/data"), "")
-    val e2 = intercept[IllegalArgumentException](IndexStore.loadBloom(spark, bloom))
-    assert(e2.getMessage.contains(s"$bloom/data"))
+    val e = intercept[IllegalArgumentException](IndexStore.loadBloom(spark, bloom))
+    assert(e.getMessage.contains(s"$bloom/data"))
 
-    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$dir/empty"))
-    assert(IndexStore.loadText(spark, s"$dir/empty") === None)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$bloom/data"))
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$bloom/data"))
+    val e2 = intercept[IllegalArgumentException](IndexStore.loadBloom(spark, bloom))
+    assert(e2.getMessage.contains("has no filter"))
   }
 }

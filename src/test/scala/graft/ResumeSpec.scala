@@ -213,6 +213,27 @@ class ResumeSpec extends SparkSpec {
     assert(resumed.exceptAll(direct).isEmpty && direct.exceptAll(resumed).isEmpty)
   }
 
+  test("a crashed run's verdicts file goes at the next commit; a file named without a run id stays") {
+    val out = tmp()
+    val dir = Paths.get(Checkpoint.verdictsPath(out))
+    def names(): Set[String] = dir.toFile.list().filterNot(_.startsWith(".")).toSet
+    val r1 = ValidationRun.run(files.where(col("lang") === "scala"), CodeFiles.schema, "lang",
+      CodeFiles.keyCols, out)
+    val own = names()
+    assert(own.size === 1 && own.head.startsWith(Checkpoint.verdictsFileStem(r1.runId) + "."))
+    // a crashed run's file (r1's rows under an id no manifest row names),
+    // and a file written before verdicts files were named after their
+    // run: its name carries a random UUID
+    val orphan = own.head.replace(r1.runId, Checkpoint.newRunId())
+    val old = own.head.replace(r1.runId, java.util.UUID.randomUUID().toString)
+    Seq(orphan, old).foreach(n => Files.copy(dir.resolve(own.head), dir.resolve(n)))
+    val r2 = ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out)
+    assert(r2.pending.nonEmpty)
+    val after = names()
+    assert(!after(orphan) && after(old) && after(own.head))
+    assert(after.exists(_.startsWith(Checkpoint.verdictsFileStem(r2.runId) + ".")))
+  }
+
   test("null partition values are tracked via sentinel and resumed correctly") {
     import spark.implicits._
     val out = tmp()

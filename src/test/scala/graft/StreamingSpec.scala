@@ -367,69 +367,4 @@ class StreamingSpec extends SparkSpec {
         historyKeep = 1)
     }
   }
-
-  test("induction sink: per-batch induce + merge folds the schema-so-far; drift rows are the widening") {
-    import graft.index.IndexStore
-    import graft.schema.{Induction, SchemaJson}
-    val src = Files.createTempDirectory("graft-stream-ind-src").toString
-    val schemaPath = Files.createTempDirectory("graft-stream-ind-s").toString + "/schema.json"
-    val drift = Files.createTempDirectory("graft-stream-ind-d").toString + "/drift"
-    val ck = Files.createTempDirectory("graft-stream-ind-ck").toString
-    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val fields = Seq("doc_id", "lang", "n_chars")
-    val slice0 = docs.where(col("doc_id") % 3 === 0)
-    val slice1 = docs.where(col("doc_id") % 3 === 1)
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(docs.schema).parquet(src)
-      val q = StreamingValidator.inductionSink(stream, fields, schemaPath,
-        drift, ck, trigger = Trigger.AvailableNow())
-      q.awaitTermination(60000)
-    }
-    // batch 0: first slice — stored schema IS its induction; drift is
-    // all-"added" (diff vs the empty schema)
-    slice0.write.mode("overwrite").parquet(src)
-    runOnce()
-    val s0 = SchemaJson.fromJson(IndexStore.loadText(spark, schemaPath).get)
-    assert(Induction.diff(spark, Induction.suggestSchema(slice0, fields), s0)
-      .isEmpty)
-    val d0 = spark.read.parquet(drift).where(col("batch_id") === 0)
-    assert(d0.count() === fields.size &&
-      d0.where(col("change") === "added").count() === fields.size)
-    // batch 1: second slice widens the fold — stored equals the direct
-    // merge of the two inductions, and accepts BOTH slices
-    slice1.write.mode("append").parquet(src)
-    runOnce()
-    val s1 = SchemaJson.fromJson(IndexStore.loadText(spark, schemaPath).get)
-    val direct = Induction.merge(
-      Induction.suggestSchema(slice0, fields),
-      Induction.suggestSchema(slice1, fields))
-    assert(Induction.diff(spark, direct, s1).isEmpty)
-    assert(graft.validate.Validator
-      .violations(slice0.union(slice1), s1, Seq("doc_id")).isEmpty)
-    // the batch-1 drift partition records the widening (nothing added,
-    // something loosened — the second slice forced bounds open)
-    val d1 = spark.read.parquet(drift).where(col("batch_id") === 1)
-    assert(d1.where(col("change") === "added").count() === 0)
-    assert(d1.where(col("change") === "loosened").count() > 0)
-    // replay idempotence: re-merging a batch already in the fold is a
-    // no-op diff, and the saveText swap keeps the artifact readable
-    assert(Induction.diff(spark, s1,
-      Induction.merge(s1, Induction.suggestSchema(slice1, fields))).isEmpty)
-    IndexStore.saveText(spark, schemaPath, SchemaJson.toJson(s1))
-    assert(SchemaJson.fromJson(IndexStore.loadText(spark, schemaPath).get)
-      .fieldNames === s1.fieldNames)
-
-    // cap lowered between runs: a stored schema whose allowed set is
-    // over the NEW cap must be re-capped by the sink (allowed widened
-    // away), not poison every batch with merge's loud guard
-    val ck2 = Files.createTempDirectory("graft-stream-ind-ck2").toString
-    val drift2 = Files.createTempDirectory("graft-stream-ind-d2").toString + "/drift"
-    val stream2 = spark.readStream.schema(docs.schema).parquet(src)
-    val q2 = StreamingValidator.inductionSink(stream2, fields, schemaPath,
-      drift2, ck2, trigger = Trigger.AvailableNow(), maxAllowed = 2)
-    q2.awaitTermination(60000)
-    val recapped = SchemaJson.fromJson(IndexStore.loadText(spark, schemaPath).get)
-    assert(recapped.fields.toMap.apply("lang").allowed === None)
-  }
 }
