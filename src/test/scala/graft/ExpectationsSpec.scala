@@ -255,7 +255,7 @@ class ExpectationsSpec extends SparkSpec {
       ExpectJson.fromJson("""[{"check": "mean", "column": "x", "q": 0.5}]"""))
   }
 
-  test("ExpectJson: a declared suite → serialize → parse → gate is lossless end-to-end") {
+  test("ExpectJson: a declared suite → serialize → parse → gate is lossless") {
     import graft.verdict.ExpectJson
     val base = Seq((1L, "en", 10.0), (2L, "de", 20.0)).toDF("id", "lang", "v")
     val suite = Seq(
