@@ -124,7 +124,7 @@ object Drift {
     * the scorer behind `IndexStore.driftAgainstBaseline`, the one
     * stored-baseline path. Only `cur` is scanned; the sketch side is
     * O(groups × bins). The edges must be the ones the sketch was built
-    * with — the store's meta sidecar carries them.
+    * with — each stored version's meta carries them.
     */
   def compareWithBaselineEdges(
       cur: DataFrame,

@@ -71,8 +71,8 @@ object RefIntegrity {
 
   /** Build a serialized Bloom filter over the dim's (non-null) key
     * hashes. One pass over dim; the result is `O(expectedItems)` BITS
-    * regardless of dim row width — persist it via
-    * [[graft.index.IndexStore]] and reuse across fact scans.
+    * regardless of dim row width, so one build serves every fact scan
+    * that probes it.
     */
   def buildKeyBloom(
       dim: DataFrame,

@@ -147,6 +147,24 @@ object Checkpoint {
     }
   }
 
+  /** Fails when `outDir/violations` holds a directory that is not a run
+    * directory (entries named `_…` or `.…` aside). An `outDir` written
+    * before violations landed one directory per run holds
+    * `<partitionCol>=<v>/` directories, and a run directory beside them
+    * would make every later read of the violations fail on the
+    * conflicting partition columns. A file-system listing only: no job.
+    */
+  def requireRunLayout(spark: SparkSession, outDir: String): Unit = {
+    val d = new Path(violationsPath(outDir))
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stale = if (!fs.exists(d)) None else fs.listStatus(d).find { s =>
+      s.isDirectory && !Seq(RunDirPrefix, "_", ".").exists(s.getPath.getName.startsWith)
+    }
+    stale.foreach(s => throw new IllegalArgumentException(
+      s"${s.getPath} is not a run directory: $outDir holds violations in the layout before " +
+        "one directory per run; start in a fresh outDir"))
+  }
+
   /** Partition values present in the input but not yet committed —
     * left_anti against the (tiny, broadcast) manifest.
     */

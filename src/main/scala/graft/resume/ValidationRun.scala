@@ -31,7 +31,10 @@ import scala.jdk.CollectionConverters._
   * scan task with violations, whatever the number of partition values.
   * Every run, committing or not, ends by deleting the run directories
   * and verdicts files that no manifest row names
-  * ([[Checkpoint.removeOrphans]]): file-system listings, no job.
+  * ([[Checkpoint.removeOrphans]]): file-system listings, no job. An
+  * `outDir` whose violations are in the layout before one directory per
+  * run is refused before anything is written
+  * ([[Checkpoint.requireRunLayout]]).
   */
 object ValidationRun {
 
@@ -50,6 +53,7 @@ object ValidationRun {
       outDir: String
   ): Report = {
     val spark = df.sparkSession
+    Checkpoint.requireRunLayout(spark, outDir)
     val runId = Checkpoint.newRunId()
     val t0 = System.currentTimeMillis()
 

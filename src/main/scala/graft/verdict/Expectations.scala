@@ -51,12 +51,10 @@ object Expectations {
     *
     * RELATIVE kinds (`row_count_rel`, `null_frac_rel`, `distinct_rel`,
     * `mean_rel` — [[evaluateRelative]] only): the bound gates the
-    * RATIO current / previous of the base metric against a persisted
-    * prior run's observations — "a snapshot 40% smaller than
-    * yesterday's" is `Expect("row_count_rel", lo = 0.6)`. No static
-    * bound can express these; see
-    * [[graft.index.IndexStore.appendExpectationSnapshot]] for the
-    * snapshot store.
+    * RATIO current / previous of the base metric against a prior
+    * run's observations, which the caller supplies — "a snapshot 40%
+    * smaller than yesterday's" is `Expect("row_count_rel", lo = 0.6)`.
+    * No static bound can express these.
     *
     * Unbounded sides default to ±∞.
     */
@@ -195,9 +193,8 @@ object Expectations {
 
   /** Evaluate baseline-RELATIVE expectations: each `*_rel` check gates
     * the ratio `current / previous` of its base metric, where
-    * `previous` comes from `baseline` — a stored [[evaluate]] output
-    * (same groupCols; see
-    * [[graft.index.IndexStore.appendExpectationSnapshot]]).
+    * `previous` comes from `baseline` — an [[evaluate]] output of an
+    * earlier snapshot, kept by the caller (same groupCols).
     *
     * Output: one row per (group ∪ groups-only-in-baseline, declared
     * check) with `(…groupCols, check, column, current, previous,

@@ -90,33 +90,6 @@ class CrashSpec extends SparkSpec {
     assert(names.count(_.matches("v-\\d+")) <= 2, s"unpruned versions under $root: $names")
   }
 
-  test("buildBloom then appendBloom: a crash leaves no filter, the built or the merged one") {
-    val dim = spark.range(0L, 200L, 1L, 2)
-      .select(concat(lit("r"), ($"id" % 7).cast("string")).as("repo"),
-        $"id".cast("string").as("commit"))
-    val keys = Seq("repo", "commit")
-    def committed(dir: String): Boolean =
-      Option(new File(local(dir), "bloom/data").list()).exists(_.exists(_.matches("v-\\d+")))
-    // the rebuild changes the keys and the sizing: a filter read with
-    // the other build's parameters shows up in the view
-    val ks = crashProof[Option[(Seq[Byte], IndexStore.BloomMeta)]]("bloom")(
-      stages = Seq(
-        dir => IndexStore.buildBloom(dim.where($"id" % 2 === 0), keys, s"$dir/bloom",
-          expectedItems = 1000L),
-        dir => IndexStore.appendBloom(dim, s"$dir/bloom"),
-        dir => IndexStore.buildBloom(dim, Seq("repo"), s"$dir/bloom", expectedItems = 50L)),
-      view = dir =>
-        if (!committed(dir)) {
-          assert(Try(IndexStore.loadBloom(spark, s"$dir/bloom")).isFailure)
-          None
-        } else {
-          val (bytes, meta) = IndexStore.loadBloom(spark, s"$dir/bloom")
-          Some((bytes.toSeq, meta))
-        },
-      after = dir => tidy(new File(local(dir), "bloom/data")))
-    info(s"K for build, append, rebuild: ${ks.mkString(", ")}")
-  }
-
   test("buildDriftBaseline, append, rebuild: a crash leaves no baseline, or bins with their own edges") {
     val base = spark.range(0L, 240L, 1L, 2)
       .select(($"id" % 3).cast("string").as("g"), ($"id" * 7 % 101).cast("double").as("v"))

@@ -186,43 +186,6 @@ class ExpectationsSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] { Expect("mean_rel", "v", q = 0.5) }
   }
 
-  test("expectation snapshot store: first run fails, stored baseline gates, latest wins") {
-    import graft.index.IndexStore
-    val dir = java.nio.file.Files.createTempDirectory("graft-expstore").toString
-    val path = s"$dir/exp"
-    val checks = Seq(Expect("row_count_rel", lo = 0.5, hi = 2.0))
-    val snap1 = Seq(("a", 1), ("a", 2), ("b", 1)).toDF("g", "v")
-    val snap2 = Seq(("a", 1), ("b", 1), ("b", 2)).toDF("g", "v")
-    // FIRST RUN — no store: every bounded relative check FAILS
-    val first = IndexStore.expectationsAgainstBaseline(
-      snap1, checks, Seq("g"), path)
-    assert(first.count() === 2 && first.where(col("pass")).count() === 0)
-    // bootstrap snapshot 1, gate snapshot 2 against it: a 2/1, b 1/2
-    IndexStore.appendExpectationSnapshot(snap1,
-      Seq(Expect("row_count")), Seq("g"), path, "s1")
-    val second = IndexStore.expectationsAgainstBaseline(
-        snap2, checks, Seq("g"), path)
-      .collect().map(r => r.getAs[String]("g") -> r).toMap
-    assert(second("a").getAs[Double]("observed") === 0.5)
-    assert(second("a").getAs[Boolean]("pass"))
-    assert(second("b").getAs[Double]("observed") === 2.0)
-    // append snapshot 2 → LATEST (not first) becomes the baseline
-    IndexStore.appendExpectationSnapshot(snap2,
-      Seq(Expect("row_count")), Seq("g"), path, "s2")
-    val third = IndexStore.expectationsAgainstBaseline(
-        snap2, checks, Seq("g"), path)
-      .collect().map(r => r.getAs[String]("g") -> r).toMap
-    assert(third("a").getAs[Double]("observed") === 1.0)
-    assert(third("b").getAs[Double]("observed") === 1.0)
-    val (latest, meta) = IndexStore.loadLatestExpectations(spark, path)
-    assert(meta.groupCols === "g")
-    assert(latest.select("snapshot_id").distinct().head().getString(0) === "s2")
-    // groupCols drift against the stored meta is rejected loudly
-    assertThrows[IllegalArgumentException] {
-      IndexStore.expectationsAgainstBaseline(snap2, checks, Seq("v"), path)
-    }
-  }
-
   test("ExpectJson: suites round-trip as canonical JSON; strict parse") {
     import graft.verdict.ExpectJson
     val suite = Seq(
@@ -286,43 +249,5 @@ class ExpectationsSpec extends SparkSpec {
     assert(out(None).getAs[Double]("observed") === 0.5)
     assert(out(None).getAs[Boolean]("pass"))
     assert(out(Some("a")).getAs[Double]("observed") === 1.0)
-  }
-
-  test("snapshot store: crashed/zero-row first append never poisons; history prunes; ids path-safe") {
-    import graft.index.IndexStore
-    val dir = java.nio.file.Files.createTempDirectory("graft-expstore2").toString
-    val path = s"$dir/exp"
-    val data = Seq(("a", 1), ("b", 2)).toDF("g", "v")
-    val baseChecks = Seq(Expect("row_count"))
-    val relChecks = Seq(Expect("row_count_rel", lo = 0.5, hi = 2.0))
-    // zero-row first append: meta lands, data does not — the store must
-    // behave as FIRST RUN (fail bounded rel checks), and the next
-    // append must restart at seq 0, not crash on the missing data path
-    assert(IndexStore.appendExpectationSnapshot(
-      data.limit(0), baseChecks, Seq("g"), path, "s0") === 0L)
-    val first = IndexStore.expectationsAgainstBaseline(
-      data, relChecks, Seq("g"), path)
-    assert(first.count() === 2 && first.where(col("pass")).count() === 0)
-    assertThrows[IllegalArgumentException] {
-      IndexStore.loadLatestExpectations(spark, path) // loud, names the cause
-    }
-    assert(IndexStore.appendExpectationSnapshot(
-      data, baseChecks, Seq("g"), path, "s1") === 2L)
-    assert(IndexStore.expectationsAgainstBaseline(
-      data, relChecks, Seq("g"), path).where(col("pass")).count() === 2)
-    // history pruning: keep only the newest K snapshots
-    (2 to 5).foreach(i => IndexStore.appendExpectationSnapshot(
-      data, baseChecks, Seq("g"), path, s"s$i"))
-    assert(IndexStore.pruneExpectationSnapshots(spark, path, keepLast = 2) === 3L)
-    val left = spark.read.parquet(s"$path/data")
-      .select("snapshot_id").distinct().as[String].collect().toSet
-    assert(left === Set("s4", "s5"))
-    val (latest, _) = IndexStore.loadLatestExpectations(spark, path)
-    assert(latest.select("snapshot_id").distinct().head().getString(0) === "s5")
-    // ids become partition directories — unsafe ones rejected up front
-    assertThrows[IllegalArgumentException] {
-      IndexStore.appendExpectationSnapshot(
-        data, baseChecks, Seq("g"), path, "bad/id")
-    }
   }
 }

@@ -3,9 +3,9 @@ package graft
 import graft.index.IndexStore
 import org.apache.spark.sql.functions._
 
-/** Build-once/query-many index persistence: stored indices reproduce
-  * the direct-compute results exactly, and a query against a stored
-  * index reads the index instead of rescanning its source.
+/** The persisted drift baseline: a stored sketch reproduces the
+  * direct-compute scores exactly, and a query against it reads the
+  * sketch instead of rescanning the baseline.
   */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -18,37 +18,16 @@ class IndexStoreSpec extends SparkSpec {
     d.toString
   }
 
-  test("bloom: stored filter probes like a fresh build; append folds a new dim slice in") {
-    import graft.data.SynthGen
-    import graft.refint.RefIntegrity
-    val files = SynthGen.codeFiles(spark, SynthGen.Config(rows = 6000L))
-    val dim = SynthGen.dimCommits(spark, SynthGen.Config(rows = 6000L))
-    val keys = Seq("repo", "commit")
-    val path = tmpDir("bloom")
-
-    // Build over HALF the dim, then append the full dim (idempotent
-    // re-inserts): the stored filter must now cover every dim key.
-    IndexStore.buildBloom(dim.where(xxhash64(col("repo"), col("commit")) % 2 === 0),
-      keys, path, expectedItems = 10000L, fpp = 0.01)
-    IndexStore.appendBloom(dim, path)
-
-    val (bytes, meta) = IndexStore.loadBloom(spark, path)
-    assert(meta.keys === "repo,commit" && meta.fpp === 0.01)
-    val plain = RefIntegrity.orphans(files, dim, keys)
-    val fast = RefIntegrity.orphansWithBloom(files, dim, keys, bytes)
-    assert(fast.exceptAll(plain).isEmpty && plain.exceptAll(fast).isEmpty)
-    // and the approximate path still never invents an orphan
-    assert(RefIntegrity.orphansApprox(files, keys, bytes)
-      .exceptAll(plain).isEmpty)
-  }
-
   test("kind mismatch fails loudly at load") {
     val path = tmpDir("kind")
-    IndexStore.buildBloom(docs, Seq("doc_id"), path, expectedItems = 1000L)
-    val e = intercept[IllegalArgumentException] {
-      IndexStore.loadDriftBaseline(spark, path)
+    // the sidecar a Bloom index left: its kind, nothing else
+    Seq("bloom").toDF("kind").coalesce(1).write.json(s"$path/meta")
+    val load = intercept[IllegalArgumentException](IndexStore.loadDriftBaseline(spark, path))
+    assert(load.getMessage.contains("'bloom'"))
+    val build = intercept[IllegalArgumentException] {
+      IndexStore.buildDriftBaseline(docs, "n_chars", Seq("lang"), path, nBins = 4, exact = true)
     }
-    assert(e.getMessage.contains("'bloom'"))
+    assert(build.getMessage.contains("'bloom'"))
   }
 
   test("drift baseline: stored sketch scores == direct compare; baseline never rescanned") {
@@ -102,6 +81,8 @@ class IndexStoreSpec extends SparkSpec {
     assert(stored() === 500L)
     IndexStore.appendDriftBaseline(odd, path, "odd")
     assert(stored() === 500L)
+    // a slice id names a partition directory: an unsafe one is refused
+    intercept[IllegalArgumentException](IndexStore.appendDriftBaseline(odd, path, "bad/id"))
   }
 
   test("drift baseline in the pre-versioned layout fails loudly and says to rebuild") {
@@ -116,49 +97,48 @@ class IndexStoreSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](IndexStore.loadDriftBaseline(spark, path))
     assert(e.getMessage.contains(path) && e.getMessage.contains("rebuild"))
     intercept[IllegalArgumentException](IndexStore.appendDriftBaseline(base, path, "more"))
-    // a rebuild over it is readable
+    // a rebuild over it is readable, and clears the old bins from data/
     IndexStore.buildDriftBaseline(base, "n_chars", Seq("lang"), path, nBins = 8, exact = true)
     val (bins, meta) = IndexStore.loadDriftBaseline(spark, path)
     assert(meta.edges.length === 7 && bins.agg(sum(col("n"))).head().getLong(0) === 250L)
+    assert(new java.io.File(s"$path/data").list().filterNot(_.startsWith(".")).toSet === Set("v-1"))
   }
 
   test("bloom publish: numerically latest version wins; a stranded temp is cleared") {
-    val path = tmpDir("bloom-versions")
+    val path = tmpDir("drift-versions")
     val root = new java.io.File(s"$path/data")
     def entries = root.list().filterNot(_.startsWith(".")).toSet // not the .crc sidecars
-    val dim = Seq(("r", "c")).toDF("repo", "commit")
-    val keys = Seq("repo", "commit")
-    // each build publishes a version whose sizing names it; v-10 must
+    val base = docs.where(col("doc_id") % 2 === 0)
+    def build(nBins: Int): Unit =
+      IndexStore.buildDriftBaseline(base, "n_chars", Seq("lang"), path, nBins = nBins, exact = true)
+    def edges = IndexStore.loadDriftBaseline(spark, path)._2.edges.length
+    // each build publishes a version whose edge count names it; v-10 must
     // beat v-9: the order is numeric, not lexical
     (1 to 10).foreach { i =>
-      IndexStore.buildBloom(dim, keys, path, expectedItems = 100L + i)
-      assert(IndexStore.loadBloom(spark, path)._2.expectedItems === 100L + i)
+      build(nBins = i + 1)
+      assert(edges === i)
     }
-    IndexStore.appendBloom(Seq(("r2", "c")).toDF("repo", "commit"), path)
-    val (merged, meta) = IndexStore.loadBloom(spark, path)
-    assert(meta.expectedItems === 110L)
-    assert(entries === Set("v-10", "v-11")) // the predecessor stays, older ones go
+    assert(entries === Set("v-9", "v-10")) // the predecessor stays, older ones go
     // a temp stranded by a dead writer never shadows the latest version
     // and is cleared by the next publish
     java.nio.file.Files.writeString(new java.io.File(root, "_tmp-dead").toPath, "garbage")
-    assert(IndexStore.loadBloom(spark, path)._1.toSeq === merged.toSeq)
-    IndexStore.buildBloom(dim, keys, path, expectedItems = 200L)
-    assert(IndexStore.loadBloom(spark, path)._2.expectedItems === 200L)
-    assert(entries === Set("v-11", "v-12"))
+    assert(edges === 10)
+    build(nBins = 3)
+    assert(edges === 2)
+    assert(entries === Set("v-10", "v-11"))
   }
 
   test("a file at an artifact path fails loudly; an empty dir reads as never written") {
-    val bloom = s"${tmpDir("unversioned")}/bloom"
-    IndexStore.buildBloom(Seq(("r", "c")).toDF("repo", "commit"), Seq("repo", "commit"),
-      bloom, expectedItems = 10L)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$bloom/data"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$bloom/data"), "")
-    val e = intercept[IllegalArgumentException](IndexStore.loadBloom(spark, bloom))
-    assert(e.getMessage.contains(s"$bloom/data"))
+    val drift = s"${tmpDir("unversioned")}/drift"
+    IndexStore.buildDriftBaseline(docs, "n_chars", Seq("lang"), drift, nBins = 4, exact = true)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$drift/data"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$drift/data"), "")
+    val e = intercept[IllegalArgumentException](IndexStore.loadDriftBaseline(spark, drift))
+    assert(e.getMessage.contains(s"$drift/data"))
 
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$bloom/data"))
-    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$bloom/data"))
-    val e2 = intercept[IllegalArgumentException](IndexStore.loadBloom(spark, bloom))
-    assert(e2.getMessage.contains("has no filter"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$drift/data"))
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$drift/data"))
+    val e2 = intercept[IllegalArgumentException](IndexStore.loadDriftBaseline(spark, drift))
+    assert(e2.getMessage.contains("has no committed version"))
   }
 }

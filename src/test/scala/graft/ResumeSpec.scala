@@ -234,6 +234,18 @@ class ResumeSpec extends SparkSpec {
     assert(after.exists(_.startsWith(Checkpoint.verdictsFileStem(r2.runId) + ".")))
   }
 
+  test("an outDir with violations in the layout before run directories is refused before any write") {
+    val out = tmp()
+    val violations = Paths.get(Checkpoint.violationsPath(out))
+    Files.createDirectories(violations.resolve("lang=py"))
+    Files.createFile(violations.resolve("_SUCCESS"))
+    val e = intercept[IllegalArgumentException](
+      ValidationRun.run(files, CodeFiles.schema, "lang", CodeFiles.keyCols, out))
+    assert(e.getMessage.contains("lang=py") && e.getMessage.contains("fresh outDir"))
+    assert(violations.toFile.list().toSet === Set("lang=py", "_SUCCESS"))
+    assert(!Files.exists(Paths.get(Checkpoint.manifestPath(out))))
+  }
+
   test("null partition values are tracked via sentinel and resumed correctly") {
     import spark.implicits._
     val out = tmp()
