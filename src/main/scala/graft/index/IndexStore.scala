@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.util.Try
-
 /** The persisted drift baseline: a binned sketch of a baseline table,
   * built once and scored against many times, instead of rescanning the
   * baseline per check. The load path checks the sidecar's kind before
@@ -39,25 +37,30 @@ object IndexStore {
   final case class DriftMeta(kind: String, valueCol: String, groupCols: String, edges: Seq[Double])
 
   private def requireKind(spark: SparkSession, path: String, kind: String): Unit = {
-    val kinds = spark.read.json(s"$path/meta").select(col("kind")).collect()
-    require(kinds.length == 1, s"index at $path has no readable meta sidecar")
+    val kinds = spark.read.schema("kind STRING").json(s"$path/meta").collect()
+    require(kinds.length == 1 && !kinds.head.isNullAt(0), s"index at $path has no readable meta sidecar")
     val actual = kinds.head.getString(0)
     require(actual == kind,
       s"index at $path is a '$actual' index, not '$kind'")
   }
 
-  /** The kind-only sidecar: checked when readable, written otherwise
-    * (unreadable covers a crash inside the first write). Never rewritten
-    * by a rebuild.
+  /** The kind-only sidecar: checked when it exists, written otherwise.
+    * It exists once `meta/` holds a file Spark reads (one not named
+    * `_…` or `.…`); a crash inside the first write leaves at most
+    * Spark's `_temporary/`, which a retry overwrites. Anything else
+    * there must read as this kind. Never rewritten by a rebuild.
     */
-  private def claimKind(spark: SparkSession, path: String, kind: String): Unit =
-    Try(spark.read.json(s"$path/meta").select(col("kind")).as[String](Encoders.STRING).head())
-      .toOption match {
-      case Some(k) => require(k == kind, s"index at $path is a '$k' index, not '$kind'")
-      case None =>
-        spark.createDataset(Seq(KindMeta(kind)))(Encoders.product[KindMeta])
-          .coalesce(1).write.mode(SaveMode.Overwrite).json(s"$path/meta")
+  private def claimKind(spark: SparkSession, path: String, kind: String): Unit = {
+    val meta = new Path(s"$path/meta")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val written = fs.exists(meta) && fs.listStatus(meta).exists { s =>
+      val name = s.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
     }
+    if (written) requireKind(spark, path, kind)
+    else spark.createDataset(Seq(KindMeta(kind)))(Encoders.product[KindMeta])
+      .coalesce(1).write.mode(SaveMode.Overwrite).json(meta.toString)
+  }
 
   /** Write `rows` as one `<sliceCol>=<id>` partition and report how
     * many landed — the count runs BEFORE the write (on a cached frame)
@@ -110,6 +113,7 @@ object IndexStore {
     require(!groupCols.contains(SliceCol), s"'$SliceCol' names the baseline's slices, not a group column")
     val spark = base.sparkSession
     val edges = graft.drift.Drift.quantileEdges(base, valueCol, nBins, exact)
+    require(edges.nonEmpty, s"baseline has no non-null '$valueCol' value to take bin edges from")
     claimKind(spark, path, "drift")
     publish(spark, new Path(s"$path/data")) { tmp =>
       graft.drift.Drift.binsByEdges(base, valueCol, groupCols, edges)

@@ -2,20 +2,24 @@ package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 
 /** Per-column profiling stats, computed in a single aggregation pass
-  * (north rule: count, null-rate, distinct via HyperLogLog++, min/max,
-  * length histograms).
+  * (north rule: count, null-rate, distinct via a HyperLogLog sketch,
+  * min/max, length histograms).
   *
   * Scale notes:
   *   - One `groupBy(partition).agg(...)` evaluates every column's stats
   *     in one scan — Catalyst runs partial (map-side) aggregation, so
   *     shuffle volume is O(groups × columns), independent of row count.
-  *   - Distinct counts default to `approx_count_distinct` (built-in
-  *     HLL++, fixed-size sketch buffers — spill-safe at any scale);
-  *     `exact = true` switches to `countDistinct` for oracle parity at
-  *     test scale (expand-based, one extra shuffle — fine at sf0.01,
-  *     not the 100 TB path).
+  *   - Distinct counts default to `hll_sketch_estimate(hll_sketch_agg)`
+  *     (the DataSketches HLL sketch: fixed-size buffers, spill-safe at
+  *     any scale, and bytes Spark can merge). It is a typed aggregate,
+  *     so Spark plans an `ObjectHashAggregate` — no sort of the rows,
+  *     even with string min/max in the same aggregate. `exact = true`
+  *     switches to `countDistinct` for oracle parity at test scale
+  *     (expand-based, one extra shuffle — fine at sf0.01, not the
+  *     100 TB path).
   */
 object ColumnStats {
 
@@ -25,6 +29,12 @@ object ColumnStats {
     * column types share one output schema. ONE aggregation computes
     * every column's stats side by side (aliased `__<column>__<stat>`);
     * then one struct per column is exploded over that tiny frame.
+    *
+    * The approximate distinct count's sketch has `2^lgK` buckets with
+    * `lgK = ceil(2·log2(1.106 / rsd))` clamped to [4, 21] — lgK 9 at the
+    * default `rsd = 0.05`. The sketch takes int, bigint, string and
+    * binary values; a column of any other type is sketched as its
+    * string cast.
     */
   def compute(
       df: DataFrame,
@@ -33,8 +43,14 @@ object ColumnStats {
       exact: Boolean = false,
       rsd: Double = 0.05
   ): DataFrame = {
+    require(rsd > 0d, s"rsd must be > 0, got $rsd")
+    val lgK = math.min(21, math.max(4, math.ceil(2 * math.log(1.106 / rsd) / math.log(2)).toInt))
     def distinctAgg(c: Column): Column =
-      if (exact) countDistinct(c) else approx_count_distinct(c, rsd)
+      if (exact) countDistinct(c)
+      else hll_sketch_estimate(hll_sketch_agg(df.select(c).schema.head.dataType match {
+        case IntegerType | LongType | BinaryType | _: StringType => c
+        case _ => c.cast("string")
+      }, lgK))
 
     val aggs = cols.flatMap { name =>
       val c = col(name)

@@ -2,7 +2,15 @@ package graft
 
 import graft.data.SynthGen
 import graft.drift.Drift
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.util.Random
 
 class DriftSpec extends SparkSpec {
   import spark.implicits._
@@ -148,5 +156,117 @@ class DriftSpec extends SparkSpec {
     val global = scores(Drift.againstGlobal(df, "v", Seq("g"), 10, 0d, 100d))
     assert(global.keySet === Set(None, Some("g")) && global(None)._1 === 100L)
     assert(global.values.forall(v => v._3.isDefined && v._4.isDefined))
+  }
+
+  test("an empty or all-null baseline: each current group keeps n_cur, with n_base 0 and null scores") {
+    val cur = Seq(("a", Some(1d)), ("a", Some(2d)), ("b", Some(3d)), (null, Some(4d)), ("c", None))
+      .toDF("g", "v")
+    val want = Map(Some("a") -> ((2L, 0L, None, None)), Some("b") -> ((1L, 0L, None, None)),
+      None -> ((1L, 0L, None, None)))
+    Seq("empty" -> cur.limit(0), "all-null" -> cur.where(col("v").isNull)).foreach { case (what, base) =>
+      Seq(true, false).foreach { exact =>
+        val out = scores(Drift.compareAuto(cur, base, "v", Seq("g"), nBins = 4, exact = exact))
+        assert(out === want, s"$what baseline, exact = $exact")
+      }
+    }
+  }
+
+  test("compareAuto runs two queries, edges then bins, with one hash exchange and no window or sort") {
+    val base = spark.range(0, 400).select(
+      when(col("id") % 5 === 0, lit(null).cast("string")).otherwise(pmod(col("id"), lit(3)).cast("string")).as("g"),
+      pmod(col("id") * 7, lit(100)).cast("double").as("v"))
+    val cur = base.withColumn("v", col("v") * 1.1)
+    var out: DataFrame = null
+    val plans = Executed.plans(spark) {
+      out = Drift.compareAuto(cur, base, "v", Seq("g"), nBins = 10)
+    }
+    assert(plans.length === 2)
+    val nodes = plans.map(Executed.nodes)
+    def count(p: PartialFunction[SparkPlan, Unit]) = nodes.map(_.count(p.isDefinedAt))
+    // one hash exchange, under the bins' aggregate; the edges' global
+    // aggregate only gathers its partial sketches into one partition
+    def exchanges(p: ShuffleExchangeExec => Boolean) = count { case s: ShuffleExchangeExec if p(s) => }
+    assert(exchanges(_.outputPartitioning.numPartitions > 1) === Seq(0, 1))
+    assert(exchanges(_.outputPartitioning == SinglePartition) === Seq(1, 0))
+    assert(count { case _: WindowExec | _: SortExec => } === Seq(0, 0))
+    // the scored frame is local and writes as one file
+    assert(out.rdd.getNumPartitions === 1)
+    assert(out.count() === 4)
+  }
+
+  test("the driver scorer equals the Catalyst window scorer on generated frames") {
+    // a NULL group, a group on one side only, gaps of bins that neither
+    // side hits, and nBins 2..12
+    def frame(rnd: Random, groups: Seq[String], shift: Double) =
+      Seq.fill(300) {
+        val g = groups(rnd.nextInt(groups.size))
+        val v = if (rnd.nextInt(20) == 0) None
+          else Some(math.floor(rnd.nextDouble() * 4) * 25 + rnd.nextDouble() * 5 + shift)
+        (g, v)
+      }.toDF("g", "v")
+    (2 to 12).foreach { nBins =>
+      val rnd = new Random(nBins)
+      val cur = frame(rnd, Seq("a", "b", null, "cur_only"), shift = rnd.nextDouble() * 10)
+      val base = frame(rnd, Seq("a", "b", null, "base_only"), shift = 0d)
+      val hi = 120d + nBins
+      val curBins = Drift.bins(cur, "v", Seq("g"), nBins, 0d, hi)
+      val baseBins = Drift.bins(base, "v", Seq("g"), nBins, 0d, hi)
+      val direct = scores(Drift.compare(cur, base, "v", Seq("g"), nBins, 0d, hi))
+      assert(direct.keySet === Set(Some("a"), Some("b"), None, Some("cur_only"), Some("base_only")))
+      assert(direct === scores(WindowScorer.compare(curBins, baseBins, Seq("g"))), s"compare, nBins = $nBins")
+      assert(scores(Drift.againstGlobal(cur, "v", Seq("g"), nBins, 0d, hi)) ===
+        scores(WindowScorer.againstGlobal(curBins, Drift.bins(cur, "v", Nil, nBins, 0d, hi), Seq("g"))),
+        s"againstGlobal, nBins = $nBins")
+      val edges = (1 until nBins).map(i => i * hi / nBins).toArray
+      assert(scores(Drift.compareWithEdges(cur, base, "v", Seq("g"), edges)) ===
+        scores(WindowScorer.compare(Drift.binsByEdges(cur, "v", Seq("g"), edges),
+          Drift.binsByEdges(base, "v", Seq("g"), edges), Seq("g"))), s"compareWithEdges, nBins = $nBins")
+    }
+  }
+
+  /** The scoring `Drift` ran in Catalyst before it moved to the driver:
+    * the two sides' counts aligned by an aggregate, fractions and
+    * cumulative sums by windows per group.
+    */
+  private object WindowScorer {
+    private val eps = 1e-6
+
+    def compare(cur: DataFrame, base: DataFrame, groupCols: Seq[String]): DataFrame =
+      score(align(cur, base, groupCols :+ "bin"), groupCols)
+
+    def againstGlobal(cur: DataFrame, global: DataFrame, groupCols: Seq[String]): DataFrame = {
+      val grid = cur.select(groupCols.map(col): _*).distinct().crossJoin(broadcast(global))
+      score(align(cur, grid, groupCols :+ "bin"), groupCols)
+    }
+
+    private def align(cur: DataFrame, base: DataFrame, keys: Seq[String]): DataFrame =
+      cur.select(keys.map(col) :+ col("n").as("n_cur") :+ lit(0L).as("n_base"): _*)
+        .unionByName(base.select(keys.map(col) :+ lit(0L).as("n_cur") :+ col("n").as("n_base"): _*))
+        .groupBy(keys.map(col): _*)
+        .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
+
+    private def score(joined: DataFrame, groupCols: Seq[String]): DataFrame = {
+      val g = groupCols.map(col)
+      val wg = Window.partitionBy(g: _*)
+      val wcum = wg.orderBy(col("bin")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val p = try_divide(col("n_cur"), sum(col("n_cur")).over(wg))
+      val q = try_divide(col("n_base"), sum(col("n_base")).over(wg))
+      val pc = greatest(p, lit(eps))
+      val qc = greatest(q, lit(eps))
+      def whenBothSides(score: org.apache.spark.sql.Column) =
+        when(sum(col("n_cur")) > 0 && sum(col("n_base")) > 0, score)
+      joined
+        .withColumn("p", p)
+        .withColumn("q", q)
+        .withColumn("psi_term", (pc - qc) * log(pc / qc))
+        .withColumn("cdf_p", sum(col("p")).over(wcum))
+        .withColumn("cdf_q", sum(col("q")).over(wcum))
+        .groupBy(g: _*)
+        .agg(
+          sum(col("n_cur")).as("n_cur"),
+          sum(col("n_base")).as("n_base"),
+          whenBothSides(round(sum(col("psi_term")), 6)).as("psi"),
+          whenBothSides(round(max(abs(col("cdf_p") - col("cdf_q"))), 6)).as("ks"))
+    }
   }
 }

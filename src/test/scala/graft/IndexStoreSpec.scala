@@ -30,6 +30,28 @@ class IndexStoreSpec extends SparkSpec {
     assert(build.getMessage.contains("'bloom'"))
   }
 
+  test("an unreadable kind sidecar fails the build loudly and is left as it was") {
+    val path = tmpDir("garbage")
+    val garbage = java.nio.file.Paths.get(s"$path/meta/part-00000.json")
+    java.nio.file.Files.createDirectories(garbage.getParent)
+    java.nio.file.Files.writeString(garbage, "not a sidecar {")
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.buildDriftBaseline(docs, "n_chars", Seq("lang"), path, nBins = 4, exact = true)
+    }
+    assert(e.getMessage.contains(path))
+    assert(java.nio.file.Files.readString(garbage) === "not a sidecar {")
+    assert(!new java.io.File(s"$path/data").exists())
+  }
+
+  test("a baseline with no non-null value is refused before its path is claimed") {
+    val path = tmpDir("empty")
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.buildDriftBaseline(docs.limit(0), "n_chars", Seq("lang"), path, nBins = 4, exact = true)
+    }
+    assert(e.getMessage.contains("no non-null 'n_chars' value"))
+    assert(!new java.io.File(s"$path/meta").exists())
+  }
+
   test("drift baseline: stored sketch scores == direct compare; baseline never rescanned") {
     val path = tmpDir("drift")
     val base = docs.where(col("doc_id") % 2 === 0)

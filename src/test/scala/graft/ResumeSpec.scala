@@ -11,13 +11,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path, Paths}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 class ResumeSpec extends SparkSpec {
@@ -65,25 +62,8 @@ class ResumeSpec extends SparkSpec {
 
   /** The file scans of `inputDir` in every SQL execution `body` runs. */
   private def scansOf(inputDir: String)(body: => Unit): Seq[FileSourceScanExec] = {
-    val plans = mutable.ArrayBuffer[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
-      case o => o.children ++ o.subqueries
-    }).flatMap(nodes)
     val root = Paths.get(inputDir).toUri.getPath.stripSuffix("/")
-    spark.listenerManager.register(listener)
-    try {
-      body
-      ListenerBusAccess.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    plans.synchronized(plans.toSeq).flatMap(nodes).collect {
+    Executed.plans(spark)(body).flatMap(Executed.nodes).collect {
       case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == root) => f
     }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.stats.ColumnStats
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.functions._
 
 class StatsSpec extends SparkSpec {
@@ -68,6 +70,15 @@ class StatsSpec extends SparkSpec {
       .select("n_distinct").first().getLong(0).toDouble
     val exact = docs.select(countDistinct(col("text"))).first().getLong(0).toDouble
     assert(math.abs(approx - exact) / exact < 0.10)
+  }
+
+  test("approximate stats over string columns run on a hash aggregate: no sort of the rows") {
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val nodes = Executed.plans(spark) {
+      ColumnStats.compute(docs, Seq("text", "source", "doc_id"), Seq("lang")).collect()
+    }.flatMap(Executed.nodes)
+    assert(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]))
+    assert(!nodes.exists(n => n.isInstanceOf[SortAggregateExec] || n.isInstanceOf[SortExec]))
   }
 
   test("length histogram bins by floor(length/width)") {

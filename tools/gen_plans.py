@@ -25,6 +25,11 @@ look for, per the scale-design rules in SURVEY.md §4 / README:
 - referential integrity uses `BroadcastHashJoin … LeftAnti`;
 - aggregates show `partial_*` → Exchange → `merge_*`/final (map-side
   combine).
+- numeric drift (`q_drift_auto_events`, `q_drift_documents`,
+  `q_drift_events`) counts both sides' bins in one aggregate while the
+  frame is built and scores them on the driver, so its plan here is the
+  one-partition local result; DriftSpec pins the counting queries (one
+  hash exchange, no window or sort).
 """
 
 DETAIL_HEADS = re.compile(
